@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.queries.FixtureStore
 
 /** Benchmark main: times every SparkEntry query at the configured SF
   * and emits one JSON metric object — printed as the final stdout
@@ -38,65 +38,16 @@ object Bench {
     * drains the iterators. Queries whose cost lives under
     * aggregates/joins are unaffected (count() never pruned through
     * those); narrow-map queries now pay their true cost. */
-  private def forceFull(df: org.apache.spark.sql.DataFrame): Long =
+  private[graft] def forceFull(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.count()
-
-  /** Drop every cached RDD (r16): registry queries persist
-    * intermediates, but an invocation cannot unpersist frames its
-    * returned plan still depends on — so every bench execution
-    * leaves its caches pinned in `persistentRdds`: MEMORY_AND_DISK
-    * blocks on disk AND their upstream shuffle files (the
-    * ContextCleaner never reclaims a shuffle an extant RDD
-    * references). Over 198 queries × (warmup + passes) that is
-    * unbounded disk growth — the first r16 zipf16 leg died ENOSPC in
-    * the steady tail exactly this way, with ~55 persist sites
-    * re-persisting fresh RDDs per pass. Caches are never reused
-    * across invocations (each call builds new RDDs), so dropping
-    * them between sequential timed queries — and once after the
-    * parallel warmup settles — is semantics-free. Runs OUTSIDE the
-    * per-query timer; non-blocking (block removal is async).
-    *
-    * LOCALLY-checkpointed RDDs (and only those — a RELIABLY-
-    * checkpointed RDD's blocks are re-readable from its checkpoint
-    * files, so its cache is droppable like any persist) are exempt:
-    * a local checkpoint TRUNCATES lineage WITHOUT writing a
-    * recoverable copy, so unpersisting one destroys its only copy —
-    * and the query modules memoize session artifacts (the prefix-
-    * filter pair sets, incremental-dedup survivors, cluster frames)
-    * whose plans read exactly those blocks; dropping them made every
-    * later pass of those queries fail CHECKPOINT_RDD_BLOCK_ID_NOT_
-    * FOUND (the r16 inherited-state bug — the clear landed in a
-    * commit benched before, not after, the change). Per-invocation
-    * checkpoint frames stay small (k-row accounting / centroid /
-    * superstep frames) and the ContextCleaner reclaims them on GC
-    * once unreferenced; the disk-filling MEMORY_AND_DISK persists
-    * that motivated the clear carry full lineage and are still
-    * dropped — for those, unpersist only removes blocks, never
-    * recomputability. */
-  private def clearRddCaches(
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values
-      // local = materialized checkpoint WITHOUT a checkpoint file
-      // (getCheckpointFile is defined only for reliable checkpoints;
-      // RDD.isLocallyCheckpointed itself is private[spark]). All
-      // engine artifacts checkpoint EAGERLY, so the marked-but-not-
-      // yet-materialized window never reaches an inter-query clear.
-      .filterNot(r => r.isCheckpointed && r.getCheckpointFile.isEmpty)
-      .foreach(_.unpersist(blocking = false))
 
   def main(args: Array[String]): Unit = {
     val procT0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "BENCH_METRIC.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // absorb first-job session warmup (codegen, broadcast infra)
     spark.read.parquet(s"$sfDir/nation.parquet").count()
     // parallel warmup: compile + execute each query once so the timed
@@ -157,8 +108,8 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     // warmup's parallel executions pinned one round of caches — drop
-    // them before timing starts (see clearRddCaches)
-    clearRddCaches(spark)
+    // them before timing starts (see FixtureStore.clearRddCaches)
+    FixtureStore.clearRddCaches(spark)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // nRuns timed sequential passes; per-query stats over the passes
     val passes: Seq[Map[String, Double]] = (1 to nRuns).map { _ =>
@@ -170,7 +121,7 @@ object Bench {
               .linesIterator.next().take(200)
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        clearRddCaches(spark)
+        FixtureStore.clearRddCaches(spark)
         name -> dt
       }.toMap
     }

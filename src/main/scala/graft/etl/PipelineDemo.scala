@@ -1,7 +1,6 @@
 package graft.etl
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.SparkSession
 
 /** Runnable surface for the ETL topology: writes small fixture staging
   * CSVs (stand-ins for the reference's extractor outputs, SURVEY §7.1)
@@ -41,14 +40,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val root = if (args.nonEmpty) java.nio.file.Paths.get(args(0))
       else Files.createTempDirectory("graft-demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     fixtures(root.resolve("staging"))
     val run1 = Pipeline.run(spark, s"$root/staging", s"$root/store",
       s"$root/mart")

@@ -773,7 +773,8 @@ object DedupOps {
     * a deterministic filter over the SAME cached `groups` subtree
     * (the caller's persist serves all slice builds).
     *
-    * Measured at the knee (r14 `tools/DenseShardLeg`, 238,936 real
+    * Measured at the knee (SCALING.md "Round-14: the dense-core shard
+    * knee"; leg `tools/DenseShardLeg`, source at 3f71aa0; 238,936 real
     * distinct sets = 2 default shards): all postures bit-identical
     * (118,124,299 pairs), and FINER shards run FASTER — 4 forced
     * slices 442 s vs 662 s for the forced single broadcast — because
@@ -1081,19 +1082,21 @@ object DedupOps {
     * worst point of the capped-posture walk, and `containment_dedup`
     * paid 400 s where the measured cap-4000 posture costs ~66 s
     * including LSH-on-dropped). The tier's work is bounded by
-    * #blocks × cap²/2 REGARDLESS of corpus size (CappedTierLeg's
-    * proven invariant), so the cap becomes the derived quantity:
-    * the largest cap whose worst-case pair mass stays inside
-    * `pairBudget`, i.e. `floor(sqrt(2·budget / #blocks))`, clamped to
-    * [2, capCeil]. #blocks counts non-null-key blocks with at least 2
-    * documents — the only ones that can produce pairs — the SAME
+    * #blocks × cap²/2 REGARDLESS of corpus size (the invariant
+    * SCALING.md "Round-14: the capped production posture" records;
+    * leg `tools/CappedTierLeg`, source at 3f71aa0), so the cap
+    * becomes the derived quantity: the largest cap whose worst-case
+    * pair mass stays inside `pairBudget`, i.e.
+    * `floor(sqrt(2·budget / #blocks))`, clamped to [2, capCeil].
+    * #blocks counts non-null-key blocks with at least 2 documents —
+    * the only ones that can produce pairs — the SAME
     * census subtree the operators and [[droppedBlockStats]] already
     * fold, evaluated once driver-side (block-count-grain, the
     * pairWorkSalts collect discipline).
     *
     * Default budget 320M pairs ≈ the tier mass the measured postures
-    * clear in about a minute at local[32] (CappedTierLeg zipf4:
-    * ~163M surviving pairs → 77.6 s); on the zipf leg family's
+    * clear in about a minute at local[32] (same SCALING.md section,
+    * zipf4: ~163M surviving pairs → 77.6 s); on the zipf leg family's
     * 40-block shape it derives cap = 4000 — exactly the posture the
     * leg measured as the efficient escape point (tier collapses
     * toward its census, oversized blocks ride LSH with the drop
@@ -1787,7 +1790,8 @@ object DedupOps {
     // of hash PAIRS equals distinctness of grams up to collisions, so
     // the per-doc distinct-gram set is taken over the pairs.
     // widened: the per-position double hash chain + per-doc distinct
-    // dominates a narrow scan (ScanWidthProbe: 1.17 → 0.75 s;
+    // dominates a narrow scan (OPTIMIZATION_r16.md §5: 1.17 → 0.75 s,
+    // probe `tools/ScanWidthProbe`, source at 3f71aa0;
     // Relational.widenNarrowScan — no-op on wide scans)
     val grams = graft.ops.Relational.widenNarrowScan(df)
       .select(col(idCol), TextOps.tokens(col(textCol)).as("__tok"))

@@ -36,9 +36,10 @@ object Relational {
     * retries) and never changes results: callers' downstream folds
     * are partition-order-independent by the engine's exactness
     * discipline. Apply ONLY where the per-row kernel measurably
-    * dominates the extra exchange (ScanWidthProbe: md5-bucket
+    * dominates the extra exchange (OPTIMIZATION_r16.md §5: md5-bucket
     * features 1.04 → 0.69 s, plain tokenization REGRESSES 0.24 →
-    * 0.40 s — widening is not free). */
+    * 0.40 s — widening is not free; probe `tools/ScanWidthProbe`,
+    * source at 3f71aa0). */
   def widenNarrowScan(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // micro-batch frames widen per batch
     val cores = df.sparkSession.sparkContext.defaultParallelism

@@ -75,7 +75,7 @@ object FixtureStore {
   /** Pin a memoized session artifact (ADVICE r16). Under a LOCAL
     * master `localCheckpoint(true)` is the right pin: lineage
     * truncation is safe (executor loss cannot happen — the executor
-    * IS the driver) and the Bench inter-query cache clear exempts
+    * IS the driver) and [[clearRddCaches]] exempts
     * locally-checkpointed RDDs by contract. On any NON-local
     * deployment a localCheckpoint block is unrecoverable after
     * executor loss / dynamic-allocation release — every consumer of
@@ -91,4 +91,45 @@ object FixtureStore {
       p.count() // materialize now, like localCheckpoint(eager = true)
       p
     }
+
+  /** Drop every cached RDD except local checkpoints — the one
+    * inter-query cache clear (`graft.Bench` between timed queries and
+    * after its parallel warmup; `graft.tools.TimeQuery` before each
+    * timed run). Registry queries persist intermediates, but an
+    * invocation cannot unpersist frames its returned plan still
+    * depends on — so every execution leaves its caches pinned in
+    * `persistentRdds`: MEMORY_AND_DISK blocks on disk AND their
+    * upstream shuffle files (the ContextCleaner never reclaims a
+    * shuffle an extant RDD references). Over 198 queries × (warmup +
+    * passes) that is unbounded disk growth — the first r16 zipf16 leg
+    * died ENOSPC in the steady tail exactly this way, with ~55 persist
+    * sites re-persisting fresh RDDs per pass. Caches are never reused
+    * across invocations (each call builds new RDDs), so dropping them
+    * between sequential queries is semantics-free. Non-blocking
+    * (block removal is async); callers run it outside their timers.
+    *
+    * LOCALLY-checkpointed RDDs (and only those — a RELIABLY-
+    * checkpointed RDD's blocks are re-readable from its checkpoint
+    * files, so its cache is droppable like any persist) are exempt:
+    * a local checkpoint TRUNCATES lineage WITHOUT writing a
+    * recoverable copy, so unpersisting one destroys its only copy —
+    * and [[pinArtifact]] pins memoized session artifacts (the prefix-
+    * filter pair sets, incremental-dedup survivors, cluster frames)
+    * exactly that way under a local master; dropping them made every
+    * later pass of those queries fail CHECKPOINT_RDD_BLOCK_ID_NOT_
+    * FOUND (the r16 inherited-state bug). This exemption and the pin
+    * choice in [[pinArtifact]] are one contract: a pin that is not a
+    * local checkpoint carries full lineage, so the clear may drop its
+    * blocks and it recomputes. Per-invocation checkpoint frames stay
+    * small (k-row accounting / centroid / superstep frames) and the
+    * ContextCleaner reclaims them on GC once unreferenced. */
+  def clearRddCaches(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values
+      // local = materialized checkpoint WITHOUT a checkpoint file
+      // (getCheckpointFile is defined only for reliable checkpoints;
+      // RDD.isLocallyCheckpointed itself is private[spark]). All
+      // engine artifacts checkpoint EAGERLY, so the marked-but-not-
+      // yet-materialized window never reaches an inter-query clear.
+      .filterNot(r => r.isCheckpointed && r.getCheckpointFile.isEmpty)
+      .foreach(_.unpersist(blocking = false))
 }

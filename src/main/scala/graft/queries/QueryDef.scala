@@ -18,8 +18,9 @@ object QueryDef {
     * engine side is the native [[graft.functions.DecimalDoubleSum]]
     * aggregate — value-identical to
     * `sum(c.cast("decimal(25,6)")).cast("double")` (its scaladoc has
-    * the equality argument; DsumProbe re-checks it against the Cast
-    * form on every run) at ~4× less aggregate cost: the decimal(35,6)
+    * the equality argument; NativeExprSpec pins it bitwise against
+    * the Cast form) at ~4× less aggregate cost (OPTIMIZATION_r16.md
+    * §3; probe `tools/DsumProbe`, source at 3f71aa0): the decimal(35,6)
     * sum buffer exceeds compact-long precision, so the Cast form paid
     * a BigDecimal deserialize/add/reserialize per row. */
   def dsum(c: Column): Column = graft.functions.DecimalDoubleSum.column(c)

@@ -18,50 +18,30 @@ object VectorQueries {
     * per (session, sf dir) from three ingest batches — the query
     * under test is the search against the maintained index, not the
     * (one-time, production-amortized) index build. */
-  private val ivfIndexCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), String]
-
   private def ivfIndex(s: org.apache.spark.sql.SparkSession,
                        d: String): String =
-    ivfIndexCache((s, d)) {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q_ivfidx_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val dp = new org.apache.hadoop.fs.Path(dir)
-      dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(dp, true)
+    FixtureStore.buildOnce(s, "ivfidx", d) { dir =>
       val emb = Tables.embeddings(s, d)
       (0 until 3).foreach { i =>
         graft.ext.VectorIndexOps.updateIndex(s,
           emb.filter(pmod(col("vec_id"), lit(3)) === i),
           "vec_id", "embedding", dir, nCentroids = 8)
       }
-      dir
     }
 
   /** Persisted SQ8-quantized IVF index FIXTURE for `ann_index_sq8` —
     * same 3-batch build shape as [[ivfIndex]]; ranges AND centroids
     * freeze on the first batch (vec_id % 3 == 0), which is what the
     * oracle re-derives. */
-  private val sq8IndexCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), String]
-
   private def sq8Index(s: org.apache.spark.sql.SparkSession,
                        d: String): String =
-    sq8IndexCache((s, d)) {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q_sq8idx_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val dp = new org.apache.hadoop.fs.Path(dir)
-      dp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(dp, true)
+    FixtureStore.buildOnce(s, "sq8idx", d) { dir =>
       val emb = Tables.embeddings(s, d)
       (0 until 3).foreach { i =>
         graft.ext.VectorIndexOps.updateIndexSq8(s,
           emb.filter(pmod(col("vec_id"), lit(3)) === i),
           "vec_id", "embedding", dir, nCentroids = 8)
       }
-      dir
     }
 
   /** Session-lifetime SQ8 codebook for `ann_sq8_topk` — the 2·d-double

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builder-side measurement behind SCALING.md's "corpus-linear, not
@@ -20,57 +18,9 @@ import org.apache.spark.sql.functions._
   * candidate stages — maximal distinct signatures).
   *
   * Usage: sbt "runMain graft.tools.CorpusScaleStress <sfDir> [multiples...]"
+  * (the SCALING.md legs ran on local[32]: `SPARK_GRAFT_CPUS=32`)
   */
 object CorpusScaleStress {
-
-  private class ShuffleMeter extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong(0)
-    val write = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def reset(): Unit = { read.set(0); write.set(0) }
-  }
-
-  private class TaskMeter extends SparkListener {
-    private val durs =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, java.lang.Long)]()
-    private val stageNames =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null) durs.add((t.stageId, t.taskInfo.duration))
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      val detail = if (m == null) "?" else
-        f"tasks=${s.stageInfo.numTasks} " +
-          f"in=${m.inputMetrics.bytesRead / 1e6}%.0fMB " +
-          f"sread=${m.shuffleReadMetrics.totalBytesRead / 1e6}%.0fMB " +
-          f"swrite=${m.shuffleWriteMetrics.bytesWritten / 1e6}%.0fMB"
-      stageNames.put(s.stageInfo.stageId, detail)
-    }
-    def reset(): Unit = { durs.clear(); stageNames.clear() }
-    /** (max, median) task duration ms since reset. */
-    def maxMed: (Long, Long) = {
-      val a = durs.toArray(Array.empty[(Int, java.lang.Long)])
-        .map(_._2.longValue).sorted
-      if (a.isEmpty) (0L, 0L) else (a.last, a(a.length / 2))
-    }
-    /** top-k stages by max task duration, with per-stage max. */
-    def topStages(k: Int): Seq[String] =
-      durs.toArray(Array.empty[(Int, java.lang.Long)])
-        .groupBy(_._1)
-        .map { case (sid, xs) => (sid, xs.map(_._2.longValue).max) }
-        .toSeq.sortBy(-_._2).take(k)
-        .map { case (sid, mx) =>
-          f"stage $sid (${stageNames.getOrDefault(sid, "?")}) " +
-            f"max ${mx / 1000.0}%.1f s"
-        }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
@@ -82,12 +32,8 @@ object CorpusScaleStress {
         .map(_.toInt).toSeq
       if (ms.nonEmpty) ms else Seq(1, 2, 4, 8)
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+    val spark = graft.Session.local()
+    val meter = Meter.attach(spark)
 
     val docs = graft.Tables.documents(spark, sfDir)
       .select("doc_id", "text")
@@ -124,8 +70,6 @@ object CorpusScaleStress {
     // window task; the digest form shuffles two longs and ranks
     // 1/32 vocabulary slices in parallel.
     if (topngrams) {
-      val tasks = new TaskMeter
-      spark.sparkContext.addSparkListener(tasks)
       def langX(m: Int) = docsX(m).withColumn("lang",
         when(pmod(col("doc_id"), lit(10)) < 9, lit("en"))
           .otherwise(lit("de")))
@@ -134,12 +78,12 @@ object CorpusScaleStress {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val n = d.count()
         def leg(label: String)(body: => Long): String = {
-          meter.reset(); tasks.reset()
+          meter.reset()
           val (rows, t) = timed(body)
-          val (mx, md) = tasks.maxMed
+          val (mx, md) = meter.taskMaxMedMs
           f"$label: $t%6.1f s task max/med ${mx / 1000.0}%5.1f/" +
             f"${md / 1000.0}%4.1f s " +
-            f"${(meter.read.get + meter.write.get) / 1e6}%6.0f MB " +
+            f"${meter.shuffleMB}%6.0f MB " +
             f"($rows rows)"
         }
         val digest = leg("ngrams-digest") {
@@ -176,8 +120,6 @@ object CorpusScaleStress {
     // fold pre-collapses occurrences map-side (one row per (doc,
     // digest) crosses the wire) and joins the model back.
     if (hotgram) {
-      val tasks = new TaskMeter
-      spark.sparkContext.addSparkListener(tasks)
       val boiler = Seq.fill(200)(
         (0 until 6).map(i => s"bp$i").mkString(" ")).mkString(" ")
       def hotX(m: Int) = docsX(m).select(col("doc_id"),
@@ -195,13 +137,13 @@ object CorpusScaleStress {
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val n = d.count()
         def leg(label: String)(body: => Long): String = {
-          meter.reset(); tasks.reset()
+          meter.reset()
           val (rows, t) = timed(body)
-          val (mx, md) = tasks.maxMed
-          val top = tasks.topStages(2).mkString(" | ")
+          val (mx, md) = meter.taskMaxMedMs
+          val top = meter.topStages(2).mkString(" | ")
           f"$label: $t%6.1f s task max/med ${mx / 1000.0}%5.1f/" +
             f"${md / 1000.0}%4.1f s " +
-            f"${(meter.read.get + meter.write.get) / 1e6}%6.0f MB " +
+            f"${meter.shuffleMB}%6.0f MB " +
             f"($rows rows)\n    $top"
         }
         // shared start frame builder (tokenize + fused gram hashing)
@@ -282,7 +224,7 @@ object CorpusScaleStress {
       val (nExact, tExact) = timed {
         graft.ext.DedupOps.exactDedupByHash(d, "doc_id", "text").count()
       }
-      val exactMb = (meter.read.get + meter.write.get) / 1e6
+      val exactMb = meter.shuffleMB
 
       meter.reset()
       // auto-sized banding: rows-per-band grows with log n to hold
@@ -294,14 +236,14 @@ object CorpusScaleStress {
           d, "doc_id", "text", shingleSize = 1, numHashes = mhHashes,
           bands = mhBands, threshold = 0.8).count()
       }
-      val mhMb = (meter.read.get + meter.write.get) / 1e6
+      val mhMb = meter.shuffleMB
 
       meter.reset()
       val (nSh, tSh) = timed {
         graft.ext.DedupOps.simhashNearDupPairs(
           d, "doc_id", "text", maxDistance = 3).count()
       }
-      val shMb = (meter.read.get + meter.write.get) / 1e6
+      val shMb = meter.shuffleMB
 
       println(f"docs x$m%-2d n=$n%7d | exact: $tExact%6.1f s " +
         f"$exactMb%6.0f MB ($nExact kept) | minhash[r=$mhRows%d " +
@@ -325,7 +267,7 @@ object CorpusScaleStress {
       }
       println(f"emb  x$m%-2d n=$n%7d | ivf(topk=10, probes=2/" +
         f"$nc%d): $tIvf%6.1f s " +
-        f"${(meter.read.get + meter.write.get) / 1e6}%6.0f MB " +
+        f"${meter.shuffleMB}%6.0f MB " +
         f"($nIvf rows)")
       e.unpersist()
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-testdata generator for SFs the driver did
@@ -72,11 +72,7 @@ object GenSf {
     val mode = if (args.length > 2) args(2) else ""
     val ml = mode == "zipfml"
     val zipf = mode == "zipf" || ml
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     val nCust = 15000L * m
     val nSupp = 1000L * m

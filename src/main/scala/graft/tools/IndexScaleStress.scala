@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Builder-side measurement behind SCALING.md's O(batch) claims for
@@ -15,22 +13,9 @@ import org.apache.spark.sql.functions._
   * of "maintenance is O(batch), not O(corpus)".
   *
   * Usage: sbt "runMain graft.tools.IndexScaleStress <sfDir> [batches]"
+  * (the SCALING.md legs ran on local[32]: `SPARK_GRAFT_CPUS=32`)
   */
 object IndexScaleStress {
-
-  /** Sums shuffle bytes across completed stages — zeroed per batch. */
-  private class ShuffleMeter extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong(0)
-    val write = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def reset(): Unit = { read.set(0); write.set(0) }
-  }
 
   private def dirMB(p: String): Double = {
     def walk(f: java.io.File): Long =
@@ -42,12 +27,8 @@ object IndexScaleStress {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val batches = args.lift(1).map(_.toInt).getOrElse(6)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+    val spark = graft.Session.local()
+    val meter = Meter.attach(spark)
 
     val root = java.nio.file.Files
       .createTempDirectory("graft-scale-stress").toString
@@ -85,8 +66,8 @@ object IndexScaleStress {
           batch, "doc_id", "text", dedupIdx, threshold = 0.8).count()
       }
       println(f"dedup batch $b: wall=$secs%.1f s accepted=$n " +
-        f"shuffleR=${meter.read.get / 1e6}%.0f MB " +
-        f"shuffleW=${meter.write.get / 1e6}%.0f MB " +
+        f"shuffleR=${meter.shuffleReadMB}%.0f MB " +
+        f"shuffleW=${meter.shuffleWriteMB}%.0f MB " +
         f"index=${dirMB(dedupIdx)}%.1f MB")
     }
 
@@ -101,7 +82,7 @@ object IndexScaleStress {
         graft.ext.VectorIndexOps.updateIndex(spark, batch, "vec_id",
           "embedding", vecIdx, nCentroids = 8)
       }
-      val aR = meter.read.get / 1e6; val aW = meter.write.get / 1e6
+      val aR = meter.shuffleReadMB; val aW = meter.shuffleWriteMB
       meter.reset()
       val (ns, sSecs) = timed {
         graft.ext.VectorIndexOps.searchIndex(spark, queries, "vec_id",
@@ -110,7 +91,7 @@ object IndexScaleStress {
       println(f"ivf batch $b: append=$aSecs%.1f s ($np postings, " +
         f"shuffleR=$aR%.0f MB shuffleW=$aW%.0f MB) " +
         f"search(nProbe=2)=$sSecs%.1f s ($ns rows, " +
-        f"shuffleR=${meter.read.get / 1e6}%.0f MB) " +
+        f"shuffleR=${meter.shuffleReadMB}%.0f MB) " +
         f"index=${dirMB(vecIdx)}%.1f MB")
     }
     spark.stop()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Builder-side plan audit: the EXECUTED plan of registry queries
   * (after AQE finalization) reviewed for shuffle/exchange count — the
   * .explain loop behind the SCALING.md claims, promoted to a gated
@@ -277,11 +275,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val auditAll = args.headOption.contains("--all")
     val sfDir = if (auditAll) args(1) else args.head
-    val spark = SparkSession.builder()
-      .master(if (auditAll) "local[32]" else "local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     def executedPlan(name: String)
         : org.apache.spark.sql.execution.SparkPlan = {

@@ -650,7 +650,8 @@ class DedupSpec extends SparkSpec {
       Seq((1L, "en")).toDF("doc_id", "lang"), Seq("lang"),
       pairBudget = 27L, capCeil = 10000) == 10000)
     // the zipf-leg shape: 40 blocks at the default budget → 4000,
-    // the CappedTierLeg-measured escape posture
+    // the escape posture SCALING.md "Round-14: the capped production
+    // posture" measured (leg `tools/CappedTierLeg`, source at 3f71aa0)
     val forty = (0 until 80).map(i => (i.toLong, s"b${i % 40}"))
       .toDF("doc_id", "lang")
     assert(DedupOps.workBudgetCap(forty, Seq("lang")) == 4000)

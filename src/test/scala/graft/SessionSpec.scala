@@ -1,0 +1,82 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import graft.queries.FixtureStore
+
+/** The shared run posture: the one session factory, the one
+  * inter-query cache clear and its pin exemption, and the build-once
+  * fixture memo. */
+class SessionSpec extends SparkSpec {
+
+  test("the factory's session: UTC, one shuffle partition per core, " +
+    "UI disabled") {
+    val s = Session.local(4)
+    assert(s eq spark, "a second call must return the running session")
+    assert(s.sparkContext.master == "local[4]")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    // set by the factory itself, not inherited from a JVM default zone
+    assert(s.sparkContext.getConf.getOption(
+      "spark.sql.session.timeZone") == Some("UTC"))
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(s.sparkContext.uiWebUrl.isEmpty)
+  }
+
+  test("clearRddCaches drops a plain persist but keeps a pinArtifact " +
+    "frame readable (the CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND class)") {
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    val base = spark.range(0, 2000, 1, 4)
+      .select(col("id"), (col("id") % 7).as("k"))
+    val before = persisted
+    val pinned = FixtureStore.pinArtifact(
+      base.groupBy("k").agg(count(lit(1)).as("n")))
+    val pinIds = persisted -- before
+    assert(pinIds.nonEmpty, "the pin holds no cached RDD")
+    val expected = pinned.orderBy("k").collect().toSeq
+    val plain = base.filter(col("k") === 3)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    assert(plain.count() > 0)
+    val plainIds = persisted -- before -- pinIds
+    assert(plainIds.nonEmpty, "the plain persist holds no cached RDD")
+
+    FixtureStore.clearRddCaches(spark)
+
+    val after = persisted
+    assert(plainIds.intersect(after).isEmpty,
+      s"plain persist survived the clear: $plainIds")
+    assert(pinIds.subsetOf(after), s"pin dropped by the clear: $pinIds")
+    // the lineage-truncated pin still reads: its blocks are its only copy
+    assert(pinned.orderBy("k").collect().toSeq == expected)
+    plain.unpersist()
+  }
+
+  test("buildOnce runs its build once per (session, name, dir)") {
+    val builds = new AtomicInteger(0)
+    def fixture(name: String, d: String,
+                s: org.apache.spark.sql.SparkSession = spark): String =
+      FixtureStore.buildOnce(s, name, d) { dir =>
+        builds.incrementAndGet()
+        assert(dir == FixtureStore.scratchDirFor(name, d))
+      }
+    val a = fixture("sessionspec_a", "/data/x")
+    assert(fixture("sessionspec_a", "/data/x") == a)
+    assert(builds.get == 1)
+    assert(a == FixtureStore.scratchDirFor("sessionspec_a", "/data/x"))
+    fixture("sessionspec_b", "/data/x")
+    assert(builds.get == 2)
+    fixture("sessionspec_a", "/data/y")
+    assert(builds.get == 3)
+    fixture("sessionspec_b", "/data/x")
+    fixture("sessionspec_a", "/data/y")
+    assert(builds.get == 3)
+    val other = spark.newSession()
+    fixture("sessionspec_a", "/data/x", other)
+    fixture("sessionspec_a", "/data/x", other)
+    assert(builds.get == 4)
+  }
+}

@@ -12,20 +12,13 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // RocksDB is the DEFAULT state store for every spec's streaming
-      // twins (the 100 TB posture — state off the executor heap); the
-      // kill-restart drills still exercise the HDFS-backed provider
-      // explicitly via withStateStoreProvider
-      .config("spark.sql.streaming.stateStore.providerClass",
-        graft.streaming.StreamingOps.RocksDBStateStoreProvider)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session.local(4)
+    // RocksDB is the DEFAULT state store for every spec's streaming
+    // twins (the 100 TB posture — state off the executor heap); the
+    // kill-restart drills still exercise the HDFS-backed provider
+    // explicitly via withStateStoreProvider
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      graft.streaming.StreamingOps.RocksDBStateStoreProvider)
     s
   }
 }

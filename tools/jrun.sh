@@ -17,8 +17,6 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 MAIN="$1"; shift
 exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.cleaner.periodicGC.interval="${SPARK_CLEANER_GC:-30min}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
