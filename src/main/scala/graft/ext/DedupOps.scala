@@ -2024,7 +2024,17 @@ object DedupOps {
   * Here the FIRST enter records the true prior value and flips the
   * conf; nested/overlapping enters only bump the count; the LAST exit
   * restores the recorded value. One coarse lock — enters happen at
-  * most a handful of times per query, never per row. */
+  * most a handful of times per query, never per row.
+  *
+  * No thread-scoped replacement exists. A probe on Spark 4.1.2
+  * cloned the session conf, set `spark.sql.adaptive.enabled=false`
+  * on the clone and ran the loop's planning inside
+  * `SQLConf.withExistingConf(clone)`: it still planned an
+  * `AdaptiveSparkPlanExec`, while the control (the flag set on the
+  * session) planned `WholeStageCodegenExec`. Classic planning reads
+  * the session's own conf, not the thread's active one, so a query
+  * planned on another thread while the gate is held still plans
+  * without AQE (results are unaffected). */
 private[ext] object AqeGate {
   private val key = "spark.sql.adaptive.enabled"
   private val state = new java.util.IdentityHashMap[

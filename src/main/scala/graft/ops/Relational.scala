@@ -49,23 +49,26 @@ object Relational {
     // DataFrame-BUILD time — the probe RDD is then discarded, so a
     // composite caller would silently run its shuffles twice. Walk
     // the non-adaptive physical plan instead (`sparkPlan` is pure
-    // planning, no job): if ANY exchange is present the frame is not
-    // a narrow scan — return it untouched (post-shuffle width is
-    // already the session's shuffle parallelism); only an
-    // exchange-free plan is probed via `toRdd`, which then just
-    // builds the leaf scan's RDD (no stages exist to materialize).
+    // planning, no job) and bail out on anything that is, or will
+    // become, a stage: an exchange, a subquery (executed by
+    // getFinalPhysicalPlan exactly like an exchange), or a node that
+    // requires a child distribution. `sparkPlan` is taken BEFORE
+    // EnsureRequirements inserts exchanges, so an aggregate or join
+    // shows no Exchange yet — only its requirement (the same test
+    // AQE's InsertAdaptiveSparkPlan uses). A frame that passes is a
+    // narrow scan: `toRdd` then just builds the leaf scan's RDD (no
+    // stages exist to materialize); post-shuffle width is already the
+    // session's shuffle parallelism.
     val plan = df.queryExecution.sparkPlan
-    val hasExchange = plan.find {
+    val stageBound = plan.exists {
       case _: org.apache.spark.sql.execution.exchange.Exchange => true
-      case _ => false
-    }.isDefined
-    // subqueries are stages too under AQE (executed by
-    // getFinalPhysicalPlan exactly like exchanges) — same bail-out
-    val hasSubquery = hasExchange || plan.find(_.expressions.exists(
-      _.exists(_.isInstanceOf[
-        org.apache.spark.sql.catalyst.expressions.PlanExpression[_]])))
-      .isDefined
-    if (hasSubquery) return df
+      case p => p.requiredChildDistribution.exists(
+          _ != org.apache.spark.sql.catalyst.plans.physical
+            .UnspecifiedDistribution) ||
+        p.expressions.exists(_.exists(_.isInstanceOf[
+          org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]))
+    }
+    if (stageBound) return df
     val parts = df.queryExecution.toRdd.getNumPartitions
     if (parts < cores) df.repartition(cores) else df
   }

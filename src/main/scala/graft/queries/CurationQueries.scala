@@ -31,34 +31,30 @@ object CurationQueries {
     * split, sample, pack, manifest) still execute per invocation —
     * only the pair graph + iterative cluster loop are served from
     * the snapshot store. Both frames are pair-/vertex-grain
-    * (documents never enter), persisted MEMORY_AND_DISK. */
-  private val e2eCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame)]
+    * (documents never enter), pinned by [[FixtureStore.artifact]]. */
+  private def e2ePairs(s: org.apache.spark.sql.SparkSession,
+                       d: String): org.apache.spark.sql.DataFrame =
+    FixtureStore.artifact(s, "curation_e2e_pairs", d) {
+      val exact = CorpusPipeline.exactDedup(Tables.documents(s, d),
+        "doc_id", "text")
+      // near-dup pairs among exact survivors: band membership is a
+      // pure pair property, so restricting the full-corpus pair set
+      // equals pair generation among survivors
+      DedupOps.minhashNearDupPairsFromSigs(
+          TextQueries.storedSigs(s, d), bands = 16, rowsPerBand = 4,
+          threshold = 0.9, maxBucketSize = 500)
+        .join(exact.select(col("doc_id").as("id_a")),
+          Seq("id_a"), "left_semi")
+        .join(exact.select(col("doc_id").as("id_b")),
+          Seq("id_b"), "left_semi")
+        .select("id_a", "id_b")
+    }
 
-  private def e2eArtifacts(s: org.apache.spark.sql.SparkSession,
-                           d: String): (org.apache.spark.sql.DataFrame,
-                             org.apache.spark.sql.DataFrame) =
-    e2eCache((s, d)) {
-        val docs = Tables.documents(s, d)
-        val exact = CorpusPipeline.exactDedup(docs, "doc_id", "text")
-        // near-dup pairs among exact survivors: band membership is a
-        // pure pair property, so restricting the full-corpus pair set
-        // equals pair generation among survivors
-        val pairs = DedupOps.minhashNearDupPairsFromSigs(
-            TextQueries.storedSigs(s, d), bands = 16, rowsPerBand = 4,
-            threshold = 0.9, maxBucketSize = 500)
-          .join(exact.select(col("doc_id").as("id_a")),
-            Seq("id_a"), "left_semi")
-          .join(exact.select(col("doc_id").as("id_b")),
-            Seq("id_b"), "left_semi")
-          .select("id_a", "id_b")
-          .transform(FixtureStore.pinArtifact)
-        val reps = DedupOps.duplicateClusters(pairs)
-          .select(col("id").as("doc_id"), col("cluster_rep"))
-          .transform(FixtureStore.pinArtifact)
-        (pairs, reps)
+  private def e2eReps(s: org.apache.spark.sql.SparkSession,
+                      d: String): org.apache.spark.sql.DataFrame =
+    FixtureStore.artifact(s, "curation_e2e_reps", d) {
+      DedupOps.duplicateClusters(e2ePairs(s, d))
+        .select(col("id").as("doc_id"), col("cluster_rep"))
     }
 
   val defs: Map[String, QueryDef] = Map(
@@ -101,14 +97,16 @@ object CurationQueries {
     "curation_e2e" -> QueryDef(
       (s, d) => {
         val docs = Tables.documents(s, d)
-        // (1) exact dedup — per-run (one cheap groupBy; the Spark
-        // cache manager serves same-plan reuse within the run)
+        // (1) exact dedup — per-run (one cheap groupBy): a plain
+        // persist that clearRddCaches drops after the run, since a
+        // pin would outlive it
         val exact = CorpusPipeline.exactDedup(docs, "doc_id", "text")
-          .transform(FixtureStore.pinArtifact)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // (2) near-dup pair set + (5)'s cluster fixpoint: served from
-        // the snapshot artifact store ([[e2eArtifacts]] — built once
-        // per session/sf, like the signature store they derive from)
-        val (pairs, reps0) = e2eArtifacts(s, d)
+        // the snapshot artifacts ([[e2ePairs]], [[e2eReps]] — built
+        // once per session/sf, like the signature store they derive
+        // from)
+        val pairs = e2ePairs(s, d)
         val deduped = exact.join(
           pairs.select(col("id_b").as("doc_id")).distinct(),
           Seq("doc_id"), "left_anti")
@@ -122,7 +120,7 @@ object CurationQueries {
         val gated = CorpusPipeline.qualityFilter(clean, "text",
           CorpusPipeline.Config())
         // (5) leakage-safe split: key on the duplicate-cluster rep
-        val train = gated.join(reps0, Seq("doc_id"), "left")
+        val train = gated.join(e2eReps(s, d), Seq("doc_id"), "left")
           .withColumn("rep", coalesce(col("cluster_rep"), col("doc_id")))
           .filter(SamplingOps.md5Bucket(col("rep").cast("string"), 100)
             >= 10)

@@ -17,25 +17,17 @@ object SearchQueries {
   /** Session-lifetime exact containment pair-set artifact — the
     * [[Text2Queries]] prefixPairs posture: the pair join is a
     * snapshot artifact built once per corpus; the operator's eager
-    * localCheckpoint materializes it and KeyedOnce holds the one
-    * live reference, leak-free. */
-  private val containPairCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
+    * localCheckpoint materializes it and [[FixtureStore.artifact]]
+    * holds the one live reference, leak-free. */
   private def containmentPairs(s: org.apache.spark.sql.SparkSession,
                                d: String)
       : org.apache.spark.sql.DataFrame =
-    containPairCache((s, d)) {
+    FixtureStore.artifact(s, "containment_pairs", d) {
       graft.ext.DedupOps.containmentPairsPrefix(
         Tables.documents(s, d).filter(col("doc_id") % 8 === 1)
           .repartition(32),
         "doc_id", "text", minContainment = 0.9)
     }
-
-  private val bigvocabContainCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
 
   /** The `containment_pairs_bigvocab` artifact: tokens suffixed with
     * `doc_id % 7` inflate the corpus vocabulary past the 62-token
@@ -54,7 +46,7 @@ object SearchQueries {
   private def bigvocabContainmentPairs(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    bigvocabContainCache((s, d)) {
+    FixtureStore.artifact(s, "bigvocab_containment_pairs", d) {
       val docs = Tables.documents(s, d)
         .filter(col("doc_id") % 8 === 5 && col("doc_id") < 20000)
         .withColumn("text", concat_ws(" ",

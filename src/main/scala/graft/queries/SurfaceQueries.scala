@@ -12,12 +12,6 @@ import graft.Tables
   */
 object SurfaceQueries {
 
-  // scratch-dir + build-once plumbing shared via FixtureStore (one
-  // scheme for every store-writing query; see its scaladoc)
-  private def clearedScratchDir(s: org.apache.spark.sql.SparkSession,
-                                name: String, d: String): String =
-    FixtureStore.clearedScratchDir(s, name, d)
-
   /** The dpp_partitioned_fact FIXTURE — a month-partitioned lineitem
     * plus a month dimension — built once per (session, sf dir): a
     * production store is not rebuilt per query, and the query under
@@ -620,7 +614,7 @@ object SurfaceQueries {
     // needs.
     "incremental_rollup" -> QueryDef(
       (s, d) => {
-        val dir = clearedScratchDir(s, "rollup", d)
+        val dir = FixtureStore.clearedScratchDir(s, "rollup", d)
         val orders = Tables.orders(s, d)
         (0 until 3).foreach { i =>
           graft.etl.RollupMaintain.updateRollup(s, dir, "by_status",
@@ -645,7 +639,7 @@ object SurfaceQueries {
     // swap rewrote exactly the surviving rows.
     "delete_keys" -> QueryDef(
       (s, d) => {
-        val dir = clearedScratchDir(s, "del", d)
+        val dir = FixtureStore.clearedScratchDir(s, "del", d)
         val orders = Tables.orders(s, d)
         graft.io.Staging.overwritePartitionsDynamic(orders, dir,
           "orders_p", Seq("o_orderstatus"))
@@ -675,7 +669,7 @@ object SurfaceQueries {
     // StoreOpsSpec.
     "versioned_store" -> QueryDef(
       (s, d) => {
-        val dir = clearedScratchDir(s, "vstore", d)
+        val dir = FixtureStore.clearedScratchDir(s, "vstore", d)
         val orders = Tables.orders(s, d)
         graft.io.VersionedStore.commit(s,
           orders.filter(pmod(col("o_orderkey"), lit(3)) === 0),
@@ -721,7 +715,7 @@ object SurfaceQueries {
     // files are drilled in StoreOpsSpec.
     "versioned_store_partitioned" -> QueryDef(
       (s, d) => {
-        val dir = clearedScratchDir(s, "vstorep", d)
+        val dir = FixtureStore.clearedScratchDir(s, "vstorep", d)
         val orders = Tables.orders(s, d)
         graft.io.VersionedStore.commitPartitioned(s,
           orders.filter(pmod(col("o_orderkey"), lit(3)) === 0),
@@ -767,7 +761,7 @@ object SurfaceQueries {
     // drilled in MartStoreSpec.
     "mart_publish_atomic" -> QueryDef(
       (s, d) => {
-        val dir = clearedScratchDir(s, "martpub", d)
+        val dir = FixtureStore.clearedScratchDir(s, "martpub", d)
         val orders = Tables.orders(s, d)
         val sub = orders.filter(pmod(col("o_orderkey"), lit(3)) === 0)
         graft.io.MartStore.publishAll(s, Seq(
@@ -819,7 +813,7 @@ object SurfaceQueries {
     // bound that holds across scale factors, not just the tuned one.
     "incremental_distinct_hll" -> QueryDef(
       (s, d) => {
-        val dir = clearedScratchDir(s, "hll", d)
+        val dir = FixtureStore.clearedScratchDir(s, "hll", d)
         val orders = Tables.orders(s, d)
         (0 until 3).foreach { i =>
           graft.etl.RollupMaintain.updateDistinctRollup(s, dir,
@@ -853,7 +847,7 @@ object SurfaceQueries {
     // analog of incremental_distinct_hll for frequency questions.
     "incremental_topk_cms" -> QueryDef(
       (s, d) => {
-        val dir = clearedScratchDir(s, "cms", d)
+        val dir = FixtureStore.clearedScratchDir(s, "cms", d)
         val events = Tables.events(s, d)
         (0 until 3).foreach { i =>
           val b = events.filter(pmod(col("event_id"), lit(3)) === i)
@@ -908,7 +902,7 @@ object SurfaceQueries {
     // optimization, invisible to semantics.
     "clustered_scan" -> QueryDef(
       (s, d) => {
-        val dir = clearedScratchDir(s, "cluster", d)
+        val dir = FixtureStore.clearedScratchDir(s, "cluster", d)
         graft.io.Staging.writeClusteredBy(Tables.orders(s, d), dir,
           "orders_c", Seq("o_orderkey"), files = 8)
         graft.io.Staging.readTable(s, dir, "orders_c")

@@ -57,26 +57,19 @@ object Text2Queries {
     * pair join is a SNAPSHOT artifact — built once per corpus, read
     * by every consumer (the r9 store-split posture, like
     * [[TextQueries]]' signature store). The operator returns an
-    * eagerly localCheckpointed frame; KeyedOnce holds the one live
-    * reference per (session, snapshot), so repeated executions serve
-    * the artifact without the unbounded CacheManager entry the old
-    * persist-based reuse leaked. */
-  private val prefixPairCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
+    * eagerly localCheckpointed frame, which [[FixtureStore.artifact]]
+    * keeps as its pin and holds as the one live reference per
+    * (session, snapshot), so repeated executions serve the artifact
+    * without the unbounded CacheManager entry the old persist-based
+    * reuse leaked. */
   private def prefixPairs(s: org.apache.spark.sql.SparkSession,
                           d: String): org.apache.spark.sql.DataFrame =
-    prefixPairCache((s, d)) {
+    FixtureStore.artifact(s, "prefix_pairs", d) {
       graft.ext.DedupOps.prefixFilterJaccardPairs(
         Tables.documents(s, d).filter(col("doc_id") % 4 === 1)
           .repartition(32),
         "doc_id", "text", threshold = 0.8)
     }
-
-  private val bigvocabPairCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
 
   /** The `jaccard_pairs_bigvocab` artifact: each token suffixed with
     * `doc_id % 7` inflates the corpus's 28-token vocabulary to ~196 —
@@ -97,7 +90,7 @@ object Text2Queries {
     * benching the pathology at every SF would only re-measure it. */
   private def bigvocabPairs(s: org.apache.spark.sql.SparkSession,
                             d: String): org.apache.spark.sql.DataFrame =
-    bigvocabPairCache((s, d)) {
+    FixtureStore.artifact(s, "bigvocab_pairs", d) {
       val docs = Tables.documents(s, d)
         .filter(col("doc_id") % 4 === 2 && col("doc_id") < 20000)
         .withColumn("text", concat_ws(" ",

@@ -38,16 +38,12 @@ object Text3Queries {
     * consumer (per-doc scoring, bucket stratification, any future
     * perplexity gate). Same build/serve split as
     * [[TextQueries.storedSigs]]; the frame is doc-grain
-    * (doc_id, n_bigrams, lm_logprob), persisted MEMORY_AND_DISK. */
-  private val lmScoreCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
+    * (doc_id, n_bigrams, lm_logprob), pinned by
+    * [[FixtureStore.artifact]]. */
   private def lmScores(s: org.apache.spark.sql.SparkSession,
                        d: String): org.apache.spark.sql.DataFrame =
-    lmScoreCache((s, d)) {
+    FixtureStore.artifact(s, "lm_scores", d) {
       TextOps.bigramLmScores(Tables.documents(s, d), "doc_id", "text")
-        .transform(FixtureStore.pinArtifact)
     }
 
   /** Session-lifetime DSIR weight store — like [[lmScores]], the
@@ -55,16 +51,11 @@ object Text3Queries {
     * models applied to the corpus) scored once per snapshot and read
     * by both the weights query and the resampler; doc-grain
     * (doc_id, n_feats, dsir_logw). */
-  private val dsirCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
   private def dsirStore(s: org.apache.spark.sql.SparkSession,
                         d: String): org.apache.spark.sql.DataFrame =
-    dsirCache((s, d)) {
+    FixtureStore.artifact(s, "dsir_weights", d) {
       TextOps.dsirWeights(Tables.documents(s, d), "doc_id", "text",
           col("lang") === "en")
-        .transform(FixtureStore.pinArtifact)
     }
 
   /** Store-served incremental LM scores for `bigram_lm_incremental`:
@@ -74,14 +65,10 @@ object Text3Queries {
     * [[lmScores]] (the build/serve split again; in production the
     * daily job scores only its new batch and persists the result
     * next to the store). */
-  private val incLmCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
   private def incrementalLmScores(s: org.apache.spark.sql.SparkSession,
                                   d: String)
       : org.apache.spark.sql.DataFrame =
-    incLmCache((s, d)) {
+    FixtureStore.artifact(s, "lm_scores_incremental", d) {
       val store = FixtureStore.buildOnce(s, "bigram_counts", d) { dir =>
         val docs = Tables.documents(s, d)
         (0 until 3).foreach { i =>
@@ -95,20 +82,15 @@ object Text3Queries {
       }
       TextOps.bigramLmScoresFromStore(Tables.documents(s, d),
           "doc_id", "text", store)
-        .transform(FixtureStore.pinArtifact)
     }
 
   /** Store-served incremental DSIR weights for
     * `dsir_weights_incremental` — the [[incrementalLmScores]] split
     * applied to the DSIR count store (same 3-batch + replay drill). */
-  private val incDsirCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
   private def incrementalDsirWeights(s: org.apache.spark.sql.SparkSession,
                                      d: String)
       : org.apache.spark.sql.DataFrame =
-    incDsirCache((s, d)) {
+    FixtureStore.artifact(s, "dsir_weights_incremental", d) {
       val store = FixtureStore.buildOnce(s, "dsir_counts", d) { dir =>
         val docs = Tables.documents(s, d)
         (0 until 3).foreach { i =>
@@ -122,7 +104,6 @@ object Text3Queries {
       }
       TextOps.dsirWeightsFromStore(Tables.documents(s, d),
           "doc_id", "text", col("lang") === "en", store)
-        .transform(FixtureStore.pinArtifact)
     }
 
   /** Session-lifetime doc-grain token-count signal — (doc_id, lang,
@@ -133,17 +114,12 @@ object Text3Queries {
     * multi-pass consumers — the MAD gate alone reads it three times
     * (median, deviations, gate) — from re-tokenizing the corpus once
     * per pass. */
-  private val tokenSignalCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
   private def tokenSignals(s: org.apache.spark.sql.SparkSession,
                            d: String): org.apache.spark.sql.DataFrame =
-    tokenSignalCache((s, d)) {
+    FixtureStore.artifact(s, "token_signals", d) {
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
           TextOps.tokenCount(col("text")).as("n_tokens"))
-        .transform(FixtureStore.pinArtifact)
     }
 
   val defs: Map[String, QueryDef] = Map(
@@ -1082,14 +1058,10 @@ object Text3Queries {
     * batches (split by doc_id % 6 ∈ {0, 2, 4}) plus a replayed one —
     * and the served score frame is a session artifact like
     * [[incrementalLmScores]]. */
-  private val incClfCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
   private def incrementalClassifierScores(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    incClfCache((s, d)) {
+    FixtureStore.artifact(s, "clf_scores_incremental", d) {
       val docs = Tables.documents(s, d)
       val labeled = docs.filter(col("doc_id") % 2 === 0)
       val store = FixtureStore.buildOnce(s, "clf_store", d) { dir =>
@@ -1108,7 +1080,6 @@ object Text3Queries {
       val model = graft.ext.ClassifierOps.classifierFromStore(s, store)
       graft.ext.ClassifierOps.scoreQuality(docs, "doc_id", "text",
           model)
-        .transform(FixtureStore.pinArtifact)
     }
 
   /** Store-served incremental lang-ID predictions for
@@ -1117,14 +1088,10 @@ object Text3Queries {
     * half in three batches (split by doc_id % 6 ∈ {0, 2, 4}) plus a
     * replayed one, folded back via `langIdFromStore`, classified
     * over the whole corpus. */
-  private val incLangCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
   private def incrementalLangIdPreds(
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =
-    incLangCache((s, d)) {
+    FixtureStore.artifact(s, "langid_preds_incremental", d) {
       val docs = Tables.documents(s, d)
       val labeled = docs.filter(col("doc_id") % 2 === 0)
       val store = FixtureStore.buildOnce(s, "langid_store", d) { dir =>
@@ -1142,20 +1109,15 @@ object Text3Queries {
       val model = graft.ext.ClassifierOps.langIdFromStore(s, store)
       graft.ext.ClassifierOps.classifyLang(docs, "doc_id", "text",
           model)
-        .transform(FixtureStore.pinArtifact)
     }
 
   /** Build-once persisted merge table + loaded rank list for
     * `bpe_token_count_store` (train up to 1024 merges on the corpus,
     * save, load back — the LOADED list is what prices, so the
     * round-trip is on the data path). */
-  private val mergeStoreCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), Seq[(String, String)]]
-
   private def storedMerges(s: org.apache.spark.sql.SparkSession,
                            d: String): Seq[(String, String)] =
-    mergeStoreCache((s, d)) {
+    FixtureStore.memo(s, "bpe_merges_loaded", d) {
       val dir = FixtureStore.buildOnce(s, "bpe_merges", d) { dir =>
         graft.ext.BpeOps.saveMerges(s,
           graft.ext.BpeOps.trainMergesMax(Tables.documents(s, d),

@@ -48,15 +48,10 @@ object VectorQueries {
     * per-dimension range frame is a snapshot artifact (persists next
     * to the dataset in production; quantization geometry must be the
     * same for every consumer), built once per (session, sf dir). */
-  private val sq8RangesCache =
-    new FixtureStore.KeyedOnce[(org.apache.spark.sql.SparkSession,
-      String), org.apache.spark.sql.DataFrame]
-
   private def sq8RangesStore(s: org.apache.spark.sql.SparkSession,
                              d: String): org.apache.spark.sql.DataFrame =
-    sq8RangesCache((s, d)) {
+    FixtureStore.artifact(s, "sq8_ranges", d) {
       VectorOps.sq8Ranges(Tables.embeddings(s, d), "embedding")
-        .transform(FixtureStore.pinArtifact)
     }
 
   val defs: Map[String, QueryDef] = Map(

@@ -1,21 +1,26 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.FixtureStore.KeyedOnce
+import graft.queries.FixtureStore
 
 /** The build-once cache discipline behind every session artifact
-  * store: exactly-once per key, failure retry, and no cross-key
-  * blocking (the monitor installs cells; builds run on the cell). */
-class KeyedOnceSpec extends AnyFunSuite {
+  * ([[FixtureStore.memo]], which `buildOnce` and `artifact` share):
+  * exactly-once per key, failure retry, and no cross-key blocking
+  * (the monitor installs cells; builds run on the cell). Each test
+  * uses its own names — the memo lives as long as the JVM. */
+class KeyedOnceSpec extends SparkSpec {
+
+  private def memo[V](name: String)(build: => V): V =
+    FixtureStore.memo(spark, s"keyedoncespec_$name", "/data/k")(build)
 
   test("builds exactly once per key, even under concurrent callers") {
-    val cache = new KeyedOnce[Int, Int]
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val results =
       java.util.Collections.synchronizedSet(new java.util.HashSet[Int]())
     val threads = (0 until 16).map { i =>
       new Thread(() => {
-        results.add(cache(i % 2) { builds.incrementAndGet(); (i % 2) * 10 })
+        results.add(memo(s"concurrent_${i % 2}") {
+          builds.incrementAndGet(); (i % 2) * 10
+        })
         ()
       })
     }
@@ -26,30 +31,28 @@ class KeyedOnceSpec extends AnyFunSuite {
 
   test("a failed build does not poison the cell — the next caller " +
     "retries") {
-    val cache = new KeyedOnce[String, Int]
     var attempts = 0
     def build: Int = {
       attempts += 1
       if (attempts == 1) sys.error("first build fails")
       42
     }
-    intercept[RuntimeException] { cache("k")(build) }
-    assert(cache("k")(build) === 42)
+    intercept[RuntimeException] { memo("retry")(build) }
+    assert(memo("retry")(build) === 42)
     assert(attempts === 2)
   }
 
   test("a slow build on one key does not block a different key") {
-    val cache = new KeyedOnce[Int, Int]
     val slowStarted = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
     val t = new Thread(() => {
-      cache(1) { slowStarted.countDown(); release.await(); 1 }
+      memo("slow") { slowStarted.countDown(); release.await(); 1 }
       ()
     })
     t.start()
     slowStarted.await()
-    // key 2 must resolve while key 1's build is still in flight
-    val v = cache(2) { 2 }
+    // another key must resolve while the slow build is still in flight
+    val v = memo("fast") { 2 }
     assert(v === 2)
     release.countDown()
     t.join()

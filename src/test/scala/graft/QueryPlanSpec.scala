@@ -1,16 +1,64 @@
 package graft
 
+import graft.ops.Relational.widenNarrowScan
+import graft.queries.FixtureStore
+
 /** Plan-shape assertions for registry queries: the properties that
   * decide 100×-scale behavior (scan pushdown, broadcast of small
   * sides, map-side partial aggregation, top-k as
   * TakeOrderedAndProject) are asserted against the executed plans,
-  * not just eyeballed in .explain output. */
+  * not just eyeballed in .explain output — plus what a build or a
+  * run may leave behind (jobs at build time, per-run pins). */
 class QueryPlanSpec extends SparkSpec {
 
   private val d = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, d).queryExecution.executedPlan.toString
+
+  test("widenNarrowScan runs no job at build: it widens a narrow " +
+    "scan and returns an aggregate untouched") {
+    val scan = Tables.documents(spark, d)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(scan.queryExecution.toRdd.getNumPartitions < cores)
+    val (widened, scanJobs) = jobsDuring(widenNarrowScan(scan))
+    assert(scanJobs == 0, s"widening a scan ran $scanJobs job(s)")
+    widened.queryExecution.logical match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition =>
+        assert(r.numPartitions == cores)
+      case p => fail(s"the narrow scan was not widened: $p")
+    }
+    // the aggregate's sparkPlan has no Exchange yet (EnsureRequirements
+    // runs later) — only its required child distribution
+    val agg = scan.groupBy("lang").count()
+    val (kept, aggJobs) = jobsDuring(widenNarrowScan(agg))
+    assert(aggJobs == 0, s"widening an aggregate ran $aggJobs job(s)")
+    assert(kept eq agg)
+  }
+
+  /** Materialized local checkpoints held by the context: the pins
+    * [[FixtureStore.clearRddCaches]] exempts. */
+  private def localPins: Int =
+    spark.sparkContext.getPersistentRDDs.values
+      .count(r => r.isCheckpointed && r.getCheckpointFile.isEmpty)
+
+  test("curation_e2e pins nothing per run: a second run leaves no " +
+    "more local checkpoints than the first") {
+    val q = SparkEntry.queries("curation_e2e")
+    // both result frames stay referenced: the ContextCleaner reclaims
+    // an unreferenced checkpoint on GC, which would hide a per-run pin
+    def runAndClear(): (org.apache.spark.sql.DataFrame, Int) = {
+      val df = q(spark, d)
+      Bench.forceFull(df)
+      FixtureStore.clearRddCaches(spark)
+      (df, localPins)
+    }
+    val (df1, first) = runAndClear()
+    val (df2, second) = runAndClear()
+    assert(second <= first,
+      s"each run leaves one more pinned frame: $first -> $second")
+    assert(df1.collect().toSeq == df2.collect().toSeq)
+  }
 
   test("window_analytics pushes the orderkey filter into the scan") {
     val p = plan("window_analytics")

@@ -9,7 +9,7 @@ import graft.queries.FixtureStore
 
 /** The shared run posture: the one session factory, the one
   * inter-query cache clear and its pin exemption, and the build-once
-  * fixture memo. */
+  * memo behind fixtures and pinned artifacts. */
 class SessionSpec extends SparkSpec {
 
   test("the factory's session: UTC, one shuffle partition per core, " +
@@ -33,7 +33,7 @@ class SessionSpec extends SparkSpec {
     val base = spark.range(0, 2000, 1, 4)
       .select(col("id"), (col("id") % 7).as("k"))
     val before = persisted
-    val pinned = FixtureStore.pinArtifact(
+    val pinned = FixtureStore.artifact(spark, "sessionspec_pin", "/data/p")(
       base.groupBy("k").agg(count(lit(1)).as("n")))
     val pinIds = persisted -- before
     assert(pinIds.nonEmpty, "the pin holds no cached RDD")
@@ -78,5 +78,48 @@ class SessionSpec extends SparkSpec {
     fixture("sessionspec_a", "/data/x", other)
     fixture("sessionspec_a", "/data/x", other)
     assert(builds.get == 4)
+  }
+
+  test("artifact builds once per (session, name, dir), and its frame " +
+    "survives clearRddCaches and still reads") {
+    val builds = new AtomicInteger(0)
+    def art(name: String, d: String,
+            s: org.apache.spark.sql.SparkSession = spark) =
+      FixtureStore.artifact(s, name, d) {
+        builds.incrementAndGet()
+        s.range(0, 100, 1, 2).select((col("id") % 10).as("k")).distinct()
+      }
+    val a = art("sessionspec_art_a", "/data/x")
+    assert(art("sessionspec_art_a", "/data/x") eq a)
+    assert(builds.get == 1)
+    art("sessionspec_art_b", "/data/x")
+    art("sessionspec_art_a", "/data/y")
+    assert(builds.get == 3)
+    val other = spark.newSession()
+    art("sessionspec_art_a", "/data/x", other)
+    art("sessionspec_art_a", "/data/x", other)
+    assert(builds.get == 4)
+
+    FixtureStore.clearRddCaches(spark)
+    assert(art("sessionspec_art_a", "/data/x") eq a)
+    assert(builds.get == 4)
+    assert(a.orderBy("k").collect().map(_.getLong(0)).toSeq ==
+      (0L until 10L))
+  }
+
+  test("artifact keeps an input that is already a local checkpoint: " +
+    "no extra job, no extra persistent RDD") {
+    val sc = spark.sparkContext
+    val ckpt = spark.range(0, 1000, 1, 4)
+      .select((col("id") % 13).as("k")).distinct()
+      .localCheckpoint(true)
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val (served, jobs) = jobsDuring(
+      FixtureStore.artifact(spark, "sessionspec_ckpt", "/data/c")(ckpt))
+    assert(jobs == 0, s"the pin of a local checkpoint ran $jobs job(s)")
+    assert(served eq ckpt)
+    assert(sc.getPersistentRDDs.keySet.toSet == before)
+    FixtureStore.clearRddCaches(spark)
+    assert(served.count() == 13)
   }
 }
