@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,8 +8,17 @@ object Verify {
     // driver contract: exactly (sfDir, outDir). Any further args are a
     // builder-side convenience: restrict the dump to the named queries.
     val Array(sfDir, outDir) = args.take(2)
-    val only = args.drop(2).toSet
     val spark = Session.local()
+    try dump(spark, sfDir, outDir, args.drop(2).toSet)
+    finally spark.stop()
+  }
+
+  /** Write each registry query (all of them when `only` is empty) to
+    * `outDir/<name>` as parquet, and every oracle SQL to
+    * `outDir/oracle_sql.json` — the input `tools/check.py` compares. A
+    * query that throws is reported on stderr and left out of the dump. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           only: Set[String]): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -38,6 +48,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.io.Staging
+import org.apache.spark.sql.functions.{count, lit}
+import graft.io.{JdbcStore, Staging}
 import graft.ops.Relational
 import graft.schema.Schemas
 
@@ -25,57 +26,51 @@ object OperationalLoad {
   def loadIfNew(spark: SparkSession, df: DataFrame, storeDir: String,
                 table: String, idColumn: String,
                 columnMapping: Map[String, String] = Map.empty,
-                selectColumns: Seq[String] = Nil): Long = {
-    if (df.isEmpty) return 0L
-    var d = Relational.dedupeByKey(df, idColumn)
-    if (columnMapping.nonEmpty) d = Relational.renameAll(d, columnMapping)
-    if (selectColumns.nonEmpty) d = Relational.selectExisting(d, selectColumns)
-    val fresh =
-      if (Staging.tableExists(spark, storeDir, table)) {
-        val existing = Staging.readTable(spark, storeDir, table)
-        Relational.antiJoinNewKeys(d, existing, idColumn)
-      } else d
-    // Load accounting (reference transformation_db.py:117) via the
-    // Observation API: the row count is collected from the SAME job
-    // that writes the append — one pass over the data instead of the
-    // cache + count + write double-execution this used to do. A
-    // nothing-new run appends an empty part file (vs the old skip) —
-    // accepted litter at daily cadence; Staging.compactTable reclaims.
-    val obs = new org.apache.spark.sql.Observation()
-    Staging.appendParquet(
-      fresh.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n")),
-      storeDir, table)
-    obs.get("n").asInstanceOf[Long]
-  }
+                selectColumns: Seq[String] = Nil): Long =
+    load(df, idColumn, columnMapping, selectColumns,
+      Option.when(Staging.tableExists(spark, storeDir, table))(
+        Staging.readTable(spark, storeDir, table)))(
+      Staging.appendParquet(_, storeDir, table))
 
   /** [[loadIfNew]] against a JDBC operational store — the fidelity
     * path: the reference's store is genuinely a SQL database
     * (`pd.read_sql_table` / `to_sql(if_exists='append')`,
-    * transformation_db.py:109-116). Same pipeline shape; the
-    * "existing keys" side is [[graft.io.JdbcStore.keyScan]] (F3) — a
+    * transformation_db.py:109-116). Same pipeline; the "existing
+    * keys" side is [[graft.io.JdbcStore.keyScan]] (F3) — a
     * server-side single-column SELECT that arrives distributed, never
     * a driver-side key set — and the append is batched INSERTs (F5).
     * Idempotent: a second identical run loads 0. */
   def loadIfNewJdbc(spark: SparkSession, df: DataFrame, url: String,
                     table: String, idColumn: String,
                     columnMapping: Map[String, String] = Map.empty,
-                    selectColumns: Seq[String] = Nil): Long = {
+                    selectColumns: Seq[String] = Nil): Long =
+    load(df, idColumn, columnMapping, selectColumns,
+      Option.when(JdbcStore.tableExists(url, table))(
+        JdbcStore.keyScan(spark, url, table, idColumn)))(
+      JdbcStore.append(_, url, table))
+
+  /** The one load pipeline behind both sinks. `existing` (the store's
+    * rows or keys, None when the table is absent) is by-name so an
+    * empty batch never probes the store. */
+  private def load(df: DataFrame, idColumn: String,
+                   columnMapping: Map[String, String],
+                   selectColumns: Seq[String],
+                   existing: => Option[DataFrame])
+                  (append: DataFrame => Unit): Long = {
     if (df.isEmpty) return 0L
     var d = Relational.dedupeByKey(df, idColumn)
     if (columnMapping.nonEmpty) d = Relational.renameAll(d, columnMapping)
     if (selectColumns.nonEmpty) d = Relational.selectExisting(d, selectColumns)
-    val fresh =
-      if (graft.io.JdbcStore.tableExists(url, table)) {
-        val existing = graft.io.JdbcStore.keyScan(spark, url, table, idColumn)
-        Relational.antiJoinNewKeys(d, existing, idColumn)
-      } else d
-    // one pass: the count rides the insert job (see loadIfNew note)
+    val fresh = existing.fold(d)(Relational.antiJoinNewKeys(d, _, idColumn))
+    // Load accounting (reference transformation_db.py:117) via the
+    // Observation API: the row count is collected from the SAME job
+    // that writes the append — one pass over the data instead of the
+    // cache + count + write double-execution this used to do. A
+    // nothing-new run appends an empty part file (vs the old skip) —
+    // accepted litter at daily cadence; [[Staging.compactTable]]
+    // reclaims it through the whole-table [[Staging.stageAndSwap]].
     val obs = new org.apache.spark.sql.Observation()
-    graft.io.JdbcStore.append(
-      fresh.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n")),
-      url, table)
+    append(fresh.observe(obs, count(lit(1)).as("n")))
     obs.get("n").asInstanceOf[Long]
   }
 

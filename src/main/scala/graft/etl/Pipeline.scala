@@ -1,8 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.SparkSession
-import graft.io.Staging
-import graft.schema.Schemas
 
 /** The DAG shell (SURVEY.md §3 entry-point A). The reference's Airflow
   * DAG (`dags/tourism_finance_etl_dag.py:12-27`) is orchestration, not
@@ -19,12 +17,9 @@ object Pipeline {
 
   def run(spark: SparkSession, stagingDir: String, storeDir: String,
           martDir: String): Result = {
-    // Stage 1 — DDL (reference create_operational_db_schema +
-    // create_bigquery_tables_for_data_mart).
-    Schemas.operational.foreach { case (t, s) =>
-      Staging.ensureTable(spark, storeDir, t, s)
-    }
-    // Stage 2 — incremental operational load (idempotent).
+    // Stages 1+2 — DDL (reference create_operational_db_schema), then
+    // the incremental operational load (idempotent); OperationalLoad
+    // ensures its tables before loading.
     val loaded = OperationalLoad.run(spark, stagingDir, storeDir)
     // Stage 3 — full mart rebuild (truncate-load, deliberately
     // asymmetric with stage 2 — SURVEY §4 idempotency model).

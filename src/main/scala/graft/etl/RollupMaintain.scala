@@ -22,8 +22,8 @@ import graft.io.Staging
   * of magnitude smaller than the fact table — so the read-merge-write
   * of the update is a small-table operation even when the fact table
   * is not; it stages through a temp directory before touching the
-  * store (its lineage reads the store, same discipline as
-  * [[graft.io.Staging.mergeUpsert]]).
+  * store (its lineage reads the store): the whole-table
+  * [[graft.io.Staging.stageAndSwap]].
   *
   * Invariant (RollupSpec): after any batch sequence, `readFinal` ==
   * the direct aggregate over the concatenation of all batches; the

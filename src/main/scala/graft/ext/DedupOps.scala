@@ -61,17 +61,6 @@ object DedupOps {
       .otherwise(transform(sequence(lit(0), size(tokens) - n),
         i => concat_ws(" ", slice(tokens, i + lit(1), lit(n)))))
 
-  /** MinHash signature: element j = min over shingles of
-    * xxhash64(shingle, j) — a keyed hash family, deterministic.
-    *
-    * PERFORMANCE: pass a *materialized* (attribute) shingle column.
-    * Higher-order functions are interpreted (CodegenFallback), and an
-    * inlined shingle expression would be re-evaluated once per hash —
-    * 64 re-tokenizations per row (see [[signatureTable]]). */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      j => array_min(transform(shingleCol, x => xxhash64(x, j))))
-
   /** MinHash signature from pre-hashed shingles: the per-j hash is an
     * xxhash64 mix of (shingle hash, j) — long arithmetic only, no
     * string re-hashing inside the 64-wide loop. */

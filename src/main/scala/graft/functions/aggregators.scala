@@ -196,8 +196,8 @@ object MinKLong {
   * compute-cheap byte-heavy pair stream — the quadratic verification
   * tiers — is consumed ONCE, where both the rank window (sorts every
   * pair of a hot key in one task) and the histogram-threshold
-  * two-pass form ([[graft.ops.Relational.topNPerKeyByValue]])
-  * re-generate the stream per pass. Exact under the same total
+  * two-pass form (`Relational.topNPerKeyByValue`, deleted, source
+  * at 2f967c5) re-generate the stream per pass. Exact under the same total
   * order as `row_number() OVER (ORDER BY value DESC, idA, idB) <= k`
   * (values compared as the rounded doubles both engines carry).
   * Output: the group's top-k triples, best first. */

@@ -17,14 +17,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Staging {
 
-  /** TEST-ONLY failpoint (StoreOpsSpec crash-window drills): when
-    * non-null, a partition-swap rename whose DESTINATION path matches
-    * the predicate behaves as a filesystem rename failure — Hadoop
-    * reports most real ones as `false`, not an exception, which is
-    * exactly the window the swap protocol's result-checking guards.
-    * Production code never sets this. */
-  @volatile private[graft] var renameFailpoint: String => Boolean = null
-
   /** Scheme-agnostic probe: does `prefix` contain any `*.csv`?
     * Resolved through Hadoop's [[org.apache.hadoop.fs.FileSystem]] so
     * the same code answers correctly for `file:`, `hdfs:`, `s3a:`,
@@ -305,233 +297,14 @@ object Staging {
     spark.read.option("mergeSchema", "true")
       .parquet(s"$storeDir/$table")
 
-  /** Upsert (merge) into a parquet store table: rows in `updates`
-    * replace same-key rows in the store; new keys append. Parquet has
-    * no transactional MERGE, so this is the read-join-rewrite form:
-    * keep = store ⟕anti updates, result = keep ∪ updates, full
-    * overwrite. At 100 TB the rewrite must be scoped — pass
-    * `partitionCols` to rewrite with dynamic partition overwrite so
-    * only partitions containing updated keys (plus those the updates
-    * introduce) are rewritten, not the whole table. Updates must then
-    * carry the partition columns. Returns the new total row count. */
-  def mergeUpsert(spark: SparkSession, updates: DataFrame,
-                  storeDir: String, table: String, key: String,
-                  partitionCols: Seq[String] = Nil): Long = {
-    val path = s"$storeDir/$table"
-    if (!tableExists(spark, storeDir, table)) {
-      if (partitionCols.isEmpty) overwriteParquet(updates, storeDir, table)
-      else overwritePartitionsDynamic(updates, storeDir, table, partitionCols)
-      // count from the WRITTEN footers — a `updates.count()` here
-      // re-executed the whole updates lineage a second time
-      return ParquetFooters.rowCount(spark, Seq(path))
-    }
-    val store = readTable(spark, storeDir, table)
-    if (partitionCols.isEmpty) {
-      val merged = store.join(updates.select(key), Seq(key), "left_anti")
-        .unionByName(updates)
-      // the overwrite reads its own input: stage through a checkpoint
-      // dir, then swap — the shared protocol checks the rename result
-      // and diagnoses leftover-temp crash windows ("mergefull" marker,
-      // distinct from the partition branch's "__merge_tmp_" staging
-      // which is cleared unconditionally at its start)
-      return stageAndSwap(spark, merged, storeDir, table, "mergefull")
-    } else {
-      // partition-scoped: rewrite every partition the merge AFFECTS —
-      // the partitions the updates write INTO (their surviving rows
-      // must be re-emitted or they are lost) plus the partitions
-      // updated keys currently live in (covers a key MOVING between
-      // partitions)
-      val touched = store.join(updates.select(key), Seq(key), "left_semi")
-        .select(partitionCols.map(col): _*)
-        .unionByName(updates.select(partitionCols.map(col): _*))
-        .distinct()
-      val keep = semiJoinNullSafe(store, touched, partitionCols)
-        .join(updates.select(key), Seq(key), "left_anti")
-      val merged = keep.unionByName(updates)
-      swapTouchedPartitions(spark, merged, storeDir, table,
-        partitionCols, touched)
-    }
-    // post-commit acknowledgement count from footers (ParquetFooters
-    // scaladoc) — not a Spark count job over the table
-    ParquetFooters.rowCount(spark, Seq(path))
-  }
-
-  /** Partition-scoped stage-and-swap shared by [[mergeUpsert]] and
-    * [[deleteKeys]]: stage `merged` — whose lineage READS the store —
-    * through a temp directory, fully materialized on durable storage
-    * BEFORE any store file is touched, then swap partition
-    * directories into place via backup-then-rename. The swap never
-    * deletes the only copy of a partition: the old directory is MOVED
-    * to a per-run backup first, the new one renamed in (result
-    * CHECKED — Hadoop rename reports most failures as `false`, not an
-    * exception), and the backup dropped only after every partition
-    * swapped. A crash mid-swap leaves each partition's data in
-    * exactly one of store/backup/temp — recoverable by an operator,
-    * never silently gone. (Atomic MULTI-partition commit is beyond
-    * what raw parquet directories can express; a transactional table
-    * format is the production answer, and the scope here is
-    * documented, not hidden.)
-    *
-    * `merged` must emit ONLY rows belonging to `touched` partitions
-    * (plus any brand-new partitions); untouched partitions' files are
-    * never listed, read, or moved. A touched partition `merged` emits
-    * NO rows for is displaced to the backup (i.e. logically deleted). */
-  private def swapTouchedPartitions(spark: SparkSession,
-                                    merged: DataFrame, storeDir: String,
-                                    table: String,
-                                    partitionCols: Seq[String],
-                                    touched: DataFrame): Unit = {
-      val path = s"$storeDir/$table"
-      val tmp = s"$storeDir/__merge_tmp_$table"
-      val bak = s"$storeDir/__merge_bak_$table"
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      val bakPath = new org.apache.hadoop.fs.Path(bak)
-      require(!fs.exists(bakPath),
-        s"$bak exists — a previous merge crashed mid-swap; restore or " +
-          "remove it before re-running (it holds pre-merge partitions)")
-      fs.delete(tmpPath, true)
-      merged.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*).parquet(tmp)
-      // `partitionBy` renders directory names with Spark's own value
-      // escaping (':' → '%3A', NULL → __HIVE_DEFAULT_PARTITION__) —
-      // listing the temp dir therefore yields the authoritative
-      // relative paths, identical to what a dynamic overwrite of the
-      // store would have produced. Walk partitionCols.size levels to
-      // collect "c1=v1/c2=v2"-style relative paths.
-      def listPartDirs(base: org.apache.hadoop.fs.Path, depth: Int,
-                       prefix: String): Seq[String] =
-        if (depth == 0) Seq(prefix)
-        else fs.listStatus(base).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-          .flatMap { s =>
-            val rel = if (prefix.isEmpty) s.getPath.getName
-                      else s"$prefix/${s.getPath.getName}"
-            listPartDirs(s.getPath, depth - 1, rel)
-          }
-      val emitted = listPartDirs(tmpPath, partitionCols.size, "")
-      // a touched partition whose every row was an updated key that
-      // moved elsewhere emits nothing — its stale store files are
-      // cleared explicitly. The collect is bounded by the update
-      // batch's partition count (maintenance-op constant, not a data
-      // scan) and runs BEFORE the store is mutated. Values go through
-      // Spark's string cast so non-string partition types render as
-      // the directory names do (e.g. timestamps without a JVM
-      // toString trailing '.0').
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val touchedSubs = touched.select(
-        partitionCols.map(c => col(c).cast("string").as(c)): _*)
-        .collect()
-        .map { row =>
-          partitionCols.zipWithIndex.map { case (c, i) =>
-            val v =
-              if (row.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-              else ExternalCatalogUtils.escapePathName(row.getString(i))
-            s"$c=$v"
-          }.mkString("/")
-        }.toSet
-      // swap staged partitions into the store (replace-or-add):
-      // old → backup, new → store, both renames result-checked; a
-      // failure aborts with store+backup+temp all intact. Untouched
-      // partitions' files are never listed, read, or moved.
-      def renameChecked(src: org.apache.hadoop.fs.Path,
-                        dst: org.apache.hadoop.fs.Path): Unit = {
-        val fp = renameFailpoint
-        if ((fp != null && fp(dst.toString)) || !fs.rename(src, dst))
-          throw new java.io.IOException(
-            s"rename $src -> $dst failed; merge aborted with data " +
-              s"intact (new data in $tmp, displaced partitions in $bak)")
-      }
-      def moveToBackup(rel: String): Unit = {
-        val dst = new org.apache.hadoop.fs.Path(s"$path/$rel")
-        if (fs.exists(dst)) {
-          val b = new org.apache.hadoop.fs.Path(s"$bak/$rel")
-          fs.mkdirs(b.getParent)
-          renameChecked(dst, b)
-        }
-      }
-      emitted.foreach { rel =>
-        moveToBackup(rel)
-        val dst = new org.apache.hadoop.fs.Path(s"$path/$rel")
-        fs.mkdirs(dst.getParent)
-        renameChecked(new org.apache.hadoop.fs.Path(s"$tmp/$rel"), dst)
-      }
-      // touched-but-empty partitions (every surviving row was removed
-      // or moved elsewhere): displaced to backup, not deleted
-      (touchedSubs -- emitted).foreach(moveToBackup)
-      // all partitions swapped — drop the backup and temp scaffolding
-      fs.delete(bakPath, true)
-      fs.delete(tmpPath, true)
-      // a swap can empty the table entirely (every partition touched,
-      // none re-emitted — e.g. deleteKeys of the last rows): a dir
-      // with zero data files is UNREADABLE (no schema to infer), so
-      // materialize an explicit empty table with the full schema
-      // (partition cols as ordinary columns — Spark writes one empty
-      // file for an empty frame precisely to preserve schema). A later
-      // REPOPULATION of the emptied table must go through a full
-      // overwrite (overwriteParquet / mergeUpsert whole-table), not a
-      // dynamic-partition write, which would leave this root file
-      // beside new partition dirs (conflicting layouts).
-      val anyLeft = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .exists(s => s.isDirectory && s.getPath.getName.contains("="))
-      if (!anyLeft)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          merged.schema)
-          .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Null-safe partition-membership semi-join: `Seq(cols)` join keys
-    * use null-UNSAFE equality, so rows of a NULL-valued partition
-    * (`__HIVE_DEFAULT_PARTITION__`) would never match `touched` — the
-    * swap would then displace the whole null partition while its
-    * surviving rows were never re-emitted: silent data loss. `<=>`
-    * treats NULL = NULL as true. */
-  private def semiJoinNullSafe(store: DataFrame, touched: DataFrame,
-                               partitionCols: Seq[String]): DataFrame = {
-    val t = touched.toDF(partitionCols.map("__t_" + _): _*)
-    store.join(t, partitionCols.map(c => store(c) <=> t(s"__t_$c"))
-      .reduce(_ && _), "left_semi")
-  }
-
-  /** Targeted key deletion ("forget these ids") — the
-    * right-to-be-forgotten operation a production store needs. The
-    * whole-table form anti-joins and swaps; the partition-scoped form
-    * rewrites ONLY partitions that actually hold a doomed key (same
-    * backup-then-rename protocol as [[mergeUpsert]]), so deleting a
-    * handful of users from a date-partitioned 100 TB store rewrites a
-    * handful of partitions, not the table. `keys` is a one-column
-    * frame of ids to remove. A missing table is "nothing to delete"
-    * (returns 0), not an error. Returns the new total row count. */
-  def deleteKeys(spark: SparkSession, keys: DataFrame,
-                 storeDir: String, table: String, key: String,
-                 partitionCols: Seq[String] = Nil): Long = {
-    if (!tableExists(spark, storeDir, table)) return 0L
-    val store = readTable(spark, storeDir, table)
-    val doomed = keys.select(col(keys.columns.head).as(key)).distinct()
-    if (partitionCols.isEmpty) {
-      val kept = store.join(doomed, Seq(key), "left_anti")
-      return stageAndSwap(spark, kept, storeDir, table, "delete")
-    }
-    // only partitions holding a doomed key are rewritten
-    val touched = store.join(doomed, Seq(key), "left_semi")
-      .select(partitionCols.map(col): _*)
-      .distinct()
-    val kept = semiJoinNullSafe(store, touched, partitionCols)
-      .join(doomed, Seq(key), "left_anti")
-    swapTouchedPartitions(spark, kept, storeDir, table,
-      partitionCols, touched)
-    ParquetFooters.rowCount(spark, Seq(s"$storeDir/$table"))
-  }
-
   /** Whole-table stage-and-swap for operators whose OUTPUT LINEAGE
-    * READS THE STORE THEY REPLACE (rollup maintenance, SCD history —
-    * anything read-modify-write): materialize `df` fully to a temp
-    * directory, then delete-and-rename into place with the rename
-    * result CHECKED. One shared implementation of the swap-safety
-    * discipline (SCALING.md) so the crash-window handling cannot
-    * drift between operators.
+    * READS THE STORE THEY REPLACE (rollup maintenance, SCD history,
+    * compaction — state tables rewritten whole): materialize `df`
+    * fully to a temp directory, then delete-and-rename into place with
+    * the rename result CHECKED. One shared implementation of the
+    * swap-safety discipline (SCALING.md) so the crash-window handling
+    * cannot drift between operators. Keyed upsert and delete are not
+    * swaps: they commit through [[VersionedStore]].
     *
     * Leftover temp handling distinguishes the two crash windows by
     * the parquet `_SUCCESS` marker:
@@ -574,21 +347,18 @@ object Staging {
     * ~`targetFileMB`-sized files. Streaming appends and incremental
     * loads accrete small files; at scale the file count (driver
     * listing, task scheduling, parquet footer reads) becomes the
-    * bottleneck before data size does. Reads its own input → staged
-    * through a temp dir and swapped, like [[mergeUpsert]]. */
+    * bottleneck before data size does. Reads its own input → committed
+    * through [[stageAndSwap]] (temp `__compact_tmp_<table>`). Returns
+    * the file count written. */
   def compactTable(spark: SparkSession, storeDir: String, table: String,
                    targetFileMB: Int = 128): Long = {
-    val path = s"$storeDir/$table"
-    val hp = new org.apache.hadoop.fs.Path(path)
+    val hp = new org.apache.hadoop.fs.Path(s"$storeDir/$table")
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(hp).getLength
     val nFiles = math.max(1L,
       bytes / (targetFileMB.toLong * 1024 * 1024)).toInt
-    val df = readTable(spark, storeDir, table).repartition(nFiles)
-    val tmp = s"$storeDir/__compact_tmp_$table"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    fs.delete(hp, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), hp)
+    stageAndSwap(spark, readTable(spark, storeDir, table).repartition(nFiles),
+      storeDir, table, "compact")
     nFiles.toLong
   }
 

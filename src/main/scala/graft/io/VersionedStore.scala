@@ -2,12 +2,15 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Object-store-atomic table commits: the manifest/version answer to
-  * the one asterisk in [[Staging]]'s swap protocol. `stageAndSwap` /
-  * `swapTouchedPartitions` get their atomicity from directory RENAME —
-  * true on HDFS/POSIX, false on S3-style object stores where a rename
-  * is a non-atomic copy+delete. This store never renames anything a
-  * reader can see:
+/** Keyed store mutations: the one path for upsert and delete by key
+  * on a parquet table, whole-table ([[mergeUpsert]], [[deleteKeys]])
+  * or partition-granular on one partition column
+  * ([[mergeUpsertPartitioned]], [[deleteKeysPartitioned]]). Every
+  * mutation commits a new immutable version; nothing a reader can see
+  * is ever renamed, so the commit is atomic on HDFS/POSIX and on
+  * S3-style object stores alike (where a rename is a non-atomic
+  * copy+delete). Whole-table rewrites of state tables (rollups, SCD
+  * history, compaction) use [[Staging.stageAndSwap]] instead.
   *
   * Layout: `<storeDir>/<table>/_v_<000000N>/data/part-*.parquet`
   * (immutable once committed) + `_v_<N>/_COMMIT` (a one-line JSON
@@ -28,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * time, never correctness (StoreOpsSpec drills the protocol on a
   * filesystem whose rename is literally copy+delete).
   *
-  * Crash windows (single writer per table, as for all Staging ops):
+  * Crash windows (single writer per table):
   *   - dies during the data write → no `_COMMIT`, readers unaffected;
   *     the dead dir is cleared by the next commit;
   *   - dies after `_COMMIT`, before manifest/prune → the commit IS
@@ -37,9 +40,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   - the batch is REPLAYED after any of the above → `batchId`
   *     dedup: a commit whose batchId matches ANY retained version's
   *     is acknowledged as already applied, no new version (detection
-  *     window = `keepVersions`, see [[appliedBatchIds]]). This replaces
-  *     stageAndSwap's refuse-and-ask `_SUCCESS` window with
-  *     exactly-once semantics the operator never has to hand-repair.
+  *     window = `keepVersions`, see [[appliedBatchIds]]) — exactly-once
+  *     semantics the operator never has to hand-repair, where
+  *     stageAndSwap can only refuse and ask.
   *
   * Old versions are kept `keepVersions` deep (cheap time-travel /
   * debugging, bounded storage); pruning happens strictly AFTER the
@@ -188,8 +191,7 @@ object VersionedStore {
 
   /** Spark-escaped partition directory name for one string-cast value
     * (null → `__HIVE_DEFAULT_PARTITION__`), identical to what
-    * `partitionBy` renders — the same convention Staging's
-    * partition-swap uses. */
+    * `partitionBy` renders. */
   private def renderDirName(partCol: String, v: String): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val enc = if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
@@ -459,8 +461,7 @@ object VersionedStore {
   /** String-cast partition values → rendered directory names, for
     * matching manifest entries. The collect is bounded by the
     * operation's touched-partition count (maintenance-batch constant,
-    * not a data scan) and runs before any store mutation — the same
-    * bound Staging's partition swap documents. */
+    * not a data scan) and runs before any store mutation. */
   private def touchedDirNames(touched: DataFrame,
                               partCol: String): Set[String] = {
     import org.apache.spark.sql.functions.col

@@ -363,118 +363,6 @@ object Relational {
       .drop("__rn")
   }
 
-  /** Hot-key-safe top-N per key — [[topNPerKey]] for LOW-cardinality
-    * keys whose slices are corpus-scale (top n-grams per language,
-    * top domains per source): the plain per-key window sorts a hot
-    * key's ENTIRE slice in one task. Here candidates first fold to
-    * top-N within (key, hash-bucket) windows — each bucket holds
-    * ~1/buckets of the key's rows, ranked in parallel — and only the
-    * bucket winners (≤ buckets·n rows per key, a constant) meet in
-    * the final per-key window. EXACT for any input: a global top-N
-    * row is necessarily top-N within its own bucket, so no winner is
-    * ever lost (spec-asserted against the plain form).
-    *
-    * `bucketOn` should be a high-cardinality row expression (the
-    * ranked entity's id/value — NOT the order key, whose duplicates
-    * would concentrate buckets). `order` must totally order rows
-    * within a key (unique tiebreak last), as in [[topNPerKey]]. */
-  def topNPerKeyBucketed(df: DataFrame, keys: Seq[String],
-                         order: Seq[Column], n: Int, bucketOn: Column,
-                         buckets: Int = 32): DataFrame = {
-    require(buckets >= 1, "buckets >= 1")
-    val local = topNPerKey(
-      df.withColumn("__tb", pmod(xxhash64(bucketOn), lit(buckets))),
-      keys :+ "__tb", order, n)
-    topNPerKey(local.drop("__tb"), keys, order, n)
-  }
-
-  /** Top-N per key ordered by ONE VALUE COLUMN (desc) — the
-    * stream-scale form of [[topNPerKey]] for inputs too large to
-    * sort: a pair stream, a scored corpus, any frame where the
-    * ranked rows outnumber memory. The window forms (plain and
-    * bucketed) SORT the whole input — the partial rank-limit Spark
-    * plans under them still sorts every input partition, and on a
-    * compute-dense pair stream that sort is the entire cost
-    * (measured: ngram_jaccard_topk 678 s at sf4, ~15 GB of sort
-    * spill for a 20-row answer). This form never sorts the stream:
-    *
-    *   1. rows land in ≤1024 ordered VALUE BUCKETS via literal cut
-    *      points over the value column ([[memoCuts]] — the
-    *      keyedOrderStatistic machinery: one bounded, memoized
-    *      sample pass; ANY cut set is correct, cuts only balance
-    *      bucket sizes), so the histogram grain below is keys ×
-    *      ≤1025 REGARDLESS of the value distribution — a CONTINUOUS
-    *      unrounded score can no longer silently rebuild the
-    *      input-sized histogram and the full-sort shape behind it
-    *      (the r12 latent edge: the earlier form grouped by the raw
-    *      value and relied on callers pre-rounding);
-    *   2. ONE map-side-combinable (keys, bucket) count fold — tiny
-    *      aggregate state, no input row ever shuffles;
-    *   3. per key, the bucket containing the n-th-highest value read
-    *      off the histogram's descending cumulative count;
-    *   4. a SECOND pass over the input — recompute, not cache: the
-    *      stream is compute-cheap and byte-heavy, the documented
-    *      compute-density posture — keeps only rows in or above
-    *      their key's threshold bucket (the top-n rows plus at most
-    *      one bucket's worth of near-misses, ≈ 1/buckets of the
-    *      key's rows);
-    *   5. exact rank ([[topNPerKeyBucketed]]) under
-    *      (value desc, tieBreak…) picks the final n from the small
-    *      survivor set.
-    *
-    * EXACT vs [[topNPerKey]] under the same order (spec-asserted,
-    * continuous and discrete values): every global top-n row's value
-    * falls in or above its key's threshold bucket, so the bucket
-    * filter never drops a winner. NULL values land in the lowest
-    * bucket (a null comparison is never true), which the descending
-    * walk reaches last — null-valued rows rank LAST and appear only
-    * when a key has fewer than n non-null rows, exactly the window
-    * forms' `desc` (nulls-last) semantics. Null KEY groups are kept
-    * (`<=>` threshold join — the keyedRanks null-safety discipline).
-    * `tieBreak` must totally order rows within (key, value), as in
-    * [[topNPerKey]].
-    *
-    * KEY-CARDINALITY BOUND: the per-key threshold frame is broadcast
-    * (one row per distinct key), so distinct keys must fit a
-    * broadcast — the [[keyedRanks]] bound. This operator is for the
-    * hot-key regime (few keys, corpus-sized slices); a
-    * high-cardinality key over task-sized slices should use the
-    * plain [[topNPerKey]] window, which is cheaper there. */
-  def topNPerKeyByValue(df: DataFrame, keys: Seq[String],
-                        valueCol: String, tieBreak: Seq[Column],
-                        n: Int): DataFrame = {
-    for (c <- Seq("__vb", "__thr"))
-      require(!df.columns.contains(c),
-        s"topNPerKeyByValue: input already has a '$c' column — rename it")
-    val nb = math.min(1024,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    val cuts = memoCuts(df, col(valueCol), nb)
-    val bucket = cuts.foldLeft(lit(0)) { (acc, c) =>
-      acc + when(col(valueCol) > lit(c), 1).otherwise(0) }
-    val bucketed = df.withColumn("__vb", bucket)
-    val hist = bucketed.groupBy((keys.map(col) :+ col("__vb")): _*)
-      .agg(count(lit(1)).as("__c"))
-    // histogram grain: keys × ≤1025 value buckets — window-safe
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__vb").desc)
-    val thr = hist.withColumn("__cum", sum("__c").over(w))
-      // buckets still contributing to the top n (cum count BEFORE
-      // this bucket < n); the lowest of them holds the threshold
-      .filter(col("__cum") - col("__c") < n)
-      .groupBy(keys.map(col): _*)
-      .agg(min(col("__vb")).as("__thr"))
-      .select(keys.map(k => col(k).as(s"__k_$k")) :+ col("__thr"): _*)
-    val cond = keys.map(k => bucketed(k) <=> col(s"__k_$k"))
-      .reduce(_ && _)
-    val survivors = bucketed.join(broadcast(thr), cond)
-      .filter(col("__vb") >= col("__thr"))
-      .drop("__thr", "__vb")
-      .drop(keys.map(k => s"__k_$k"): _*)
-    topNPerKeyBucketed(survivors, keys,
-      col(valueCol).desc +: tieBreak, n,
-      bucketOn = struct(tieBreak: _*))
-  }
-
   /** Rank-based tier assignment: tier k (0..tiers-1) holds the rows
     * whose rank under `order` falls in the k-th equal slice of the
     * key's row count — `tier = ((rank-1) * tiers) div count`, pure

@@ -20,10 +20,6 @@ object Scalars {
     * The docstring there claims a hash; the code is plain concat. */
   def syntheticKey(cols: Column*): Column = concat_ws("_", cols: _*)
 
-  /** E2b — hashed variant (optional extra, SURVEY §2.3 note). */
-  def syntheticKeyHashed(cols: Column*): Column =
-    sha2(concat_ws("_", cols: _*), 256)
-
   /** E3/E4 — array → delimited string (reference extraction.py:58-59
     * `" | "` for opening hours, :66 `", "` for types). */
   def arrayJoined(c: Column, sep: String): Column = array_join(c, sep)

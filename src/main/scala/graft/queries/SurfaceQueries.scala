@@ -633,21 +633,21 @@ object SurfaceQueries {
         |FROM orders GROUP BY 1 ORDER BY o_orderstatus""".stripMargin)),
 
     // Targeted key deletion (right-to-be-forgotten): a copy of orders
-    // partitioned by status, a deterministic set of customer keys
-    // deleted partition-scoped, remaining rows aggregated. The oracle
-    // filters the same keys directly — identical results prove the
-    // swap rewrote exactly the surviving rows.
+    // committed partitioned by status, a deterministic set of customer
+    // keys deleted partition-scoped, remaining rows aggregated. The
+    // oracle filters the same keys directly — identical results prove
+    // the delete version holds exactly the surviving rows.
     "delete_keys" -> QueryDef(
       (s, d) => {
         val dir = FixtureStore.clearedScratchDir(s, "del", d)
         val orders = Tables.orders(s, d)
-        graft.io.Staging.overwritePartitionsDynamic(orders, dir,
-          "orders_p", Seq("o_orderstatus"))
+        graft.io.VersionedStore.commitPartitioned(s, orders, dir,
+          "orders_p", "o_orderstatus")
         val doomed = orders.filter(pmod(col("o_custkey"), lit(7)) === 0)
           .select("o_custkey")
-        graft.io.Staging.deleteKeys(s, doomed, dir, "orders_p",
-          "o_custkey", partitionCols = Seq("o_orderstatus"))
-        graft.io.Staging.readTable(s, dir, "orders_p")
+        graft.io.VersionedStore.deleteKeysPartitioned(s, doomed, dir,
+          "orders_p", "o_custkey")
+        graft.io.VersionedStore.readTable(s, dir, "orders_p")
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n"),
             QueryDef.dsum(col("o_totalprice")).as("total"))

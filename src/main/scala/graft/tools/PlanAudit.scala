@@ -132,10 +132,11 @@ object PlanAudit {
     *    plans at all — the shape itself is unchanged since r6.
     *
     *  - `ngram_jaccard_topk` (8 vs neardup 3): the r12 stream-scale
-    *    reshape (`Relational.topNPerKeyByValue` + salted
-    *    computeDensePairJoin). The plain rank window's partial
-    *    rank-limit SORTED every pair partition — 678 s and ~15 GB of
-    *    sort spill at sf4 for a 20-row answer; the two-pass
+    *    reshape (`Relational.topNPerKeyByValue` — deleted, source at
+    *    2f967c5 — plus salted computeDensePairJoin). The plain rank
+    *    window's partial rank-limit SORTED every pair partition —
+    *    678 s and ~15 GB of sort spill at sf4 for a 20-row answer;
+    *    the two-pass
     *    histogram form (value-count fold → per-key threshold →
     *    survivor-only exact rank) plus the hot-block salt measured
     *    97 s on the same leg. The exchange budget reads the trade

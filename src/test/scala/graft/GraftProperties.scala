@@ -180,11 +180,11 @@ object GraftProperties extends Properties("graft") {
     forAll(tableGen, tableGen) { (init, updates) =>
       val dir = java.nio.file.Files
         .createTempDirectory("graft-prop-upsert").toString
-      val store = graft.io.Staging
+      val store = graft.io.VersionedStore
       // unique keys per frame (store contract)
       val i = init.groupBy(_._1).map(_._2.head).toSeq
       val u = updates.groupBy(_._1).map(_._2.head).toSeq
-      store.overwriteParquet(i.toDF("id", "v"), dir, "t")
+      store.commit(spark, i.toDF("id", "v"), dir, "t")
       store.mergeUpsert(spark, u.toDF("id", "v"), dir, "t", "id")
       val once = store.readTable(spark, dir, "t")
         .as[(Int, String)].collect().toMap

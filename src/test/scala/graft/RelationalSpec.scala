@@ -114,85 +114,6 @@ class RelationalSpec extends SparkSpec {
       .collect().toSet == Set(1, 2))
   }
 
-  test("topNPerKeyBucketed equals the plain per-key window for any " +
-    "bucket count, ties included — bucket winners never lose a " +
-    "global top row") {
-    val df = spark.range(5000).select(
-      (col("id") % 3).cast("string").as("k"),
-      (col("id") % 97).as("score"),          // heavy ties
-      col("id").as("item"))
-    val order = Seq(col("score").desc, col("item"))
-    val plain = topNPerKey(df, Seq("k"), order, 7)
-      .select("k", "item").as[(String, Long)].collect().toSet
-    for (b <- Seq(1, 2, 32)) {
-      val bucketed = topNPerKeyBucketed(df, Seq("k"), order,
-          7, bucketOn = col("item"), buckets = b)
-        .select("k", "item").as[(String, Long)].collect().toSet
-      assert(bucketed === plain, s"buckets=$b")
-    }
-  }
-
-  test("topNPerKeyByValue equals the plain per-key window — heavy " +
-    "ties at the threshold value, sub-n keys, and null KEYS included") {
-    val df = spark.range(5000).select(
-      when(col("id") % 7 === 0, lit(null).cast("string"))
-        .otherwise((col("id") % 3).cast("string")).as("k"),
-      (col("id") % 11).cast("double").as("score"), // huge tie groups
-      col("id").as("item"))
-      // one sub-n key: 2 rows only
-      .unionByName(Seq(("tiny", 0.5, 900001L), ("tiny", 0.25, 900002L))
-        .toDF("k", "score", "item"))
-    val order = Seq(col("score").desc, col("item"))
-    val plain = topNPerKey(df, Seq("k"), order, 5)
-      .select("k", "item").as[(String, Long)].collect().toSet
-    val byValue = topNPerKeyByValue(df, Seq("k"), "score",
-        Seq(col("item")), 5)
-      .select("k", "item").as[(String, Long)].collect().toSet
-    assert(byValue === plain)
-    // the null-key group genuinely participated
-    assert(plain.exists(_._1 == null))
-  }
-
-  test("topNPerKeyByValue stays histogram-bounded on a CONTINUOUS " +
-    "value column — every row a distinct unrounded score (the r12 " +
-    "latent edge: the raw-value histogram was input-sized here)") {
-    // 40k rows, 3 hot keys, a continuous score with no two rows equal
-    val df = spark.range(40000).select(
-      (col("id") % 3).cast("string").as("k"),
-      (sin(col("id").cast("double")) * 1e9).as("score"),
-      col("id").as("item"))
-    val order = Seq(col("score").desc, col("item"))
-    val byValue = topNPerKeyByValue(df, Seq("k"), "score",
-      Seq(col("item")), 9)
-    // the first aggregate groups by the CUT BUCKET, never the raw
-    // value — the grain guard, visible in the analyzed plan
-    val planStr = byValue.queryExecution.analyzed.toString
-    assert(planStr.contains("__vb"), "value-bucket column missing " +
-      "from the plan — histogram would be input-sized")
-    val got = byValue.select("k", "item").as[(String, Long)]
-      .collect().toSet
-    val plain = topNPerKey(df, Seq("k"), order, 9)
-      .select("k", "item").as[(String, Long)].collect().toSet
-    assert(got === plain)
-  }
-
-  test("topNPerKeyByValue ranks null VALUES last, like the window " +
-    "forms — included only when a key has fewer than n non-null rows") {
-    val df = Seq(
-      ("a", Some(3.0), 1L), ("a", None, 2L), ("a", Some(1.0), 3L),
-      ("b", None, 4L), ("b", None, 5L), ("b", Some(2.0), 6L))
-      .toDF("k", "score", "item")
-    val order = Seq(col("score").desc, col("item"))
-    val plain = topNPerKey(df, Seq("k"), order, 3)
-      .select("k", "item").as[(String, Long)].collect().toSet
-    val byValue = topNPerKeyByValue(df, Seq("k"), "score",
-        Seq(col("item")), 3)
-      .select("k", "item").as[(String, Long)].collect().toSet
-    assert(byValue === plain)
-    // a null-valued row genuinely survived (key b has 1 non-null row)
-    assert(byValue.contains(("b", 4L)) && byValue.contains(("b", 5L)))
-  }
-
   test("pairWorkSalts grows with block-WORK concentration: uniform " +
     "block census derives 1, a dominant block derives a split, and " +
     "the result never exceeds the core count") {

@@ -5,197 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.io.Staging
 
-/** Store maintenance operations: upsert merge (whole-table and
-  * partition-scoped), schema-evolving append, small-file
-  * compaction. */
+/** Store maintenance operations: schema-evolving append, retention,
+  * small-file compaction, and keyed upsert/delete through
+  * [[graft.io.VersionedStore]] (whole-table and partition-scoped). */
 class StoreOpsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("mergeUpsert replaces same-key rows and appends new keys") {
-    val store = Files.createTempDirectory("graft-upsert").toString
-    Staging.overwriteParquet(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), store, "t")
-    val n = Staging.mergeUpsert(spark,
-      Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), store, "t", "id")
-    assert(n == 3)
-    val rows = Staging.readTable(spark, store, "t")
-      .as[(Long, String)].collect().toMap
-    assert(rows == Map(1L -> "a", 2L -> "b2", 3L -> "c"))
-  }
-
-  test("partition-scoped mergeUpsert rewrites only touched partitions") {
-    val store = Files.createTempDirectory("graft-upsert-p").toString
-    val init = Seq((1L, "a", "d1"), (2L, "b", "d1"), (3L, "c", "d2"))
-      .toDF("id", "v", "dt")
-    Staging.overwritePartitionsDynamic(init, store, "t", Seq("dt"))
-    val d2Before = new java.io.File(s"$store/t/dt=d2").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
-    Thread.sleep(1100)
-    // update key 2 (partition d1) and introduce key 4 in new d3
-    val n = Staging.mergeUpsert(spark,
-      Seq((2L, "b2", "d1"), (4L, "d", "d3")).toDF("id", "v", "dt"),
-      store, "t", "id", partitionCols = Seq("dt"))
-    assert(n == 4)
-    val rows = Staging.readTable(spark, store, "t")
-      .select("id", "v").as[(Long, String)].collect().toMap
-    assert(rows == Map(1L -> "a", 2L -> "b2", 3L -> "c", 4L -> "d"))
-    // untouched d2 partition files were not rewritten
-    val d2After = new java.io.File(s"$store/t/dt=d2").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
-    assert(d2After == d2Before, "untouched partition was rewritten")
-  }
-
-  test("partition-scoped mergeUpsert refuses to run over a crashed " +
-    "swap's backup dir and cleans scaffolding on success") {
-    val store = Files.createTempDirectory("graft-upsert-bak").toString
-    Staging.overwritePartitionsDynamic(
-      Seq((1L, "a", "d1")).toDF("id", "v", "dt"), store, "t", Seq("dt"))
-    // simulate a merge that died mid-swap: its backup dir survives
-    val bak = new java.io.File(s"$store/__merge_bak_t")
-    bak.mkdirs()
-    val e = intercept[IllegalArgumentException] {
-      Staging.mergeUpsert(spark,
-        Seq((2L, "b", "d1")).toDF("id", "v", "dt"),
-        store, "t", "id", partitionCols = Seq("dt"))
-    }
-    assert(e.getMessage.contains("crashed mid-swap"))
-    // store untouched by the refused run
-    assert(Staging.readTable(spark, store, "t").count() == 1)
-    // operator clears the backup → merge proceeds and removes its
-    // scaffolding (no __merge_tmp/__merge_bak left behind)
-    assert(bak.delete())
-    Staging.mergeUpsert(spark,
-      Seq((2L, "b", "d1")).toDF("id", "v", "dt"),
-      store, "t", "id", partitionCols = Seq("dt"))
-    assert(Staging.readTable(spark, store, "t").count() == 2)
-    assert(!new java.io.File(s"$store/__merge_bak_t").exists())
-    assert(!new java.io.File(s"$store/__merge_tmp_t").exists())
-  }
-
-  test("partition-scoped mergeUpsert keeps existing rows when a NEW key " +
-    "lands in an EXISTING partition") {
-    // regression: `touched` once only collected partitions holding
-    // updated store keys, so a partition receiving only brand-new keys
-    // was dynamically overwritten with just the new rows, silently
-    // deleting its survivors
-    val store = Files.createTempDirectory("graft-upsert-newkey").toString
-    Staging.overwritePartitionsDynamic(
-      Seq((1L, "a", "d1"), (2L, "b", "d1"), (3L, "c", "d2"))
-        .toDF("id", "v", "dt"), store, "t", Seq("dt"))
-    val n = Staging.mergeUpsert(spark,
-      Seq((4L, "d", "d2")).toDF("id", "v", "dt"),
-      store, "t", "id", partitionCols = Seq("dt"))
-    assert(n == 4)
-    val rows = Staging.readTable(spark, store, "t")
-      .select("id", "v").as[(Long, String)].collect().toMap
-    assert(rows == Map(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d"))
-  }
-
-  test("partition-scoped mergeUpsert clears a partition a key moved " +
-    "out of (no stale duplicate)") {
-    // regression: dynamic overwrite only replaces partitions present
-    // in the written data; a partition whose ONLY row was an updated
-    // key that moved elsewhere emits nothing and kept its stale files
-    val store = Files.createTempDirectory("graft-upsert-move").toString
-    Staging.overwritePartitionsDynamic(
-      Seq((1L, "a", "d1"), (2L, "b", "d2")).toDF("id", "v", "dt"),
-      store, "t", Seq("dt"))
-    val n = Staging.mergeUpsert(spark,
-      Seq((1L, "a2", "d2")).toDF("id", "v", "dt"),
-      store, "t", "id", partitionCols = Seq("dt"))
-    assert(n == 2)
-    val rows = Staging.readTable(spark, store, "t")
-      .select("id", "v", "dt").as[(Long, String, String)].collect().toSet
-    assert(rows == Set((1L, "a2", "d2"), (2L, "b", "d2")))
-  }
-
-  test("partition-scoped mergeUpsert clears moved-out TIMESTAMP " +
-    "partitions (directory-name rendering)") {
-    // regression: JVM Timestamp.toString renders '...00:00:00.0' but
-    // the directory is the Spark string cast '...00:00:00' — a
-    // toString-built delete path missed the stale directory
-    val store = Files.createTempDirectory("graft-upsert-ts").toString
-    val mk = (s: String) => java.sql.Timestamp.valueOf(s)
-    Staging.overwritePartitionsDynamic(
-      Seq((1L, "a", mk("2020-01-01 00:00:00")),
-        (2L, "b", mk("2020-01-02 00:00:00"))).toDF("id", "v", "ts"),
-      store, "t", Seq("ts"))
-    Staging.mergeUpsert(spark,
-      Seq((1L, "a2", mk("2020-01-02 00:00:00"))).toDF("id", "v", "ts"),
-      store, "t", "id", partitionCols = Seq("ts"))
-    val rows = Staging.readTable(spark, store, "t")
-      .select("id", "v").as[(Long, String)].collect().toMap
-    assert(rows == Map(1L -> "a2", 2L -> "b"))
-  }
-
-  test("deleteKeys removes ids; partition-scoped form rewrites only " +
-    "partitions holding a doomed key") {
-    val store = Files.createTempDirectory("graft-del").toString
-    // whole-table form
-    Staging.overwriteParquet(
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), store, "t")
-    val n = Staging.deleteKeys(spark, Seq(2L).toDF("id"), store, "t", "id")
-    assert(n == 2)
-    assert(Staging.readTable(spark, store, "t")
-      .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
-    // partition-scoped: d2 holds no doomed key → files untouched
-    val init = Seq((1L, "a", "d1"), (2L, "b", "d1"), (3L, "c", "d2"))
-      .toDF("id", "v", "dt")
-    Staging.overwritePartitionsDynamic(init, store, "p", Seq("dt"))
-    val d2Before = new java.io.File(s"$store/p/dt=d2").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
-    Thread.sleep(1100)
-    val n2 = Staging.deleteKeys(spark, Seq(1L).toDF("id"), store, "p",
-      "id", partitionCols = Seq("dt"))
-    assert(n2 == 2)
-    val d2After = new java.io.File(s"$store/p/dt=d2").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
-    assert(d2After == d2Before, "untouched partition was rewritten")
-    // deleting EVERY key of a partition clears its directory
-    Staging.deleteKeys(spark, Seq(3L).toDF("id"), store, "p",
-      "id", partitionCols = Seq("dt"))
-    assert(!new java.io.File(s"$store/p/dt=d2").exists())
-    assert(Staging.readTable(spark, store, "p")
-      .select("id").as[Long].collect().toSeq == Seq(2L))
-  }
-
-  test("partition-scoped deleteKeys keeps non-doomed rows of a " +
-    "NULL-valued partition") {
-    // regression: the survivor semi-join on partitionCols used
-    // null-UNSAFE equality, so no row of the NULL partition
-    // (__HIVE_DEFAULT_PARTITION__) ever reached `kept` — the swap then
-    // displaced the whole directory and dropped the backup, deleting
-    // rows that were never in the doomed set
-    val store = Files.createTempDirectory("graft-del-nullpart").toString
-    val init = Seq((1L, "a", Some("d1")), (3L, "c", None), (4L, "d", None))
-      .toDF("id", "v", "dt")
-    Staging.overwritePartitionsDynamic(init, store, "p", Seq("dt"))
-    val n = Staging.deleteKeys(spark, Seq(3L).toDF("id"), store, "p",
-      "id", partitionCols = Seq("dt"))
-    assert(n == 2)
-    val rows = Staging.readTable(spark, store, "p")
-      .select("id", "dt").as[(Long, Option[String])].collect().toSet
-    assert(rows == Set((1L, Some("d1")), (4L, None)))
-  }
-
-  test("deleteKeys that empties the table leaves it readable; missing " +
-    "table is a no-op") {
-    // regression: deleting the last row of every partition left a dir
-    // with only _SUCCESS → later reads threw 'Unable to infer schema'
-    val store = Files.createTempDirectory("graft-del-all").toString
-    Staging.overwritePartitionsDynamic(
-      Seq((1L, "a", "d1"), (2L, "b", "d2")).toDF("id", "v", "dt"),
-      store, "p", Seq("dt"))
-    val n = Staging.deleteKeys(spark, Seq(1L, 2L).toDF("id"), store, "p",
-      "id", partitionCols = Seq("dt"))
-    assert(n == 0)
-    val emptied = Staging.readTable(spark, store, "p")
-    assert(emptied.count() == 0)
-    assert(emptied.columns.toSet == Set("id", "v", "dt"))
-    // a table that was never created is "nothing to delete", not an error
-    assert(Staging.deleteKeys(spark, Seq(1L).toDF("id"), store,
-      "never_created", "id") == 0L)
-  }
 
   test("schema-evolving append surfaces new columns as NULL on old rows") {
     val store = Files.createTempDirectory("graft-evolve").toString
@@ -241,156 +55,16 @@ class StoreOpsSpec extends SparkSpec {
     val after = Staging.readTable(spark, store, "t")
       .as[(Long, String)].collect().toSet
     assert(after == before)
-  }
-
-  // ---------------------------------------------------------------
-  // Crash-window drills: a rename FAILS mid-swap (via the test-only
-  // Staging.renameFailpoint, simulating Hadoop's `false` return) and
-  // the documented invariant must hold — every touched partition's
-  // data sits in exactly one recoverable state (store-new, or
-  // store-old, or bak-old + tmp-new), no partition mixes old and new
-  // rows, untouched partitions are untouched, and moving the backup
-  // partitions back restores the exact pre-operation table.
-  // ---------------------------------------------------------------
-
-  /** (id, v) rows of one partition of store/t, by dt value. */
-  private def partRows(store: String, dt: String): Set[(Long, String)] = {
-    val dir = new java.io.File(s"$store/t/dt=$dt")
-    if (!dir.exists()) Set.empty
-    else spark.read.parquet(dir.toString)
-      .select("id", "v").as[(Long, String)].collect().toSet
-  }
-
-  /** Roll the interrupted swap BACK: restore displaced partitions
-    * from the backup dir, drop the scaffolding. */
-  private def rollBack(store: String): Unit = {
-    val bak = new java.io.File(s"$store/__merge_bak_t")
-    Option(bak.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("dt="))
-      .foreach { p =>
-        val dst = new java.io.File(s"$store/t/${p.getName}")
-        if (dst.exists()) {
-          dst.listFiles().foreach(_.delete()); dst.delete()
-        }
-        assert(p.renameTo(dst), s"rollback of ${p.getName} failed")
-      }
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr)
-      f.delete()
+    // a complete temp left by a compaction that died between its store
+    // delete and rename: refuse, and leave the table as it is
+    val tmp = new java.io.File(s"$store/__compact_tmp_t")
+    tmp.mkdirs()
+    assert(new java.io.File(tmp, "_SUCCESS").createNewFile())
+    intercept[IllegalStateException] {
+      Staging.compactTable(spark, store, "t", targetFileMB = 128)
     }
-    rmr(bak); rmr(new java.io.File(s"$store/__merge_tmp_t"))
-  }
-
-  test("mergeUpsert swap interrupted by a failed rename leaves every " +
-    "partition old XOR new and rolls back to the pre-merge table") {
-    val store = Files.createTempDirectory("graft-crash-merge").toString
-    val initial = Set((1L, "a", "d1"), (2L, "b", "d1"), (3L, "c", "d2"),
-      (4L, "d", "d3"), (9L, "z", "d9"))
-    Staging.overwritePartitionsDynamic(
-      initial.toSeq.toDF("id", "v", "dt"), store, "t", Seq("dt"))
-    val d9Before = new java.io.File(s"$store/t/dt=d9").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
-    val olds = Map(
-      "d1" -> Set(1L -> "a", 2L -> "b"), "d2" -> Set(3L -> "c"),
-      "d3" -> Set(4L -> "d"))
-    val news = Map(
-      "d1" -> Set(1L -> "a", 2L -> "b2"), "d2" -> Set(3L -> "c2"),
-      "d3" -> Set(4L -> "d2"))
-    // fail the store-ward rename of partition d2 (not its backup move)
-    Staging.renameFailpoint =
-      dst => dst.endsWith("/t/dt=d2")
-    try {
-      val e = intercept[java.io.IOException] {
-        Staging.mergeUpsert(spark,
-          Seq((2L, "b2", "d1"), (3L, "c2", "d2"), (4L, "d2", "d3"))
-            .toDF("id", "v", "dt"),
-          store, "t", "id", partitionCols = Seq("dt"))
-      }
-      assert(e.getMessage.contains("merge aborted"))
-    } finally Staging.renameFailpoint = null
-    // the staged new state is complete and durable in the temp dir
-    assert(new java.io.File(s"$store/__merge_tmp_t/_SUCCESS").exists())
-    // every touched partition sits in exactly one recoverable state
-    // (a swapped partition's new dir was MOVED from tmp into the
-    // store, so tmp only holds not-yet-swapped partitions):
-    //   swapped:      store=new, bak=old
-    //   not reached:  store=old, tmp=new
-    //   failed mid:   store gone, bak=old, tmp=new
-    // — and never a mix of old and new rows in one partition
-    Seq("d1", "d2", "d3").foreach { dt =>
-      def rowsAt(dir: String): Set[(Long, String)] = {
-        val f = new java.io.File(dir)
-        if (!f.exists()) Set.empty
-        else spark.read.parquet(dir)
-          .select("id", "v").as[(Long, String)].collect().toSet
-      }
-      val inStore = partRows(store, dt)
-      val inBak = rowsAt(s"$store/__merge_bak_t/dt=$dt")
-      val inTmp = rowsAt(s"$store/__merge_tmp_t/dt=$dt")
-      if (inStore == news(dt))
-        assert(inBak == olds(dt), s"$dt swapped but backup holds $inBak")
-      else if (inStore == olds(dt))
-        assert(inTmp == news(dt), s"$dt unswapped but temp holds $inTmp")
-      else {
-        assert(inStore.isEmpty, s"$dt mixes old and new rows: $inStore")
-        assert(inBak == olds(dt) && inTmp == news(dt),
-          s"$dt lost from store; bak=$inBak tmp=$inTmp")
-      }
-    }
-    // untouched partition: same files, untouched
-    val d9After = new java.io.File(s"$store/t/dt=d9").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
-    assert(d9After == d9Before)
-    // operator rollback from the backup restores the pre-merge table
-    rollBack(store)
-    val restored = Staging.readTable(spark, store, "t")
-      .select("id", "v", "dt").as[(Long, String, String)].collect().toSet
-    assert(restored == initial)
-  }
-
-  test("deleteKeys swap interrupted by a failed displacement leaves " +
-    "the doomed partition intact and re-runs to completion after " +
-    "rollback") {
-    val store = Files.createTempDirectory("graft-crash-del").toString
-    val initial = Set((1L, "a", "d1"), (2L, "b", "d1"), (3L, "c", "d2"),
-      (4L, "d", "d3"))
-    Staging.overwritePartitionsDynamic(
-      initial.toSeq.toDF("id", "v", "dt"), store, "t", Seq("dt"))
-    // keys 2 (mixed partition d1) and 3 (all of d2): d1 re-emits its
-    // survivor, d2 empties and is DISPLACED to backup — fail that
-    // displacement (dst under the backup dir)
-    Staging.renameFailpoint =
-      dst => dst.contains("__merge_bak_t") && dst.endsWith("dt=d2")
-    try {
-      intercept[java.io.IOException] {
-        Staging.deleteKeys(spark, Seq(2L, 3L).toDF("id"),
-          store, "t", "id", partitionCols = Seq("dt"))
-      }
-    } finally Staging.renameFailpoint = null
-    // d2's displacement failed BEFORE its rename: still whole in store
-    assert(partRows(store, "d2") == Set(3L -> "c"))
-    // d1 was already swapped (new in store, old in backup) — old XOR
-    // new, both recoverable
-    assert(partRows(store, "d1") == Set(1L -> "a"))
-    assert(spark.read.parquet(s"$store/__merge_bak_t/dt=d1")
-      .select("id", "v").as[(Long, String)].collect().toSet ==
-      Set(1L -> "a", 2L -> "b"))
-    // untouched d3 intact
-    assert(partRows(store, "d3") == Set(4L -> "d"))
-    // rollback restores the exact pre-delete table, then the re-run
-    // completes and clears its scaffolding
-    rollBack(store)
     assert(Staging.readTable(spark, store, "t")
-      .select("id", "v", "dt").as[(Long, String, String)]
-      .collect().toSet == initial)
-    val n = Staging.deleteKeys(spark, Seq(2L, 3L).toDF("id"),
-      store, "t", "id", partitionCols = Seq("dt"))
-    assert(n == 2)
-    assert(Staging.readTable(spark, store, "t")
-      .select("id", "v", "dt").as[(Long, String, String)]
-      .collect().toSet == Set((1L, "a", "d1"), (4L, "d", "d3")))
-    assert(!new java.io.File(s"$store/__merge_bak_t").exists())
-    assert(!new java.io.File(s"$store/__merge_tmp_t").exists())
+      .as[(Long, String)].collect().toSet == before)
   }
 
   // ---------------------------------------------------------------
@@ -485,6 +159,18 @@ class StoreOpsSpec extends SparkSpec {
     VersionedStore.commit(spark, Seq((3L, "c")).toDF("id", "v"),
       store, "t", Some("b3"))
     assert(new java.io.File(s"$store/t/_MANIFEST").exists())
+  }
+
+  test("mergeUpsert replaces same-key rows and appends new keys") {
+    val store = Files.createTempDirectory("graft-upsert").toString
+    VersionedStore.commit(spark,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), store, "t")
+    val n = VersionedStore.mergeUpsert(spark,
+      Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), store, "t", "id")
+    assert(n == 3)
+    val rows = VersionedStore.readTable(spark, store, "t")
+      .as[(Long, String)].collect().toMap
+    assert(rows == Map(1L -> "a", 2L -> "b2", 3L -> "c"))
   }
 
   // ---------------------------------------------------------------
@@ -643,6 +329,146 @@ class StoreOpsSpec extends SparkSpec {
     assert(VersionedStore.readTable(spark, store, "t")
       .select("id", "v", "dt").as[(Long, String, String)]
       .collect().toSeq == Seq((5L, "e", "d2")))
+  }
+
+  test("partition-scoped mergeUpsert rewrites only touched partitions") {
+    val store = Files.createTempDirectory("graft-upsert-p").toString
+    VersionedStore.commitPartitioned(spark,
+      Seq((1L, "a", "d1"), (2L, "b", "d1"), (3L, "c", "d2"))
+        .toDF("id", "v", "dt"), store, "t", "dt")
+    val d2Before = vPartFiles(store, "t", "_v_0000001", "dt=d2")
+    // update key 2 (partition d1) and introduce key 4 in new d3
+    val n = VersionedStore.mergeUpsertPartitioned(spark,
+      Seq((2L, "b2", "d1"), (4L, "d", "d3")).toDF("id", "v", "dt"),
+      store, "t", "id", "dt")
+    assert(n == 4)
+    val rows = VersionedStore.readTable(spark, store, "t")
+      .select("id", "v").as[(Long, String)].collect().toMap
+    assert(rows == Map(1L -> "a", 2L -> "b2", 3L -> "c", 4L -> "d"))
+    // untouched d2 is still read from version 1's files
+    assert(vPartFiles(store, "t", "_v_0000001", "dt=d2") == d2Before,
+      "untouched partition was rewritten")
+    assert(VersionedStore.ownerVersionCount(spark, store, "t") == 2)
+  }
+
+  test("partition-scoped mergeUpsert keeps existing rows when a NEW key " +
+    "lands in an EXISTING partition") {
+    // the touched set must include the partitions the updates write
+    // INTO, not only those holding updated store keys, or a partition
+    // receiving only brand-new keys loses its survivors
+    val store = Files.createTempDirectory("graft-upsert-newkey").toString
+    VersionedStore.commitPartitioned(spark,
+      Seq((1L, "a", "d1"), (2L, "b", "d1"), (3L, "c", "d2"))
+        .toDF("id", "v", "dt"), store, "t", "dt")
+    val n = VersionedStore.mergeUpsertPartitioned(spark,
+      Seq((4L, "d", "d2")).toDF("id", "v", "dt"), store, "t", "id", "dt")
+    assert(n == 4)
+    val rows = VersionedStore.readTable(spark, store, "t")
+      .select("id", "v").as[(Long, String)].collect().toMap
+    assert(rows == Map(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d"))
+  }
+
+  test("partition-scoped mergeUpsert clears a partition a key moved " +
+    "out of (no stale duplicate)") {
+    // a partition whose ONLY row was an updated key that moved
+    // elsewhere emits nothing; it must leave the manifest, not keep
+    // its old files live
+    val store = Files.createTempDirectory("graft-upsert-move").toString
+    VersionedStore.commitPartitioned(spark,
+      Seq((1L, "a", "d1"), (2L, "b", "d2")).toDF("id", "v", "dt"),
+      store, "t", "dt")
+    val n = VersionedStore.mergeUpsertPartitioned(spark,
+      Seq((1L, "a2", "d2")).toDF("id", "v", "dt"), store, "t", "id", "dt")
+    assert(n == 2)
+    val rows = VersionedStore.readTable(spark, store, "t")
+      .select("id", "v", "dt").as[(Long, String, String)].collect().toSet
+    assert(rows == Set((1L, "a2", "d2"), (2L, "b", "d2")))
+  }
+
+  test("partition-scoped mergeUpsert clears moved-out TIMESTAMP " +
+    "partitions (directory-name rendering)") {
+    // JVM Timestamp.toString renders '...00:00:00.0' but the directory
+    // is the Spark string cast '...00:00:00', escaped — a toString-
+    // built directory name misses the moved-out partition
+    val store = Files.createTempDirectory("graft-upsert-ts").toString
+    val mk = (s: String) => java.sql.Timestamp.valueOf(s)
+    VersionedStore.commitPartitioned(spark,
+      Seq((1L, "a", mk("2020-01-01 00:00:00")),
+        (2L, "b", mk("2020-01-02 00:00:00"))).toDF("id", "v", "ts"),
+      store, "t", "ts")
+    VersionedStore.mergeUpsertPartitioned(spark,
+      Seq((1L, "a2", mk("2020-01-02 00:00:00"))).toDF("id", "v", "ts"),
+      store, "t", "id", "ts")
+    val rows = VersionedStore.readTable(spark, store, "t")
+      .select("id", "v", "ts").as[(Long, String, java.sql.Timestamp)]
+      .collect().toSet
+    assert(rows == Set((1L, "a2", mk("2020-01-02 00:00:00")),
+      (2L, "b", mk("2020-01-02 00:00:00"))))
+  }
+
+  test("deleteKeys removes ids; partition-scoped form rewrites only " +
+    "partitions holding a doomed key") {
+    val store = Files.createTempDirectory("graft-del").toString
+    // whole-table form
+    VersionedStore.commit(spark,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), store, "t")
+    val n = VersionedStore.deleteKeys(spark, Seq(2L).toDF("id"),
+      store, "t", "id")
+    assert(n == 2)
+    assert(VersionedStore.readTable(spark, store, "t")
+      .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+    // partition-scoped: d2 holds no doomed key → its files carry forward
+    VersionedStore.commitPartitioned(spark,
+      Seq((1L, "a", "d1"), (2L, "b", "d1"), (3L, "c", "d2"))
+        .toDF("id", "v", "dt"), store, "p", "dt")
+    val d2Before = vPartFiles(store, "p", "_v_0000001", "dt=d2")
+    val n2 = VersionedStore.deleteKeysPartitioned(spark,
+      Seq(1L).toDF("id"), store, "p", "id")
+    assert(n2 == 2)
+    assert(vPartFiles(store, "p", "_v_0000001", "dt=d2") == d2Before,
+      "untouched partition was rewritten")
+    // deleting EVERY key of a partition drops it from the table
+    VersionedStore.deleteKeysPartitioned(spark, Seq(3L).toDF("id"),
+      store, "p", "id")
+    val rows = VersionedStore.readTable(spark, store, "p")
+      .select("id", "dt").as[(Long, String)].collect().toSeq
+    assert(rows == Seq(2L -> "d1"))
+  }
+
+  test("partition-scoped deleteKeys keeps non-doomed rows of a " +
+    "NULL-valued partition") {
+    // the NULL partition (__HIVE_DEFAULT_PARTITION__) must match its
+    // manifest entry, or its survivors are never re-emitted; here a
+    // second partition empties in the same delete
+    val store = Files.createTempDirectory("graft-del-nullpart").toString
+    VersionedStore.commitPartitioned(spark,
+      Seq((1L, "a", Some("d1")), (2L, "b", None), (3L, "c", None),
+        (4L, "d", None)).toDF("id", "v", "dt"), store, "p", "dt")
+    val n = VersionedStore.deleteKeysPartitioned(spark,
+      Seq(1L, 3L).toDF("id"), store, "p", "id")
+    assert(n == 2)
+    val rows = VersionedStore.readTable(spark, store, "p")
+      .select("id", "dt").as[(Long, Option[String])].collect().toSet
+    assert(rows == Set((2L, None), (4L, None)))
+  }
+
+  test("deleteKeys that empties the table leaves it readable; missing " +
+    "table is a no-op") {
+    val store = Files.createTempDirectory("graft-del-all").toString
+    VersionedStore.commitPartitioned(spark,
+      Seq((1L, "a", "d1"), (2L, "b", "d2")).toDF("id", "v", "dt"),
+      store, "p", "dt")
+    val n = VersionedStore.deleteKeysPartitioned(spark,
+      Seq(1L, 2L).toDF("id"), store, "p", "id")
+    assert(n == 0)
+    val emptied = VersionedStore.readTable(spark, store, "p")
+    assert(emptied.count() == 0)
+    assert(emptied.columns.toSet == Set("id", "v", "dt"))
+    // a table that was never created is "nothing to delete", not an error
+    assert(VersionedStore.deleteKeysPartitioned(spark, Seq(1L).toDF("id"),
+      store, "never_created", "id") == 0L)
+    assert(VersionedStore.deleteKeys(spark, Seq(1L).toDF("id"),
+      store, "never_created", "id") == 0L)
   }
 
   test("partitioned versioned store: full protocol on the copy+delete-" +
