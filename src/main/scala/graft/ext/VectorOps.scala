@@ -341,9 +341,9 @@ object VectorOps {
     val base = corpus.select(
       (col(idCol) +: col(vecCol) +: blockCols.map(col)): _*)
     // persisted only when the salt is census-DERIVED (the derive
-    // collect + prune join double-read — the ngramJaccardPairs census
-    // note); with a pinned salt the census has one consumer and a
-    // cache would be pure overhead.
+    // collect + prune join double-read — the DedupOps.blockedPairs
+    // census note); with a pinned salt the census has one consumer
+    // and a cache would be pure overhead.
     val blockCensusRaw = corpus.groupBy(blockCols.map(col): _*)
       .agg(count(lit(1)).as("__bsz"))
       .filter(col("__bsz") <= maxBlockSize && col("__bsz") > 1)

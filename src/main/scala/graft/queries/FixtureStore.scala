@@ -133,10 +133,13 @@ object FixtureStore {
   private def isLocalPin(r: RDD[_]): Boolean =
     r.isCheckpointed && r.getCheckpointFile.isEmpty
 
-  /** Drop every cached RDD except local checkpoints — the one
-    * inter-query cache clear (`graft.Bench` between timed queries and
-    * after its parallel warmup; `graft.tools.TimeQuery` before each
-    * timed run). Registry queries persist intermediates, but an
+  /** Clear the CacheManager, then drop every cached RDD except local
+    * checkpoints — the one inter-query cache clear (`graft.Bench`
+    * between timed queries and after its parallel warmup;
+    * `graft.tools.TimeQuery` before each timed run). The catalog clear
+    * comes first so a later run cannot be served an earlier run's
+    * cached blocks through the CacheManager (skipping it hid a 2.2×
+    * regression in r17). Registry queries persist intermediates, but an
     * invocation cannot unpersist frames its returned plan still
     * depends on — so every execution leaves its caches pinned in
     * `persistentRdds`: MEMORY_AND_DISK blocks on disk AND their
@@ -163,8 +166,10 @@ object FixtureStore {
     * recomputes. Per-invocation checkpoint frames stay small (k-row
     * accounting / centroid / superstep frames) and the ContextCleaner
     * reclaims them on GC once unreferenced. */
-  def clearRddCaches(spark: SparkSession): Unit =
+  def clearRddCaches(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .filterNot(isLocalPin)
       .foreach(_.unpersist(blocking = false))
+  }
 }

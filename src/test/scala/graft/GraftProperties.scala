@@ -254,30 +254,6 @@ object GraftProperties extends Properties("graft") {
     } yield toks.mkString(" "))
   } yield rows.zipWithIndex.map { case (t, i) => (i.toLong, t) }
 
-  property("containmentPairs matches the model's set containment " +
-    "in both directions") =
-    forAll(docGen, Gen.oneOf(0.3, 0.6, 0.9)) { (rows, thr) =>
-      val nonEmpty = rows.filter(_._2.trim.nonEmpty)
-      val df = nonEmpty.map { case (id, t) => (id, t, "x", "y") }
-        .toDF("doc_id", "text", "lang", "source")
-      val got = graft.ext.DedupOps.containmentPairs(df, "doc_id",
-          "text", Seq("lang", "source"), thr)
-        .select("id_a", "id_b", "containment_a", "containment_b")
-        .as[(Long, Long, Double, Double)].collect()
-        .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
-      val sets = nonEmpty.map { case (id, t) =>
-        id -> t.trim.toLowerCase.split("\\s+").toSet }.toMap
-      def rnd(x: Double) = BigDecimal(x)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val want = (for {
-        (a, sa) <- sets; (b, sb) <- sets if a < b
-        i = (sa intersect sb).size.toDouble
-        ca = rnd(i / sa.size); cb = rnd(i / sb.size)
-        if ca >= thr || cb >= thr
-      } yield (a, b) -> (ca, cb)).toMap
-      got == want
-    }
-
   property("audioSegmentFeatures covers every PCM sample exactly " +
     "once with model-exact per-window RMS") =
     forAll(
@@ -364,6 +340,51 @@ object GraftProperties extends Properties("graft") {
           df, "doc_id", "text", threshold = t)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       got == want
+    }
+
+  /** Both blocked measures on one block against the model's token
+    * sets: [[graft.ext.DedupOps.containmentPairs]] at `thr` (kept when
+    * either direction reaches it) and
+    * [[graft.ext.DedupOps.ngramJaccardPairs]] (every pair). */
+  private def blockedMatchModel(rows: List[(Long, String)],
+                                thr: Double): Boolean = {
+    val nonEmpty = rows.filter(_._2.trim.nonEmpty)
+    val df = nonEmpty.map { case (id, t) => (id, t, "x", "y") }
+      .toDF("doc_id", "text", "lang", "source")
+    val gotC = graft.ext.DedupOps.containmentPairs(df, "doc_id",
+        "text", Seq("lang", "source"), thr)
+      .select("id_a", "id_b", "containment_a", "containment_b")
+      .as[(Long, Long, Double, Double)].collect()
+      .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
+    val gotJ = graft.ext.DedupOps.ngramJaccardPairs(df, "doc_id",
+        "text", Seq("lang", "source"))
+      .select("id_a", "id_b", "jaccard")
+      .as[(Long, Long, Double)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    val sets = nonEmpty.map { case (id, t) =>
+      id -> t.trim.toLowerCase.split("\\s+").toSet }.toMap
+    def rnd(x: Double) = BigDecimal(x)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val overlaps = for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b
+    } yield ((a, b), (sa intersect sb).size.toDouble, sa.size, sb.size)
+    val wantC = (for {
+      (ab, i, na, nb) <- overlaps
+      ca = rnd(i / na); cb = rnd(i / nb)
+      if ca >= thr || cb >= thr
+    } yield ab -> (ca, cb)).toMap
+    val wantJ = overlaps.map { case (ab, i, na, nb) =>
+      ab -> rnd(i / (na + nb - i)) }.toMap
+    gotC == wantC && gotJ == wantJ
+  }
+
+  // the 6-token docGen corpus runs the blocked pairs on 63-bit masks,
+  // the 80-token bigCorpusGen corpus on sorted token arrays
+  property("containmentPairs matches the model's set containment " +
+    "in both directions") =
+    forAll(docGen, bigCorpusGen, Gen.oneOf(0.3, 0.6, 0.9)) {
+      (small, big, thr) =>
+        blockedMatchModel(small, thr) && blockedMatchModel(big, thr)
     }
 
   private val spanDocGen: Gen[List[String]] = Gen.listOfN(8,

@@ -12,10 +12,9 @@ class OracleSpec extends SparkSpec {
 
   private val d = "/root/testdata/sf0.001"
 
-  test("store family matches the DuckDB oracle: delete_keys, " +
-    "versioned_store, versioned_store_partitioned, incremental_rollup") {
-    val names = Seq("delete_keys", "versioned_store",
-      "versioned_store_partitioned", "incremental_rollup")
+  /** Dumps `names` over sf0.001 with [[Verify.dump]] and asserts
+    * `tools/check.py` passes every one of them. */
+  private def assertOracle(names: Seq[String]): Unit = {
     val out = Files.createTempDirectory("graft-oracle").toString
     Verify.dump(spark, d, out, names.toSet)
     val log = new StringBuilder
@@ -26,5 +25,20 @@ class OracleSpec extends SparkSpec {
     // a query that throws is left out of the dump and check.py only
     // compares what is there, so every name must count as a pass
     assert(log.toString.contains(s"PASS ${names.size} / FAIL 0"), log)
+  }
+
+  test("store family matches the DuckDB oracle: delete_keys, " +
+    "versioned_store, versioned_store_partitioned, incremental_rollup") {
+    assertOracle(Seq("delete_keys", "versioned_store",
+      "versioned_store_partitioned", "incremental_rollup"))
+  }
+
+  test("exact set-pair and span family matches the DuckDB oracle: " +
+    "both measures on the dense and prefix cores, the blocked tiers, " +
+    "the span ops") {
+    assertOracle(Seq("jaccard_pairs_prefix", "jaccard_pairs_bigvocab",
+      "containment_pairs_prefix", "containment_pairs_bigvocab",
+      "containment_dedup", "ngram_jaccard_topk", "dup_span_coverage",
+      "dup_span_strip"))
   }
 }

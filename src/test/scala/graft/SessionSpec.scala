@@ -49,6 +49,10 @@ class SessionSpec extends SparkSpec {
     val after = persisted
     assert(plainIds.intersect(after).isEmpty,
       s"plain persist survived the clear: $plainIds")
+    // the catalog side of the clear: no CacheManager entry is left to
+    // serve a later run the plain persist's plan
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the clear left a CacheManager entry")
     assert(pinIds.subsetOf(after), s"pin dropped by the clear: $pinIds")
     // the lineage-truncated pin still reads: its blocks are its only copy
     assert(pinned.orderBy("k").collect().toSeq == expected)

@@ -518,6 +518,63 @@ class StreamingSpec extends SparkSpec {
     assert(served === oneShot)
   }
 
+  test("count-stream lineage guard: a fresh checkpoint starting at " +
+    "epoch 0 on a store at batch 1 fails the query; a replay of the " +
+    "latest epoch passes") {
+    implicit val ctx = spark.sqlContext
+    val root = Files.createTempDirectory("graft-lineage")
+    val store = root.resolve("store").toString
+    val ckpt = root.resolve("ckpt").toString
+    val rows = Seq((1L, "a b c a b"), (2L, "a c b"), (3L, "b c a b c"))
+    val docs = MemoryStream[(Long, String)]
+    def start(src: MemoryStream[(Long, String)], ck: String) =
+      StreamingOps.bigramCountStream(src.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", store).option("checkpointLocation", ck).start()
+    docs.addData(rows.take(1): _*); start(docs, ckpt).awaitTermination()
+    // epoch 1: the store append lands, then the process dies before
+    // the epoch commit — the store is at batch 1, the checkpoint at 0
+    docs.addData(rows.drop(1): _*)
+    val crash = docs.toDF().toDF("doc_id", "text").writeStream
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, epoch: Long) =>
+        graft.ext.TextOps.updateBigramCounts(b, "doc_id", "text", store,
+          batchId = epoch)
+        throw new RuntimeException("killed after append, before commit")
+      }
+      .option("checkpointLocation", ckpt).start()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      crash.awaitTermination()
+    }
+    def storeMax = graft.io.CountLog.maxBatchId(spark, store,
+      "bigram_counts")
+    assert(storeMax == Some(1L))
+    def served = graft.ext.TextOps
+      .bigramLmScoresFromStore(rows.toDF("doc_id", "text"),
+        "doc_id", "text", store)
+      .orderBy("doc_id").select("doc_id", "n_bigrams", "lm_logprob")
+      .as[(Long, Long, Double)].collect().toSeq
+    val oneShot = graft.ext.TextOps
+      .bigramLmScores(rows.toDF("doc_id", "text"), "doc_id", "text")
+      .orderBy("doc_id").select("doc_id", "n_bigrams", "lm_logprob")
+      .as[(Long, Long, Double)].collect().toSeq
+    // a fresh checkpoint on the same store restarts at epoch 0
+    val reset = MemoryStream[(Long, String)]
+    reset.addData((9L, "c a b"))
+    val err = intercept[
+        org.apache.spark.sql.streaming.StreamingQueryException] {
+      start(reset, root.resolve("ckpt2").toString).awaitTermination()
+    }
+    assert(err.getMessage.contains(
+      "bigramCountStream epoch 0 < store max batch 1"), err.getMessage)
+    assert(storeMax == Some(1L))
+    assert(served === oneShot, "the refused batch touched the store")
+    // the original checkpoint replays its uncommitted epoch 1 — equal
+    // to the store max, so the guard lets it through
+    start(docs, ckpt).awaitTermination()
+    assert(storeMax == Some(1L))
+    assert(served === oneShot)
+  }
+
   test("classifierCountStream maintains the classifier count store " +
     "epoch-keyed: streamed model scores equal the one-shot fit, " +
     "replayed epoch changes nothing") {
