@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.IndependentJobs
 import graft.io.Staging
 import graft.ops.{Relational, Scalars}
 import graft.schema.Schemas
@@ -16,6 +17,11 @@ import graft.schema.Schemas
   * builds are single-shuffle (dedupe or distinct) or shuffle-free
   * (project+filter) — at 100 TB the facts stream through scan→project→
   * filter with no wide dependency at all.
+  *
+  * The store is read with the declared operational schemas
+  * (`Schemas.operational`), so no read pays a schema-inference job:
+  * the store holds what `OperationalLoad` appends, which is exactly
+  * those columns and types.
   */
 object MartBuild {
 
@@ -171,7 +177,7 @@ object MartBuild {
   def runFactsPartitioned(spark: SparkSession, storeDir: String,
                           martDir: String,
                           dates: Seq[String] = Nil): Map[String, Long] = {
-    def t(name: String) = Staging.readTable(spark, storeDir, name)
+    def t(name: String) = storeTable(spark, storeDir, name)
     val facts: Seq[(String, DataFrame, String)] = Seq(
       ("fact_maps", factMaps(t("reviews")), "timestamp_datetime"),
       ("fact_twitter", factTwitter(t("tweets"), t("places")),
@@ -193,16 +199,17 @@ object MartBuild {
   }
 
   /** Build all 11 mart tables from the operational store and
-    * truncate-load each (reference WRITE_TRUNCATE). Returns loaded row
-    * counts. */
+    * truncate-load each (reference WRITE_TRUNCATE), the 11 writes side
+    * by side ([[graft.IndependentJobs]]): each reads only the store.
+    * Returns loaded row counts. */
   def run(spark: SparkSession, storeDir: String,
-          martDir: String): Map[String, Long] = {
-    builds(spark, storeDir).map { case (name, df) =>
-      Staging.overwriteParquet(df, martDir, name)
-      name -> graft.io.ParquetFooters.rowCount(spark,
-        Seq(s"$martDir/$name"))
-    }.toMap
-  }
+          martDir: String): Map[String, Long] =
+    IndependentJobs.run(builds(spark, storeDir).map { case (name, df) =>
+      name -> { () =>
+        Staging.overwriteParquet(df, martDir, name)
+        graft.io.ParquetFooters.rowCount(spark, Seq(s"$martDir/$name"))
+      }
+    })
 
   /** Atomic form of [[run]]: build all 11 tables, publish them as ONE
     * mart commit ([[graft.io.MartStore.publishAll]]) — a reader
@@ -216,9 +223,15 @@ object MartBuild {
     graft.io.MartStore.publishAll(spark, builds(spark, storeDir),
       martDir, batchId)
 
+  /** An operational store table, read with its declared schema. */
+  private def storeTable(spark: SparkSession, storeDir: String,
+                         name: String): DataFrame =
+    spark.read.schema(Schemas.operational(name))
+      .parquet(s"$storeDir/$name")
+
   private def builds(spark: SparkSession,
                      storeDir: String): Seq[(String, DataFrame)] = {
-    def t(name: String) = Staging.readTable(spark, storeDir, name)
+    def t(name: String) = storeTable(spark, storeDir, name)
     val (places, reviews, tweets) = (t("places"), t("reviews"), t("tweets"))
     val (pemasukan, pengeluaran) = (t("pemasukan"), t("pengeluaran"))
     Seq(

@@ -1,7 +1,10 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
+import graft.IndependentJobs
 import graft.io.{JdbcStore, Staging}
 import graft.ops.Relational
 import graft.schema.Schemas
@@ -17,6 +20,13 @@ import graft.schema.Schemas
   * driver-side Python set — the "is it new" check here is a
   * distributed left-anti join against the store's key column only
   * (column-pruned parquet scan, broadcastable when small).
+  *
+  * A load starts no job it does not use. The store's key column is
+  * read with a requested one-column schema (the batch's own key
+  * field), so no schema-inference job runs on the store. Emptiness is
+  * decided by [[Staging.readCsvPrefix]]'s file probe: a prefix with
+  * no CSV reads as an empty local relation, which [[load]] recognises
+  * from the plan alone, and no CSV scan runs just to ask.
   */
 object OperationalLoad {
 
@@ -29,7 +39,9 @@ object OperationalLoad {
                 selectColumns: Seq[String] = Nil): Long =
     load(df, idColumn, columnMapping, selectColumns,
       Option.when(Staging.tableExists(spark, storeDir, table))(
-        Staging.readTable(spark, storeDir, table)))(
+        spark.read.schema(StructType(Seq(
+            df.schema(idColumn).copy(nullable = true))))
+          .parquet(s"$storeDir/$table")))(
       Staging.appendParquet(_, storeDir, table))
 
   /** [[loadIfNew]] against a JDBC operational store — the fidelity
@@ -50,14 +62,14 @@ object OperationalLoad {
       JdbcStore.append(_, url, table))
 
   /** The one load pipeline behind both sinks. `existing` (the store's
-    * rows or keys, None when the table is absent) is by-name so an
-    * empty batch never probes the store. */
+    * keys, None when the table is absent) is by-name so an empty batch
+    * never probes the store. */
   private def load(df: DataFrame, idColumn: String,
                    columnMapping: Map[String, String],
                    selectColumns: Seq[String],
                    existing: => Option[DataFrame])
                   (append: DataFrame => Unit): Long = {
-    if (df.isEmpty) return 0L
+    if (provablyEmpty(df)) return 0L
     var d = Relational.dedupeByKey(df, idColumn)
     if (columnMapping.nonEmpty) d = Relational.renameAll(d, columnMapping)
     if (selectColumns.nonEmpty) d = Relational.selectExisting(d, selectColumns)
@@ -74,45 +86,52 @@ object OperationalLoad {
     obs.get("n").asInstanceOf[Long]
   }
 
-  /** The five table loads (reference transformation_db.py:124-162). */
+  /** True when the optimized plan is an empty local relation — an
+    * answer from the plan alone, with no Spark job. A batch that only
+    * turns out empty when scanned runs the load and appends 0 rows. */
+  private def provablyEmpty(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => l.data.isEmpty
+      case _                => false
+    }
+
+  /** The five table loads (reference transformation_db.py:124-162),
+    * run side by side ([[graft.IndependentJobs]]): no load reads
+    * another's table. */
   def run(spark: SparkSession, stagingDir: String,
           storeDir: String): Map[String, Long] = {
     Schemas.operational.foreach { case (t, s) =>
       Staging.ensureTable(spark, storeDir, t, s)
     }
-    val placesRaw = Staging.readCsvPrefix(
-      spark, s"$stagingDir/places", Schemas.stagingPlaces)
+    def staged(t: String, schema: StructType) =
+      Staging.readCsvPrefix(spark, s"$stagingDir/$t", schema)
     // The reference merges search + detail records before staging
     // (extraction.py:139-148, E5 coalesce). Our staging schema keeps
     // both; apply the coalesce here so the store sees final columns.
     val places = {
       import org.apache.spark.sql.functions.col
       import graft.ops.Scalars
-      placesRaw
+      staged("places", Schemas.stagingPlaces)
         .withColumn("name",
           Scalars.coalesceNonEmpty(col("name_detail"), col("name")))
         .withColumn("types", col("types_detail"))
         .withColumn("lat", col("lat_detail"))
         .withColumn("lng", col("lng_detail"))
     }
-    Map(
-      "places" -> loadIfNew(spark, places, storeDir, "places", "place_id",
-        selectColumns = Schemas.places.fieldNames.toSeq),
-      "reviews" -> loadIfNew(spark,
-        Staging.readCsvPrefix(spark, s"$stagingDir/reviews",
-          Schemas.stagingReviews),
-        storeDir, "reviews", "id_review"),
-      "tweets" -> loadIfNew(spark,
-        Staging.readCsvPrefix(spark, s"$stagingDir/tweets",
-          Schemas.stagingTweets),
-        storeDir, "tweets", "id_tweet"),
-      "pemasukan" -> loadIfNew(spark,
-        Staging.readCsvPrefix(spark, s"$stagingDir/pemasukan",
-          Schemas.stagingPemasukan),
-        storeDir, "pemasukan", "id_transaksi_original"),
-      "pengeluaran" -> loadIfNew(spark,
-        Staging.readCsvPrefix(spark, s"$stagingDir/pengeluaran",
-          Schemas.stagingPengeluaran),
-        storeDir, "pengeluaran", "id_transaksi_original"))
+    IndependentJobs.run(Seq(
+      "places" -> (() => loadIfNew(spark, places, storeDir, "places",
+        "place_id", selectColumns = Schemas.places.fieldNames.toSeq)),
+      "reviews" -> (() => loadIfNew(spark,
+        staged("reviews", Schemas.stagingReviews),
+        storeDir, "reviews", "id_review")),
+      "tweets" -> (() => loadIfNew(spark,
+        staged("tweets", Schemas.stagingTweets),
+        storeDir, "tweets", "id_tweet")),
+      "pemasukan" -> (() => loadIfNew(spark,
+        staged("pemasukan", Schemas.stagingPemasukan),
+        storeDir, "pemasukan", "id_transaksi_original")),
+      "pengeluaran" -> (() => loadIfNew(spark,
+        staged("pengeluaran", Schemas.stagingPengeluaran),
+        storeDir, "pengeluaran", "id_transaksi_original"))))
   }
 }

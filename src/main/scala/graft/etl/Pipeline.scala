@@ -5,10 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** The DAG shell (SURVEY.md §3 entry-point A). The reference's Airflow
   * DAG (`dags/tourism_finance_etl_dag.py:12-27`) is orchestration, not
   * engine capability: a linear chain
-  * `create schemas → operational load → mart build`. Here it is a
-  * sequential driver program; each stage's Spark job is already
-  * distributed internally. (The extract stage S1-S4 is external API
-  * I/O represented by fixture CSVs in the staging dir — SURVEY §7.1.)
+  * `create schemas → operational load → mart build`. Here the chain
+  * keeps that order, and inside a stage the independent tables run
+  * side by side: the five table loads run concurrently, then, once
+  * all have returned, the eleven mart writes run concurrently
+  * ([[graft.IndependentJobs]]). (The extract stage S1-S4 is external
+  * API I/O represented by fixture CSVs in the staging dir — SURVEY
+  * §7.1.)
   */
 object Pipeline {
 

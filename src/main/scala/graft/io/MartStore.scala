@@ -361,19 +361,24 @@ object MartStore {
       maxMarkerFile(fs, storeDir)) + 1
     val nonce = java.util.UUID.randomUUID().toString
     val nonce8 = nonce.replace("-", "").take(8)
-    // write every table's next version dir — all UNCOMMITTED until
-    // the one marker below, on paths no other publisher can collide
-    // with (the nonce); a crash anywhere in this loop leaves the
-    // store exactly as readers currently see it. NOTHING is deleted
-    // before the commit point.
-    val newDirs: Map[String, String] = tables.map { case (name, df) =>
-      val troot = new org.apache.hadoop.fs.Path(s"$storeDir/$name")
-      val v = versionDirs(fs, troot).map(_._1).maxOption.getOrElse(0L) + 1
-      val dirName = vname(v, nonce8)
-      df.write.mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/$name/$dirName/data")
-      name -> dirName
-    }.toMap
+    // write every table's next version dir, side by side
+    // ([[graft.IndependentJobs]] waits for all of them) — all
+    // UNCOMMITTED until the one marker below, on paths no other
+    // publisher can collide with (the nonce); a crash or a failed
+    // write anywhere here leaves the store exactly as readers
+    // currently see it. NOTHING is deleted before the commit point.
+    val newDirs: Map[String, String] =
+      graft.IndependentJobs.run(tables.map { case (name, df) =>
+        name -> { () =>
+          val troot = new org.apache.hadoop.fs.Path(s"$storeDir/$name")
+          val v =
+            versionDirs(fs, troot).map(_._1).maxOption.getOrElse(0L) + 1
+          val dirName = vname(v, nonce8)
+          df.write.mode(SaveMode.Overwrite)
+            .parquet(s"$storeDir/$name/$dirName/data")
+          dirName
+        }
+      })
     val all = cur ++ newDirs
     // ---- the commit point: ONE small object PUT for ALL tables ----
     val body = all.toSeq.sortBy(_._1)

@@ -35,11 +35,15 @@ object Staging {
     * union (reference `load_csv_from_gcs_to_df`, utils.py:28-45).
     * Spark globs + unions natively and splits large files; the schema
     * is explicit instead of per-file inferred. Missing/empty prefix →
-    * empty frame (reference utils.py:43-45 fallback). */
+    * empty frame (reference utils.py:43-45 fallback), as an empty
+    * LOCAL relation: the file probe has already answered "is there
+    * anything to load", and a consumer reads that answer from the plan
+    * (`OperationalLoad`'s empty-batch skip) instead of a scan. */
   def readCsvPrefix(spark: SparkSession, prefix: String,
                     schema: StructType): DataFrame = {
-    if (!hasCsvFiles(spark, prefix)) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (!hasCsvFiles(spark, prefix))
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        schema)
     else spark.read.option("header", "true").schema(schema)
       .csv(s"$prefix/*.csv")
   }

@@ -59,10 +59,6 @@ object Scalars {
   /** E11 — year (transformation_dw.py:151). */
   def yearOf(ts: Column): Column = year(ts).cast(LongType)
 
-  /** E12 — UTC run stamp for file naming (utils.py:15). */
-  def runStamp(): Column =
-    date_format(current_timestamp(), "yyyyMMdd_HHmmss")
-
   /** E13 — normalized key entry (manual_finance_uploader.py:47). */
   def normalized(c: Column): Column = lower(trim(c))
 

@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.etl.Pipeline
 import graft.io.Staging
+import graft.schema.Schemas
 
 /** End-to-end golden test of the ETL topology (SURVEY.md §5.3):
   * fixture staging CSVs → operational load → mart build, run twice to
@@ -100,6 +105,55 @@ class EtlPipelineSpec extends SparkSpec {
       mart.toString)
     assert(r3.loaded("reviews") == 1)
     assert(r3.mart("fact_maps") == 3)
+  }
+
+  test("one batch: every job it starts carries the caller's local " +
+    "properties, and it starts at most 39 jobs") {
+    val root = Files.createTempDirectory("graft-etl-jobs")
+    val staging = root.resolve("staging")
+    fixtures(staging)
+    def batch(name: String) = Pipeline.run(spark, staging.toString,
+      root.resolve(s"$name-store").toString,
+      root.resolve(s"$name-mart").toString)
+    // a warm-up batch first, so a task pool kept across calls (whose
+    // threads were born before the tag below was set) would exist
+    batch("warm")
+    jobsDuring(()) // drains the warm-up's events off the listener bus
+    val sc = spark.sparkContext
+    val all = new AtomicInteger(0)
+    val plain = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        all.incrementAndGet()
+    }
+    sc.addSparkListener(plain)
+    val (r, tagged) =
+      try jobsDuring(batch("measured")) finally sc.removeSparkListener(plain)
+    assert(r.loaded("places") == 3 && r.mart("fact_twitter") == 2)
+    // the plain listener also saw jobsDuring's own untagged sentinel
+    assert(all.get == tagged + 1,
+      s"${all.get - 1} jobs started, only $tagged carried the tag")
+    assert(tagged <= 39, s"$tagged jobs")
+  }
+
+  test("a missing staging prefix loads 0 and adds no file to its " +
+    "store table") {
+    val root = Files.createTempDirectory("graft-etl-empty")
+    val (staging, store, mart) =
+      (root.resolve("staging"), root.resolve("store"), root.resolve("mart"))
+    fixtures(staging)
+    Files.delete(staging.resolve("tweets").resolve("tweets_1.csv"))
+    Files.delete(staging.resolve("tweets"))
+    Schemas.operational.foreach { case (t, s) =>
+      Staging.ensureTable(spark, store.toString, t, s)
+    }
+    def tweetFiles = new java.io.File(store.resolve("tweets").toString)
+      .list().toSet
+    val before = tweetFiles
+    val r = Pipeline.run(spark, staging.toString, store.toString,
+      mart.toString)
+    assert(r.loaded("tweets") == 0 && r.loaded("reviews") == 3)
+    assert(tweetFiles == before)
+    assert(r.mart("fact_twitter") == 0 && r.mart("dim_user") == 0)
   }
 
   test("catalog mode: store and mart addressable as named SQL tables " +

@@ -28,9 +28,11 @@ class OracleSpec extends SparkSpec {
   }
 
   test("store family matches the DuckDB oracle: delete_keys, " +
-    "versioned_store, versioned_store_partitioned, incremental_rollup") {
+    "versioned_store, versioned_store_partitioned, incremental_rollup, " +
+    "mart_publish_atomic") {
     assertOracle(Seq("delete_keys", "versioned_store",
-      "versioned_store_partitioned", "incremental_rollup"))
+      "versioned_store_partitioned", "incremental_rollup",
+      "mart_publish_atomic"))
   }
 
   test("exact set-pair and span family matches the DuckDB oracle: " +
