@@ -17,19 +17,14 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Every table, `events` included, is a plain parquet read. The
+    * testdata and the perfbench generator write `events.ts` as a µs
+    * `timestamp`, which Spark reads natively, so no read sets session
+    * conf. A nanosecond `ts` file fails the read with
+    * `[PARQUET_TYPE_ILLEGAL] Illegal Parquet type: INT64
+    * (TIMESTAMP(NANOS,false))` rather than being silently reinterpreted. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
-
-  /** The events table carries a nanosecond-precision timestamp, which
-    * Spark's parquet reader rejects by default (PARQUET_TYPE_ILLEGAL).
-    * Read it as raw Long nanos (`nanosAsLong`) and surface `ts` as a
-    * µs-truncated TimestampType — the same truncation DuckDB applies,
-    * so oracle comparisons agree (SURVEY §7.4 precision note). */
-  private def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/events.parquet")
-  }
+    spark.read.parquet(s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, d: String): DataFrame = apply(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame = apply(spark, d, "nation")
@@ -38,15 +33,7 @@ object Tables {
   def part(spark: SparkSession, d: String): DataFrame = apply(spark, d, "part")
   def orders(spark: SparkSession, d: String): DataFrame = apply(spark, d, "orders")
   def lineitem(spark: SparkSession, d: String): DataFrame = apply(spark, d, "lineitem")
-  def events(spark: SparkSession, d: String): DataFrame = {
-    val raw = eventsRaw(spark, d)
-    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => raw // already a (µs or coarser) timestamp
-    }
-  }
+  def events(spark: SparkSession, d: String): DataFrame = apply(spark, d, "events")
   def documents(spark: SparkSession, d: String): DataFrame = apply(spark, d, "documents")
   def embeddings(spark: SparkSession, d: String): DataFrame = apply(spark, d, "embeddings")
 }

@@ -114,14 +114,15 @@ object RollupMaintain {
     * estimates are bit-identical to a one-shot sketch over all data
     * (asserted in RollupSpec) — so per-key frequency questions over
     * an unbounded key space cost KBs of state at any cardinality.
-    * Same stage-and-swap discipline as the other stores. */
+    * Same stage-and-swap discipline as the other stores. The sketch
+    * shape is fixed (eps = 0.001, confidence = 0.99, seed = 42): a
+    * union adds counters only between sketches of one shape, so every
+    * batch folded into a store must use the same three values. */
   def updateCms(spark: SparkSession, storeDir: String, table: String,
-                batch: DataFrame, keyCol: String,
-                eps: Double = 0.001, confidence: Double = 0.99,
-                seed: Int = 42): Long = {
+                batch: DataFrame, keyCol: String): Long = {
     val bp = batch.agg(
-      count_min_sketch(col(keyCol), lit(eps), lit(confidence),
-        lit(seed)).as("sketch"),
+      count_min_sketch(col(keyCol), lit(0.001), lit(0.99),
+        lit(42)).as("sketch"),
       count(lit(1)).as("n_total"))
     val merged =
       if (!Staging.tableExists(spark, storeDir, table)) bp

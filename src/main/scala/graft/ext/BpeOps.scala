@@ -66,9 +66,11 @@ object BpeOps {
 
   /** Train `nMerges` BPE merges on `corpus`'s word vocabulary
     * (tokenized with the repo-wide [[TextOps.tokens]] discipline).
-    * `maxWords` caps the vocabulary at the most frequent words
-    * (freq desc, word asc — deterministic), the standard BPE
-    * training bound; within the cap the derivation is exact.
+    * The vocabulary is capped at [[trainMergesMax]]'s default
+    * `maxWords` = 65,536 most frequent words (freq desc, word asc —
+    * deterministic), the standard BPE training bound; within the cap
+    * the derivation is exact. No caller of this exact-count form
+    * needs another cap.
     * Fails loudly if the vocabulary runs out of adjacent pairs
     * before `nMerges` (a degenerate corpus — an undertrained merge
     * list silently mispricing every downstream token count is the
@@ -90,9 +92,9 @@ object BpeOps {
     * bound, stated, not silent.
     *
     * @return the merge list in rank order. */
-  def trainMerges(corpus: DataFrame, textCol: String, nMerges: Int,
-                  maxWords: Int = 65536): Seq[(String, String)] = {
-    val merges = trainMergesMax(corpus, textCol, nMerges, maxWords)
+  def trainMerges(corpus: DataFrame, textCol: String,
+                  nMerges: Int): Seq[(String, String)] = {
+    val merges = trainMergesMax(corpus, textCol, nMerges)
     require(merges.size == nMerges,
       s"BPE training exhausted adjacent pairs at merge " +
         s"${merges.size + 1} of $nMerges — corpus too small for the " +

@@ -417,6 +417,12 @@ object ClassifierOps {
     * at 100 TB silently dropping unclassifiable docs from a routing
     * stage is a correctness bug ([[scoreQuality]]'s argument).
     *
+    * Features are hashed into 4096 buckets, the default every
+    * lang-ID trainer and store here uses. [[LangIdModel]] does not
+    * record its bucket count, and no caller trains with another, so
+    * the count is a constant rather than a second field to keep in
+    * step.
+    *
     * Scale shape (r16 — VERDICT r15 wrong #3 reshape): dense
     * multiclass scoring is inherently ×L in COMPUTE (every doc gets
     * a score per language — fasttext's shape too), but the DATA FLOW
@@ -452,8 +458,7 @@ object ClassifierOps {
     * partition-local on the doc id. The same collect supplies the
     * featureless-doc prior fallback. */
   def classifyLang(docs: DataFrame, idCol: String, textCol: String,
-                   model: LangIdModel,
-                   numBuckets: Int = 4096): DataFrame = {
+                   model: LangIdModel): DataFrame = {
     val langRows = model.langs.select("__lang", "__w0", "__b0")
       .collect()
       .map(r => (r.getString(0), r.getDecimal(1), r.getDecimal(2)))
@@ -477,8 +482,7 @@ object ClassifierOps {
     // ReuseExchange stops firing, and the trigram kernel runs once
     // PER CONSUMER (audited: exchanges 5 → 6 and a duplicated kernel
     // scan when this fold was dropped).
-    val perDocBucket = charGramBuckets(docs, idCol, textCol, Nil,
-        numBuckets)
+    val perDocBucket = charGramBuckets(docs, idCol, textCol, Nil, 4096)
       .repartition(col(idCol))
       .groupBy(col(idCol), col("__b"))
       .agg(sum(col("__m")).as("__m"))

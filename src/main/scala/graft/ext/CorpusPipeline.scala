@@ -22,18 +22,18 @@ import org.apache.spark.sql.functions._
 object CorpusPipeline {
 
   final case class Config(
-      minTokens: Int = 10,
-      maxTokens: Int = 100000,
-      maxPunctRatio: Double = 0.2,
       nearDupJaccard: Double = 0.8,
       dropNearDups: Boolean = true)
 
-  /** Quality gate: narrow, no shuffle. */
+  /** Quality gate: narrow, no shuffle. Keeps docs of 10 to 100,000
+    * tokens whose punctuation ratio is below 0.2 — fixed bounds, the
+    * ones the curation oracle twins encode. `cfg` holds no
+    * quality setting; every stage takes the pipeline's one Config. */
   def qualityFilter(docs: DataFrame, textCol: String,
                     cfg: Config): DataFrame = {
     val n = TextOps.tokenCount(col(textCol))
-    docs.filter(n >= cfg.minTokens && n <= cfg.maxTokens &&
-      TextOps.punctRatio(col(textCol)) < cfg.maxPunctRatio)
+    docs.filter(n >= 10 && n <= 100000 &&
+      TextOps.punctRatio(col(textCol)) < 0.2)
   }
 
   /** Exact dedup on the whitespace/case-normalized fingerprint:

@@ -170,10 +170,9 @@ object DedupOps {
     * token sets (exact) → threshold. Payload joins happen only for
     * surviving candidate pairs.
     *
+    * Every candidate pair is verified (no caller wants a top-k cut).
+    *
     * @param threshold     exact token-set Jaccard cut for verified pairs
-    * @param maxCandidates optional cap: keep only the top candidates
-    *                      by band-collision count before the payload
-    *                      joins (for top-k style queries)
     * @param maxBucketSize hot-bucket drop cap forwarded to
     *                      [[minhashCandidates]]; raise it (e.g. to the
     *                      corpus size) when the query must be an
@@ -184,7 +183,6 @@ object DedupOps {
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           shingleSize: Int = 3, numHashes: Int = 64,
                           bands: Int = 16, threshold: Double = 0.5,
-                          maxCandidates: Int = 0,
                           maxBucketSize: Int = 50): DataFrame = {
     // The signature table feeds candidate generation and both payload
     // joins — persist it (corpus-linear: id + 64 longs + token set;
@@ -194,7 +192,7 @@ object DedupOps {
     // fromSigs materializes its (small) output before returning, so
     // releasing the corpus-scale signature cache here is safe
     try minhashNearDupPairsFromSigs(sigs, bands, numHashes / bands,
-      threshold, maxCandidates, maxBucketSize)
+      threshold, maxBucketSize)
     finally sigs.unpersist()
   }
 
@@ -221,14 +219,8 @@ object DedupOps {
   def minhashNearDupPairsFromSigs(sigs: DataFrame, bands: Int,
                                   rowsPerBand: Int,
                                   threshold: Double,
-                                  maxCandidates: Int = 0,
                                   maxBucketSize: Int = 50): DataFrame = {
-    val candAll = minhashCandidates(sigs, bands, rowsPerBand, maxBucketSize)
-    val cand =
-      if (maxCandidates > 0)
-        candAll.orderBy(col("n_bands_matching").desc, col("id_a"),
-          col("id_b")).limit(maxCandidates)
-      else candAll
+    val cand = minhashCandidates(sigs, bands, rowsPerBand, maxBucketSize)
     val sa = sigs.select(col("doc_id").as("id_a"),
       col("__tokset").as("__ta"), col("__sig").as("__sa"))
     val sb = sigs.select(col("doc_id").as("id_b"),
@@ -254,7 +246,7 @@ object DedupOps {
     // not live for the rest of the session (the inline wrapper
     // releases its signature cache the same way)
     out.count()
-    candAll.unpersist()
+    cand.unpersist()
     out
   }
 
@@ -426,9 +418,10 @@ object DedupOps {
   /** SimHash near-dup pairs: the signature is split into blocks and
     * candidates are keyed on block COMBINATIONS (see
     * [[simhashPairsFromSigs]]), verified by full Hamming distance.
-    * With the default `numBlocks = 0` the block count is auto-sized
-    * from the corpus's doc count so candidate-key width grows with
-    * the corpus — the fix for the round-6 measured recall sag, where
+    * The hot-bucket cap is fixed at 200 docs, and the block count is
+    * always auto-sized ([[chooseBlocks]]) from the corpus's doc count
+    * so candidate-key width grows with the corpus — the fix for the
+    * round-6 measured recall sag, where
     * fixed `maxDistance + 1` chunks (16-bit keys at d=3) made bucket
     * occupancy ∝ N and the hot-bucket cap started dropping real
     * pairs at 16×–32× corpus growth.
@@ -441,14 +434,12 @@ object DedupOps {
     * MUST surface at Hamming 0 (the `dedup_simhash` oracle gates
     * exactly that against a DuckDB-recomputed ground truth). */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                          maxDistance: Int = 3,
-                          maxBucketSize: Int = 200,
-                          numBlocks: Int = 0): DataFrame =
+                          maxDistance: Int = 3): DataFrame =
     simhashPairsFromSigs(
       df.select(col(idCol).as("doc_id"),
         graft.functions.native.simhash64(
           array_distinct(TextOps.tokens(col(textCol)))).as("__sig")),
-      maxDistance, maxBucketSize, numBlocks)
+      maxDistance, maxBucketSize = 200)
 
   /** SimHash signatures from a PORTABLE token hash: the first 15 hex
     * chars of md5(token) parsed as a 60-bit integer. Any engine with
@@ -458,11 +449,13 @@ object DedupOps {
     * query rather than rows-only. Distinct tokens (set semantics, like
     * the minhash verified twin); empty-token docs are excluded because
     * their signature (0) says nothing about content. Signature bits
-    * 60–63 are always 0 on both sides, so Hamming distances agree. */
+    * 60–63 are always 0 on both sides, so Hamming distances agree.
+    * No bucket is dropped (`maxBucketSize = Int.MaxValue`), so the
+    * output is exactly all pairs within `maxDistance` — the exhaustive
+    * form an oracle twin can check; the block count is auto-sized
+    * ([[chooseBlocks]]). */
   def simhashPortablePairs(df: DataFrame, idCol: String, textCol: String,
-                           maxDistance: Int,
-                           maxBucketSize: Int = Int.MaxValue,
-                           numBlocks: Int = 0): DataFrame = {
+                           maxDistance: Int): DataFrame = {
     val hashed = graft.ops.Relational.widenNarrowScan(
         df.filter(length(trim(col(textCol))) > 0))
       .select(col(idCol).as("doc_id"),
@@ -480,8 +473,8 @@ object DedupOps {
     // the md5-derived signature occupies bits 0–59, so the block
     // split covers only real bits (no constant-zero block narrowing
     // a combination key's effective width)
-    val out = simhashPairsFromSigs(sigs, maxDistance, maxBucketSize,
-      numBlocks, sigBits = 60)
+    val out = simhashPairsFromSigs(sigs, maxDistance,
+      maxBucketSize = Int.MaxValue, sigBits = 60)
     hashed.unpersist()
     out
   }
@@ -540,12 +533,12 @@ object DedupOps {
     *
     *  - RECALL: a true pair at `threshold` similarity misses every
     *    band w.p. `(1 - t^r)^b` — bands `b` is the smallest count
-    *    pushing that below `maxMissProb`.
+    *    pushing that below `maxMissProb` = 1e-6.
     *  - PRECISION AT SCALE: an unrelated pair (background similarity
-    *    `bgJaccard`) collides in some band w.p. ≈ `b·bg^r`, so
+    *    `bgJaccard` = 0.1) collides in some band w.p. ≈ `b·bg^r`, so
     *    expected false candidates are `(n-1)/2 · b · bg^r` PER DOC.
     *    Rows-per-band `r` is the smallest depth keeping that under
-    *    `fpPerDoc` — `r` grows with log n, which is what keeps the
+    *    `fpPerDoc` = 1 — `r` grows with log n, which is what keeps the
     *    candidate stage corpus-LINEAR as the corpus grows (the same
     *    more-compute-buys-collision-freedom trade as chooseBlocks).
     *
@@ -563,18 +556,22 @@ object DedupOps {
     * such thresholds inherently needs thousands of bands, so the
     * call FAILS LOUDLY (IllegalArgumentException) rather than
     * silently degrading the recall contract — raise `maxSigHashes`,
-    * relax `maxMissProb`, or use a higher threshold with transitive
+    * or use a higher threshold with transitive
     * clustering ([[duplicateClusters]]) to reach looser similarity. The hot-bucket cap itself is deliberately
     * NOT n-derived: a band hash is 64 bits, so unrelated-doc
     * occupancy stays ~0 at any corpus size — oversized buckets mean
     * a degenerate near-dup cluster, and the cap is a per-cluster
-    * boundedness guard, not a collision knob. */
+    * boundedness guard, not a collision knob.
+    *
+    * The three targets are constants: every caller uses the same
+    * recall and precision contract, and only the signature budget
+    * varies. */
   def chooseMinhashParams(n: Long, threshold: Double,
-                          bgJaccard: Double = 0.1,
-                          maxMissProb: Double = 1e-6,
-                          fpPerDoc: Double = 1.0,
                           maxSigHashes: Int = 512): (Int, Int, Int) = {
     require(threshold > 0 && threshold < 1, s"threshold=$threshold")
+    val bgJaccard = 0.1
+    val maxMissProb = 1e-6
+    val fpPerDoc = 1.0
     def bandsFor(r: Int): Int = {
       val pBand = math.pow(threshold, r)
       // miss = (1-p)^b <= maxMiss  =>  b >= ln(maxMiss)/ln(1-p)
@@ -1394,13 +1391,20 @@ object DedupOps {
     * index across batches) is dropped from candidate generation
     * instead of producing |new hot| × |old hot| pairs.
     *
+    * The signature shape is fixed at the batch form's defaults
+    * (3-token shingles, 64 hashes, 16 bands, hot-band cap 50): the
+    * index stores band keys, so every batch appended to one index must
+    * band the same way.
+    *
     * @return surviving new docs (doc_id + original columns). */
   def incrementalMinhashDedup(newDocs: DataFrame, idCol: String,
                               textCol: String, indexDir: String,
-                              shingleSize: Int = 3, numHashes: Int = 64,
-                              bands: Int = 16, threshold: Double = 0.8,
-                              maxBucketSize: Int = 50): DataFrame = {
+                              threshold: Double = 0.8): DataFrame = {
     val spark = newDocs.sparkSession
+    val shingleSize = 3
+    val numHashes = 64
+    val bands = 16
+    val maxBucketSize = 50
     val rowsPerBand = numHashes / bands
     val sigs = signatureTable(newDocs, idCol, textCol, shingleSize,
       numHashes).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -23,7 +23,8 @@ object DriftOps {
     * absolute deviation) — the monitoring gate that survives the
     * heavy-tailed signals mean/stddev gates drown in (one 10⁸-token
     * document moves a mean; it cannot move a median). Returns the
-    * input plus `__med`/`__mad`/`outCol`.
+    * input plus `__med`/`__mad`/`is_outlier` (every gate here names
+    * its flag `is_outlier`; no caller needs another name).
     *
     * Both medians are RANK-based (value at rank ⌈n/2⌉ — the lower
     * median): no interpolation rule for engines to disagree over,
@@ -37,11 +38,10 @@ object DriftOps {
     * per-key (median, MAD) frames are key-cardinality-sized and
     * broadcast back — nothing row-grained joins on a hot key. */
   def madOutlierGate(df: DataFrame, keys: Seq[String], valueCol: Column,
-                     k: Double,
-                     outCol: String = "is_outlier"): DataFrame = {
-    gateGuard(df, outCol)
+                     k: Double): DataFrame = {
+    gateGuard(df)
     applyRobustStats(df, robustStats(df, keys, valueCol), keys,
-      valueCol, k, outCol)
+      valueCol, k)
   }
 
   /** [[robustStatsDiscrete]] for CONTINUOUS signals — the same
@@ -75,11 +75,11 @@ object DriftOps {
     * (the [[graft.ops.Relational.keyedRanks]] discipline — silent
     * replacement would drop caller columns, and chaining two gates
     * would produce ambiguous `__med`/`__mad`). */
-  private def gateGuard(df: DataFrame, outCol: String): Unit =
-    for (c <- Seq("__val", "__med", "__mad", "__dev", "__devr", outCol))
+  private def gateGuard(df: DataFrame): Unit =
+    for (c <- Seq("__val", "__med", "__mad", "__dev", "__devr",
+        "is_outlier"))
       require(!df.columns.contains(c),
-        s"madOutlierGate: input already has a '$c' column — rename " +
-          "it or pick a different outCol")
+        s"madOutlierGate: input already has a '$c' column — rename it")
 
   /** Broadcast equi-join on `keys` with NULL-SAFE equality: a plain
     * USING join drops every null-key row (null never equals null),
@@ -115,11 +115,10 @@ object DriftOps {
     * values use [[madOutlierGate]], whose bucketed order statistic
     * carries no per-key distinct bound. */
   def madOutlierGateDiscrete(df: DataFrame, keys: Seq[String],
-                             valueCol: Column, k: Double,
-                             outCol: String = "is_outlier"): DataFrame = {
-    gateGuard(df, outCol)
+                             valueCol: Column, k: Double): DataFrame = {
+    gateGuard(df)
     applyRobustStats(df, robustStatsDiscrete(df, keys, valueCol),
-      keys, valueCol, k, outCol)
+      keys, valueCol, k)
   }
 
   /** Flag `df` against an EXISTING per-key robust model — the
@@ -133,13 +132,13 @@ object DriftOps {
     * flag — surfaced for model refresh, not silently dropped or
     * silently passed. */
   def applyRobustStats(df: DataFrame, stats: DataFrame,
-                       keys: Seq[String], valueCol: Column, k: Double,
-                       outCol: String = "is_outlier"): DataFrame = {
-    gateGuard(df, outCol)
+                       keys: Seq[String], valueCol: Column,
+                       k: Double): DataFrame = {
+    gateGuard(df)
     keyedBroadcastJoin(df.withColumn("__val", valueCol), stats, keys,
         joinType = "left")
       .withColumn("__devr", abs(col("__val") - col("__med")))
-      .withColumn(outCol, col("__devr") > lit(k) * col("__mad"))
+      .withColumn("is_outlier", col("__devr") > lit(k) * col("__mad"))
       .drop("__val", "__devr")
   }
 
@@ -300,10 +299,9 @@ object DriftOps {
     * [[applyRobustStats]]. */
   def rollingMadGate(batch: DataFrame, keys: Seq[String],
                      valueCol: Column, k: Double, storeDir: String,
-                     batchId: Long, maxStaleness: Long,
-                     outCol: String = "is_outlier"): DataFrame = {
+                     batchId: Long, maxStaleness: Long): DataFrame = {
     require(maxStaleness >= 1, s"maxStaleness=$maxStaleness")
-    gateGuard(batch, outCol)
+    gateGuard(batch)
     val spark = batch.sparkSession
     val modelMax = graft.io.CountLog
       .read(spark, storeDir, "keyed_value_hist")
@@ -323,7 +321,7 @@ object DriftOps {
     val model = statsFromValueHistogram(
         keyedHistogramFromStore(spark, storeDir, keys, batchId), keys)
       .localCheckpoint(true)
-    applyRobustStats(batch, model, keys, valueCol, k, outCol)
+    applyRobustStats(batch, model, keys, valueCol, k)
   }
 
   /** Per-bucket PSI report between `base` and `current` over literal

@@ -78,12 +78,13 @@ object MultimodalOps {
     * tool (a codec is not expressible as Catalyst expressions).
     * Narrow map: payload bytes never shuffle; the output rows carry
     * only scalars. Malformed payloads yield `format = "unknown"`
-    * instead of failing the stage ([[MediaCodecs]] scaladoc). */
-  def decodeMedia(assets: DataFrame, idCol: String = "asset_id",
-                  payloadCol: String = "payload"): DataFrame = {
+    * instead of failing the stage ([[MediaCodecs]] scaladoc). Reads
+    * the `asset_id` and `payload` columns every asset frame here
+    * carries. */
+  def decodeMedia(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
-    assets.select(col(idCol).cast(LongType), col(payloadCol))
+    assets.select(col("asset_id").cast(LongType), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
         (id, MediaCodecs.decode(bytes))
@@ -152,17 +153,16 @@ object MultimodalOps {
     * shuffle, payload never leaves the partition; undecodable
     * payloads yield zero rows rather than failing the job. RMS is
     * exact-integer arithmetic under sqrt (PCM values; sum of squares
-    * < 2^53) so the value is engine-portable at 6 dp. */
+    * < 2^53) so the value is engine-portable at 6 dp. Reads the
+    * `asset_id` and `payload` columns, like [[decodeMedia]]. */
   def audioSegmentFeatures(assets: DataFrame,
-                           windowSamples: Int,
-                           idCol: String = "asset_id",
-                           payloadCol: String = "payload"): DataFrame = {
+                           windowSamples: Int): DataFrame = {
     // fail at plan time, not as a cryptic per-task grouped() error
     require(windowSamples > 0,
       s"windowSamples must be positive, got $windowSamples")
     val spark = assets.sparkSession
     import spark.implicits._
-    assets.select(col(idCol).cast(LongType), col(payloadCol))
+    assets.select(col("asset_id").cast(LongType), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, bytes) =>
         MediaCodecs.decodeWavPcm(bytes).toSeq.flatMap {
@@ -363,12 +363,12 @@ object MultimodalOps {
     * signature. Pair generation belongs to the simhash pigeonhole
     * machinery over the returned `(asset_id, phash)` frame
     * ([[graft.ext.DedupOps.simhashPairsFromSigs]]) — Hamming-ball
-    * probing is signature-agnostic. */
-  def imageDHash(assets: DataFrame, idCol: String = "asset_id",
-                 payloadCol: String = "payload"): DataFrame = {
+    * probing is signature-agnostic. Reads the `asset_id` and
+    * `payload` columns, like [[decodeMedia]]. */
+  def imageDHash(assets: DataFrame): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
-    assets.select(col(idCol).cast(LongType), col(payloadCol))
+    assets.select(col("asset_id").cast(LongType), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, bytes) =>
         MediaCodecs.decodeBmpLuma(bytes).map { case (w, h, luma) =>

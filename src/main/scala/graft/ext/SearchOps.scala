@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   */
 object SearchOps {
 
-  /** BM25 (Robertson k1/b) document ranking for a fixed term set.
+  /** BM25 (Robertson k1/b) document ranking for a fixed term set,
+    * with the textbook k1 = 1.2, b = 0.75 ([[bm25TfPart]]): every
+    * query and its oracle twin score with these values.
     *
     * Determinism discipline (SURVEY §7.4): per-(doc, term) scores are
     * combined in the FIXED left-to-right order of `terms` (via pivot
@@ -26,8 +28,7 @@ object SearchOps {
     * transcendental treatment as the `math_funcs` battery.
     */
   def bm25Rank(docs: DataFrame, idCol: String, textCol: String,
-               terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-               topK: Int = 20): DataFrame = {
+               terms: Seq[String], topK: Int = 20): DataFrame = {
     // tf columns are keyed by terms.indexOf(t): a duplicate term would
     // collide two __tf_i names and surface as an opaque
     // ambiguous-column analysis error deep in the aggregation.
@@ -62,7 +63,7 @@ object SearchOps {
     val score = round(terms.map { t =>
       val df = col(s"__df_${terms.indexOf(t)}")
       val tf = col(tfCol(t))
-      when(tf > 0, bm25Idf(df) * bm25TfPart(tf, col("dlen"), k1, b))
+      when(tf > 0, bm25Idf(df) * bm25TfPart(tf, col("dlen")))
         .otherwise(lit(0.0))
     }.reduce(_ + _), 6)
     matched.select(col(idCol), score.as("score"))
@@ -78,12 +79,15 @@ object SearchOps {
     log(lit(1.0) + (col("n_docs") - df + lit(0.5)) / (df + lit(0.5)))
 
   /** BM25 tf saturation term — shared like [[bm25Idf]]; expects
-    * `avgdl` in scope. */
-  private def bm25TfPart(tf: Column, dlen: Column,
-                         k1: Double, b: Double): Column =
+    * `avgdl` in scope. k1 = 1.2 and b = 0.75 are the textbook
+    * constants; no caller tunes them. */
+  private def bm25TfPart(tf: Column, dlen: Column): Column = {
+    val k1 = 1.2
+    val b = 0.75
     tf * lit(k1 + 1) /
       (tf + lit(k1) *
         (lit(1.0) - lit(b) + lit(b) * dlen / col("avgdl")))
+  }
 
   /** Postings + doc-length tables for [[bm25FromIndex]]: the
     * materialized inverted-index form — `postings(token, doc_id,
@@ -109,13 +113,12 @@ object SearchOps {
     * to the MATCHING postings read (token-pruned scan), with no
     * corpus tokenization at all. This is the amortized form a search
     * service runs: build once per corpus snapshot
-    * ([[buildPostings]]), serve every query from the index. */
+    * ([[buildPostings]]), serve every query from the index. Returns
+    * the top 20 docs by score, the one cut its callers use. */
   def bm25FromIndex(postings: DataFrame, doclens: DataFrame,
-                    idCol: String, terms: Seq[String],
-                    k1: Double = 1.2, b: Double = 0.75,
-                    topK: Int = 20): DataFrame = {
+                    idCol: String, terms: Seq[String]): DataFrame = {
     val tf = postings.filter(col("token").isin(terms: _*))
-    scoreBm25(tf, doclens, idCol, terms, k1, b, topK)
+    scoreBm25(tf, doclens, idCol, terms)
   }
 
   /** BM25 scoring stage over long-form `(idCol, token, tf)` term
@@ -124,8 +127,7 @@ object SearchOps {
     * arithmetic itself is [[bm25Idf]]/[[bm25TfPart]], shared with the
     * inline [[bm25Rank]] form so the two cannot drift. */
   private def scoreBm25(tf: DataFrame, dl: DataFrame, idCol: String,
-                        terms: Seq[String], k1: Double, b: Double,
-                        topK: Int): DataFrame = {
+                        terms: Seq[String]): DataFrame = {
     val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       (sum("dlen").cast("double") / count(lit(1))).as("avgdl"))
@@ -135,7 +137,7 @@ object SearchOps {
       .crossJoin(broadcast(stats))
       .select(col(idCol), col("token"),
         (bm25Idf(col("df")) *
-          bm25TfPart(col("tf"), col("dlen"), k1, b)).as("s"))
+          bm25TfPart(col("tf"), col("dlen"))).as("s"))
     val pivoted = scored.groupBy(col(idCol))
       .pivot("token", terms)
       .agg(min("s"))
@@ -143,7 +145,7 @@ object SearchOps {
     val score = round(terms.map(t => col(s"`$t`")).reduce(_ + _), 6)
     pivoted.select(col(idCol), score.as("score"))
       .orderBy(col("score").desc, col(idCol))
-      .limit(topK)
+      .limit(20)
   }
 
   /** Inverted index at (token → document-frequency, total term

@@ -25,11 +25,15 @@ object SketchOps {
     * exact — CMS never underestimates) must be true for every row;
     * `upper_ok` (estimate <= exact + ceil(eps·N)) is the one-sided
     * error bound, which holds with probability `confidence` per
-    * query and deterministically for a fixed seed/dataset. */
-  def heavyHittersVerified(df: DataFrame, keyCol: String, topK: Int,
-                           eps: Double = 0.001,
-                           confidence: Double = 0.99,
-                           seed: Int = 42): DataFrame = {
+    * query and deterministically for a fixed seed/dataset. The sketch
+    * shape is fixed at eps = 0.001, confidence = 0.99, seed = 42, the
+    * same as the maintained [[graft.etl.RollupMaintain.updateCms]]
+    * store. */
+  def heavyHittersVerified(df: DataFrame, keyCol: String,
+                           topK: Int): DataFrame = {
+    val eps = 0.001
+    val confidence = 0.99
+    val seed = 42
     val exact = df.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n_exact"))
       .orderBy(col("n_exact").desc, col(keyCol))

@@ -906,8 +906,10 @@ object TextOps {
     * defaults (2, 5) → 0.30 / 0.20 / 0.20 / 0.15). The paper's full
     * battery is this same fold at other n — run the operator per n
     * and AND the flags; each run judges against its own n's
-    * threshold. n outside the table requires an explicit
-    * topThreshold/dupThreshold.
+    * threshold. A `topN` outside the table requires an explicit
+    * `topThreshold`; the dup-gram threshold always comes from the
+    * table (no caller overrides it), so a `dupN` outside n=5..10 is
+    * an error.
     *
     * Scale shape (r14): ONE doc-grain exchange for the whole
     * battery. The input repartitions on doc_id once (text bytes
@@ -925,24 +927,22 @@ object TextOps {
   def repetitionSignals(df: org.apache.spark.sql.DataFrame,
                         idCol: String, textCol: String,
                         topN: Int = 2, dupN: Int = 5,
-                        topThreshold: Option[Double] = None,
-                        dupThreshold: Option[Double] = None)
+                        topThreshold: Option[Double] = None)
       : org.apache.spark.sql.DataFrame = {
     require(topN >= 1 && dupN >= 1, s"topN=$topN dupN=$dupN")
     // Thresholds derive from the paper's table for the n actually
     // requested (ADVICE r13: the old form hardcoded the (2, 5)
     // thresholds into pass_repetition, so running the full battery at
-    // other n silently judged against the wrong numbers). Explicit
-    // params override; an n outside the published table REQUIRES an
-    // explicit threshold rather than guessing one.
+    // other n silently judged against the wrong numbers). An explicit
+    // topThreshold overrides; an n outside the published table
+    // otherwise fails rather than guessing a threshold.
     val topThr = topThreshold.orElse(topGramThresholds.get(topN))
       .getOrElse(throw new IllegalArgumentException(
         s"no published top-$topN-gram threshold (table covers n=2..4); " +
           "pass topThreshold explicitly"))
-    val dupThr = dupThreshold.orElse(dupGramThresholds.get(dupN))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no published dup-$dupN-gram threshold (table covers n=5..10); " +
-          "pass dupThreshold explicitly"))
+    val dupThr = dupGramThresholds.getOrElse(dupN,
+      throw new IllegalArgumentException(
+        s"no published dup-$dupN-gram threshold (table covers n=5..10)"))
     val docs = df.select(col(idCol).as("doc_id"),
         col(textCol).as("__text"))
       .repartition(col("doc_id"))

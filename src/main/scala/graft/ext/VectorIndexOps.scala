@@ -38,14 +38,13 @@ object VectorIndexOps {
     * centroid table iff absent; appends the batch's postings.
     * Returns the batch's posting count. */
   def updateIndex(spark: SparkSession, batch: DataFrame, idCol: String,
-                  vecCol: String, indexDir: String, nCentroids: Int,
-                  iters: Int = 2): Long = {
+                  vecCol: String, indexDir: String,
+                  nCentroids: Int): Long = {
     val cents =
       if (graft.io.Staging.tableExists(spark, indexDir, "centroids"))
         graft.io.Staging.readTable(spark, indexDir, "centroids")
       else {
-        val c = VectorOps.ivfCentroids(batch, idCol, vecCol,
-          nCentroids, iters)
+        val c = VectorOps.ivfCentroids(batch, idCol, vecCol, nCentroids)
         graft.io.Staging.overwriteParquet(c, indexDir, "centroids")
         c
       }
@@ -166,14 +165,13 @@ object VectorIndexOps {
     * + scalar fold — no extra shuffle, no extra pass over postings).
     */
   def updateIndexSq8(spark: SparkSession, batch: DataFrame, idCol: String,
-                     vecCol: String, indexDir: String, nCentroids: Int,
-                     iters: Int = 2): Sq8BatchStats = {
+                     vecCol: String, indexDir: String,
+                     nCentroids: Int): Sq8BatchStats = {
     val cents =
       if (graft.io.Staging.tableExists(spark, indexDir, "centroids"))
         graft.io.Staging.readTable(spark, indexDir, "centroids")
       else {
-        val c = VectorOps.ivfCentroids(batch, idCol, vecCol,
-          nCentroids, iters)
+        val c = VectorOps.ivfCentroids(batch, idCol, vecCol, nCentroids)
         graft.io.Staging.overwriteParquet(c, indexDir, "centroids")
         c
       }

@@ -139,10 +139,13 @@ object VectorOps {
     * plumbing runs under the same all-pairs SQL oracle as
     * `ann_cosine_topk`; bucket pruning is the ONLY thing the
     * production path adds on top of what is verified here (its
-    * recall is asserted against brute force in VectorSpec). */
+    * recall is asserted against brute force in VectorSpec). The table
+    * count is fixed at [[lshTopK]]'s default of 4; with every bucket
+    * probed it cannot change the result. */
   def lshTopKProbeAll(corpus: DataFrame, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
-                      bits: Int = 12, tables: Int = 4): DataFrame = {
+                      bits: Int = 12): DataFrame = {
+    val tables = 4
     val c = corpus.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("__cvec"),
         explode(srpBuckets(col(vecCol), bits, tables)).as("__bucket"))
@@ -181,8 +184,9 @@ object VectorOps {
 
   /** Deterministic spherical-k-means-lite centroid training: seeds
     * are the `k` corpus vectors with the smallest `xxhash64(id)`
-    * (hash-picked, stable across runs/executors), refined by `iters`
-    * Lloyd iterations under the cosine metric. Fully distributed —
+    * (hash-picked, stable across runs/executors), refined by 2 Lloyd
+    * iterations (no caller needs another count) under the cosine
+    * metric. Fully distributed —
     * no driver-side collect: assignment is a broadcast join + per-id
     * argmin window; the mean recompute is posexplode → (centroid,
     * dim) aggregate → array rebuild. Returns (centroid_id,
@@ -192,7 +196,7 @@ object VectorOps {
     * side); the corpus is scanned once per iteration. Persist
     * between iterations cuts lineage. */
   def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                   k: Int, iters: Int = 2): DataFrame = {
+                   k: Int): DataFrame = {
     val seeds = corpus
       .withColumn("__h", xxhash64(col(idCol)))
       .orderBy(col("__h"), col(idCol))
@@ -202,7 +206,7 @@ object VectorOps {
           .orderBy(col("__h"), col(idCol))))
       .select((col("__rn") - 1).as("centroid_id"),
         transform(col(vecCol), x => x.cast("double")).as("centroid"))
-    val folded = (1 to iters).foldLeft(seeds) { (cents, _) =>
+    val folded = (1 to 2).foldLeft(seeds) { (cents, _) =>
       val assigned = assignToCentroids(corpus, idCol, vecCol, cents)
       val next = corpus
         .join(assigned, Seq(idCol))
@@ -298,9 +302,9 @@ object VectorOps {
     * and the probe is a shuffle on centroid_id, not a
     * corpus-scan-per-query. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, nCentroids: Int, nProbe: Int,
-              iters: Int = 2): DataFrame = {
-    val cents = ivfCentroids(corpus, idCol, vecCol, nCentroids, iters)
+              vecCol: String, k: Int, nCentroids: Int,
+              nProbe: Int): DataFrame = {
+    val cents = ivfCentroids(corpus, idCol, vecCol, nCentroids)
     val index = assignToCentroids(corpus, idCol, vecCol, cents)
     val probes = {
       val scored = queries.select(col(idCol).as("query_id"),
@@ -336,32 +340,24 @@ object VectorOps {
   def cosineNearDupPairsBlocked(corpus: DataFrame, idCol: String,
                                 vecCol: String, blockCols: Seq[String],
                                 threshold: Double,
-                                maxBlockSize: Int = 10000,
-                                nSalts: Int = 0): DataFrame = {
+                                maxBlockSize: Int = 10000): DataFrame = {
     val base = corpus.select(
       (col(idCol) +: col(vecCol) +: blockCols.map(col)): _*)
-    // persisted only when the salt is census-DERIVED (the derive
-    // collect + prune join double-read — the DedupOps.blockedPairs
-    // census note); with a pinned salt the census has one consumer
-    // and a cache would be pure overhead.
-    val blockCensusRaw = corpus.groupBy(blockCols.map(col): _*)
+    // persisted: the salt derive collect and the prune join both read
+    // the census (the DedupOps.blockedPairs census note)
+    val blockCensus = corpus.groupBy(blockCols.map(col): _*)
       .agg(count(lit(1)).as("__bsz"))
       .filter(col("__bsz") <= maxBlockSize && col("__bsz") > 1)
-    val blockCensus =
-      if (nSalts > 0) blockCensusRaw
-      else blockCensusRaw.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val smallBlocks = blockCensus.select(blockCols.map(col): _*)
     val a = base.toDF(("id_a" +: "__va" +: blockCols): _*)
       .join(smallBlocks, blockCols)
     val b = base.toDF(("id_b" +: "__vb" +: blockCols): _*)
     // pinned-width, salted: see computeDensePairJoin — an enum-small
     // block key (label) otherwise caps parallelism at #blocks, and
-    // AQE byte-coalescing can collapse it entirely. nSalts ≤ 0
-    // (default) derives the salt from the block-work census
-    // (Relational.pairWorkSalts); a positive value pins it.
-    val salts = if (nSalts > 0) nSalts
-      else Relational.pairWorkSalts(blockCensus, "__bsz")
+    // AQE byte-coalescing can collapse it entirely. The salt is
+    // derived from the block-work census (Relational.pairWorkSalts).
+    val salts = Relational.pairWorkSalts(blockCensus, "__bsz")
     Relational.computeDensePairJoin(a, b, blockCols, salts)
       .filter(col("id_a") < col("id_b"))
       .withColumn("cosine_sim", cosine(col("__va"), col("__vb")))

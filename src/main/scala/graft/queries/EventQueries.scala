@@ -9,9 +9,9 @@ import QueryDef.{dsum, dsumSql}
   * sessionized aggregation, as-of join, first-seen dedup — the batch
   * forms of the streaming surface (SURVEY §2.4-streaming row).
   *
-  * Timestamps compare at µs precision: both Spark (nanosAsLong +
-  * truncation, see graft.Tables.events) and DuckDB truncate the ns
-  * parquet values to µs.
+  * Timestamps compare at µs precision: the testdata's `events.ts` is a
+  * µs parquet timestamp that Spark and DuckDB both read natively (see
+  * graft.Tables.apply).
   */
 object EventQueries {
 

@@ -180,40 +180,29 @@ object StreamingOps {
   /** Custom keyed state via mapGroupsWithState: a per-user running
     * profile (event count, value sum, last-seen) maintained across
     * micro-batches — the building block for any bespoke streaming
-    * state the built-in windows can't express. State is dropped after
-    * `idleTimeout` without events (processing-time timeout). State is
-    * O(entities) — at 100 TB / 10⁹ users that does not fit executor
-    * heap: run under [[RocksDBStateStoreProvider]]
+    * state the built-in windows can't express. State has no timeout
+    * (no caller expires idle users). State is O(entities) — at
+    * 100 TB / 10⁹ users that does not fit executor heap: run under
+    * [[RocksDBStateStoreProvider]]
     * (config-switched; StreamingSpec drills the kill-restart path on
     * both providers — see SCALING.md, streaming state). */
-  def runningUserProfile(events: org.apache.spark.sql.Dataset[UserEvent],
-                         idleTimeout: Option[String] = None)
+  def runningUserProfile(events: org.apache.spark.sql.Dataset[UserEvent])
       : org.apache.spark.sql.Dataset[UserProfile] = {
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout
-    else GroupStateTimeout.NoTimeout
     events.groupByKey(_.user_id)
-      .mapGroupsWithState(timeoutConf) {
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (userId: Long, batch: Iterator[UserEvent],
          state: GroupState[UserProfile]) =>
-          if (state.hasTimedOut) {
-            val last = state.get
-            state.remove()
-            last
-          } else {
-            val prev = state.getOption
-              .getOrElse(UserProfile(userId, 0L, 0.0, Long.MinValue))
-            val next = batch.foldLeft(prev) { (p, e) =>
-              UserProfile(userId, p.n_events + 1,
-                p.total_value + e.value,
-                math.max(p.last_seen_ms, e.ts.getTime))
-            }
-            state.update(next)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            next
+          val prev = state.getOption
+            .getOrElse(UserProfile(userId, 0L, 0.0, Long.MinValue))
+          val next = batch.foldLeft(prev) { (p, e) =>
+            UserProfile(userId, p.n_events + 1,
+              p.total_value + e.value,
+              math.max(p.last_seen_ms, e.ts.getTime))
           }
+          state.update(next)
+          next
       }
   }
 
@@ -378,17 +367,17 @@ object StreamingOps {
     * flag is a pure function of the document and the eval set (no
     * cross-batch state, no watermark), so streaming and batch
     * classify identically by construction (StreamingSpec asserts it)
-    * and replay merely re-appends the same clean rows. `hashed`
-    * defaults to the production broadcast squeeze; the eval n-gram
-    * broadcast is rebuilt per micro-batch — benchmark-sized by
-    * contract (SCALING.md, decontamination). */
+    * and replay merely re-appends the same clean rows. The stream
+    * always uses the production broadcast squeeze (`hashed = true`);
+    * the eval n-gram broadcast is rebuilt per micro-batch —
+    * benchmark-sized by contract (SCALING.md, decontamination). */
   def decontaminateStream(stream: DataFrame, evalSet: DataFrame,
                           idCol: String, textCol: String, n: Int,
-                          outDir: String, hashed: Boolean = true)
+                          outDir: String)
       : DataStreamWriter[Row] =
     availableNow(stream) { (batch, _) =>
       val kept = graft.ext.DecontamOps.decontaminate(
-        batch, evalSet, idCol, textCol, n, hashed)
+        batch, evalSet, idCol, textCol, n, hashed = true)
       graft.io.Staging.appendParquet(kept, outDir, "clean")
       ()
     }
@@ -424,15 +413,15 @@ object StreamingOps {
     * through a second topic, so a document is judged by both layers
     * in the SAME micro-batch (chaining two streams would let a
     * gate-clean doc land durably before the semantic screen saw
-    * it). */
+    * it). Like [[decontaminateStream]], the n-gram gate is hashed. */
   def decontaminateFullStream(stream: DataFrame, evalSet: DataFrame,
                               idCol: String, textCol: String,
                               vecCol: String, n: Int, tau: Double,
-                              outDir: String, hashed: Boolean = true)
+                              outDir: String)
       : DataStreamWriter[Row] =
     availableNow(stream) { (batch, _) =>
       val kept = graft.ext.DecontamOps.decontaminateFull(
-        batch, evalSet, idCol, textCol, vecCol, n, tau, hashed)
+        batch, evalSet, idCol, textCol, vecCol, n, tau, hashed = true)
       graft.io.Staging.appendParquet(kept, outDir, "clean")
       ()
     }
@@ -491,7 +480,7 @@ object StreamingOps {
 
   /** Streaming twin of the incremental quality-classifier count
     * maintenance ([[graft.ext.ClassifierOps.updateClassifierCounts]]):
-    * each LABELED micro-batch appends its ≤ numBuckets bucket-count
+    * each LABELED micro-batch appends its ≤ 4096 bucket-count
     * delta plus its class-document-count row under the EPOCH id, so
     * a replayed epoch re-appends bit-identical rows the serve-side
     * fold ([[graft.ext.ClassifierOps.classifierFromStore]])
@@ -501,23 +490,23 @@ object StreamingOps {
     * reason. The bucket counts and the class-document sentinel ride
     * ONE delta frame (r15), so a crashed epoch either replays whole
     * or fails the serve-time sentinel check — never a silently
-    * skewed bias. */
+    * skewed bias. The bucket count is the batch operator's default
+    * (4096), which the store's marker then pins. */
   def classifierCountStream(stream: DataFrame, idCol: String,
                             textCol: String, posFlag: Column,
-                            storeDir: String,
-                            numBuckets: Int = 4096)
+                            storeDir: String)
       : DataStreamWriter[Row] =
     availableNow(stream) { (batch, epoch) =>
       guardLineage(batch, "classifierCountStream", storeDir, "clf_counts",
         epoch)
       graft.ext.ClassifierOps.updateClassifierCounts(batch, idCol,
-        textCol, posFlag, storeDir, batchId = epoch, numBuckets)
+        textCol, posFlag, storeDir, batchId = epoch)
       ()
     }
 
   /** Streaming twin of the incremental language-ID count maintenance
     * ([[graft.ext.ClassifierOps.updateLangIdCounts]]): each LABELED
-    * micro-batch appends its ≤ numBuckets × L (lang, bucket) count
+    * micro-batch appends its ≤ 4096 × L (lang, bucket) count
     * delta plus one per-language document-count sentinel row under
     * the EPOCH id — the delta-log triple (update / CountLog /
     * streaming twin) every other learned model already has, closed
@@ -527,17 +516,17 @@ object StreamingOps {
     * exactly-once counts with no extra bookkeeping. The
     * epoch-vs-store-max lineage guard and the per-lineage `storeDir`
     * scoping are [[bigramCountStream]]'s, for the same corruption
-    * reason. */
+    * reason. The bucket count is the batch operator's default (4096),
+    * as in [[classifierCountStream]]. */
   def langIdCountStream(stream: DataFrame, idCol: String,
                         textCol: String, langCol: String,
-                        storeDir: String,
-                        numBuckets: Int = 4096)
+                        storeDir: String)
       : DataStreamWriter[Row] =
     availableNow(stream) { (batch, epoch) =>
       guardLineage(batch, "langIdCountStream", storeDir, "langid_counts",
         epoch)
       graft.ext.ClassifierOps.updateLangIdCounts(batch, idCol,
-        textCol, langCol, storeDir, batchId = epoch, numBuckets)
+        textCol, langCol, storeDir, batchId = epoch)
       ()
     }
 
@@ -687,15 +676,15 @@ object StreamingOps {
     * exactly this with a 24 h trigger; composed with
     * [[incrementalLoadStream]] it turns the whole operational load
     * into a continuous pipeline with the same idempotency contract.
-    * `maxFilesPerTrigger` bounds micro-batch size so one giant
-    * backlog drop doesn't become one giant batch. */
+    * A micro-batch takes at most 100 files (`maxFilesPerTrigger`), so
+    * one giant backlog drop doesn't become one giant batch. */
   def stagingCsvStream(spark: org.apache.spark.sql.SparkSession,
                        prefix: String,
-                       schema: org.apache.spark.sql.types.StructType,
-                       maxFilesPerTrigger: Int = 100): DataFrame =
+                       schema: org.apache.spark.sql.types.StructType)
+      : DataFrame =
     spark.readStream
       .option("header", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 100)
       .schema(schema)
       .csv(s"$prefix/*.csv")
 }

@@ -83,8 +83,7 @@ object GenSf {
     val nDocs = 5000L * m
     val nEmb = 2000L * m
 
-    def ids(n: Long, parts: Int = 32) =
-      spark.range(0, n, 1, parts).toDF("id")
+    def ids(n: Long) = spark.range(0, n, 1, 32).toDF("id")
     def save(df: DataFrame, name: String): Unit = {
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
       println(s"[gensf] wrote $name")

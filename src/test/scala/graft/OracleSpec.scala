@@ -43,4 +43,28 @@ class OracleSpec extends SparkSpec {
       "containment_dedup", "ngram_jaccard_topk", "dup_span_coverage",
       "dup_span_strip"))
   }
+
+  test("operators whose never-set options became constants match the " +
+    "DuckDB oracle: BM25, simhash, embedding and image dedup, ANN, " +
+    "repetition, MAD gates, CMS, media decode, lang-ID, BPE, events") {
+    assertOracle(Seq("bm25_rank", "bm25_indexed", "dedup_simhash",
+      "dedup_simhash_verified", "dedup_embedding", "dedup_image_phash",
+      "ann_ivf_topk", "ann_lsh_verified", "dup_line_signals",
+      "mad_outlier_gate", "mad_gate_rolling", "mad_gate_frozen",
+      "heavy_hitters_cms", "incremental_topk_cms", "multimodal_decode",
+      "audio_segments", "lang_id_learned", "bpe_token_count",
+      "events_tumbling"))
+  }
+
+  test("reading the events table sets no session conf: the legacy " +
+    "parquet nanosAsLong key stays unset and ts reads as a µs timestamp") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    val events = Tables.events(spark, d)
+    assert(events.schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    assert(events.count() > 0)
+    assert(!spark.conf.getAll.contains(key),
+      s"reading events set $key=${spark.conf.getAll.get(key)}")
+  }
 }
