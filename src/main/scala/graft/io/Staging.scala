@@ -389,12 +389,12 @@ object Staging {
   /** D1/D2 — ensure a store table exists with its declared schema
     * (reference CREATE TABLE IF NOT EXISTS, transformation_db.py:11-89,
     * transformation_dw.py:6-120). Parquet stores are schema-on-write,
-    * so "create if not exists" = write an empty frame once. */
+    * so "create if not exists" = write one zero-row file once
+    * ([[ParquetFooters.writeEmpty]]): a footer holding the schema,
+    * written on the driver with no Spark job. An existing table is
+    * left as it is. */
   def ensureTable(spark: SparkSession, storeDir: String, table: String,
                   schema: StructType): Unit =
-    if (!tableExists(spark, storeDir, table)) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode(SaveMode.Overwrite).parquet(s"$storeDir/$table")
-    }
+    if (!tableExists(spark, storeDir, table))
+      ParquetFooters.writeEmpty(spark, s"$storeDir/$table", schema)
 }

@@ -418,10 +418,7 @@ object VersionedStore {
           // readable files — materialize an explicit empty PLAIN
           // version (partition col as an ordinary column) so the
           // schema survives; readers take the plain path
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            df.schema)
-            .write.mode(SaveMode.Overwrite).parquet(s"$vdir/data")
+          ParquetFooters.writeEmpty(spark, s"$vdir/data", df.schema)
         else writeParts(fs, vdir,
           PartsManifest(partCol, typ, emitted.map(d => (next, d))))
     }
@@ -451,10 +448,7 @@ object VersionedStore {
         if (entries.isEmpty)
           // the operation emptied the table: schema-preserving plain
           // empty version, same as commitPartitioned's empty case
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            merged.schema)
-            .write.mode(SaveMode.Overwrite).parquet(s"$vdir/data")
+          ParquetFooters.writeEmpty(spark, s"$vdir/data", merged.schema)
         else writeParts(fs, vdir, mf.copy(entries = entries))
     }
 

@@ -108,7 +108,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("one batch: every job it starts carries the caller's local " +
-    "properties, and it starts at most 39 jobs") {
+    "properties, and it starts at most 34 jobs") {
     val root = Files.createTempDirectory("graft-etl-jobs")
     val staging = root.resolve("staging")
     fixtures(staging)
@@ -132,7 +132,7 @@ class EtlPipelineSpec extends SparkSpec {
     // the plain listener also saw jobsDuring's own untagged sentinel
     assert(all.get == tagged + 1,
       s"${all.get - 1} jobs started, only $tagged carried the tag")
-    assert(tagged <= 39, s"$tagged jobs")
+    assert(tagged <= 34, s"$tagged jobs")
   }
 
   test("a missing staging prefix loads 0 and adds no file to its " +

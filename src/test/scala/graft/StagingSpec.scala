@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import graft.io.Staging
+import graft.io.{ParquetFooters, Staging}
+import graft.schema.Schemas
 
 class StagingSpec extends SparkSpec {
   import spark.implicits._
@@ -75,5 +77,59 @@ class StagingSpec extends SparkSpec {
     assert(path.matches(".*/recs_\\d{8}_\\d{6}\\.csv"))
     val back = spark.read.option("header", "true").schema(schema).csv(path)
     assert(back.count() == 1)
+  }
+
+  private def ensureAll(store: String,
+                        schemas: Map[String, StructType]): Unit =
+    schemas.foreach { case (t, s) => Staging.ensureTable(spark, store, t, s) }
+
+  test("ensureTable creates the operational DDL with no Spark job; a " +
+    "second call changes no listing and no hidden temp file stays") {
+    val store = Files.createTempDirectory("graft-ddl").toString
+    val (_, jobs) = jobsDuring(ensureAll(store, Schemas.operational))
+    assert(jobs == 0, s"$jobs jobs")
+    def listing = Schemas.operational.keys.map(t =>
+      t -> new java.io.File(s"$store/$t").list().toSet).toMap
+    val before = listing
+    ensureAll(store, Schemas.operational)
+    assert(listing == before)
+    before.foreach { case (t, files) =>
+      val (hidden, visible) = files.partition(_.startsWith("."))
+      assert(visible.size == 1 && visible.head.startsWith("part-") &&
+        visible.head.endsWith(".parquet"), s"$t: $files")
+      // the local file system's checksum of the data file, nothing else
+      assert(hidden == visible.map(f => s".$f.crc"), s"$t: $files")
+    }
+  }
+
+  test("every declared schema round-trips through a zero-row table: " +
+    "inference, requested-schema and mergeSchema reads, footer count; " +
+    "then an appended row reads back") {
+    val store = Files.createTempDirectory("graft-ddl-schemas").toString
+    val declared = Schemas.operational ++ Schemas.mart
+    assert(declared.size == 16)
+    // a column comment has no parquet form: only the footer's Spark
+    // row-metadata key carries it back
+    val commented = StructType(Seq(
+      StructField("id", StringType).withComment("primary key"),
+      StructField("at", TimestampType)))
+    val schemas = declared + ("commented" -> commented)
+    ensureAll(store, schemas)
+    schemas.foreach { case (t, s) =>
+      val dir = s"$store/$t"
+      val reads = Seq("inference" -> Staging.readTable(spark, store, t),
+        "requested" -> spark.read.schema(s).parquet(dir),
+        "mergeSchema" -> Staging.readTableEvolved(spark, store, t))
+      reads.foreach { case (how, df) =>
+        assert(df.schema == s, s"$t by $how: ${df.schema.treeString}")
+      }
+      assert(reads.map(_._2).reduce(_.union(_)).count() == 0, t)
+      assert(ParquetFooters.rowCount(spark, Seq(dir)) == 0, t)
+      Staging.appendParquet(spark.createDataFrame(
+        java.util.List.of(Row.fromSeq(Seq.fill(s.length)(null))), s),
+        store, t)
+      val back = Staging.readTable(spark, store, t)
+      assert(back.schema == s && back.count() == 1, t)
+    }
   }
 }
