@@ -27,7 +27,7 @@ object Verify {
       // oracle dump (bounded sf0.01 results, one comparable file per
       // query), but it is the opposite of a production sink: never copy
       // this pattern into a real write path
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try graft.io.Fs.write(fn(spark, sfDir).coalesce(1)).mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

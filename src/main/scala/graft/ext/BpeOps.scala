@@ -180,11 +180,11 @@ object BpeOps {
   def saveMerges(spark: org.apache.spark.sql.SparkSession,
                  merges: Seq[(String, String)], dir: String): Unit = {
     import spark.implicits._
-    merges.zipWithIndex
+    val ranked = merges.zipWithIndex
       .map { case ((a, b), i) => (i + 1L, a, b) }
       .toDF("rank", "a", "b")
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/merges")
+    graft.io.Fs.write(ranked).mode("overwrite").parquet(s"$dir/merges")
   }
 
   /** Load a [[saveMerges]] table back into rank order. Bounded

@@ -184,10 +184,9 @@ object CountLog {
     val floor =
       if (fts.size < 2) None else Some((fts - fts.max).min)
     floor.foreach { pf =>
-      val hconf = spark.sparkContext.hadoopConfiguration
       val dPath = new org.apache.hadoop.fs.Path(
         s"$storeDir/${deltaTable(table)}")
-      val fs = dPath.getFileSystem(hconf)
+      val fs = Fs.get(spark, dPath)
       if (fs.exists(dPath))
         fs.listStatus(dPath).toSeq
           .filter(s => s.isDirectory &&

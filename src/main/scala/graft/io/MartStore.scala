@@ -161,10 +161,6 @@ object MartStore {
     case _          => None
   }
 
-  private def fsFor(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** One resolved, immutable view of the whole store: every
     * `readTable` against the same snapshot reads from the same mart
     * commit — the all-or-nothing reader contract. `dirs` maps table →
@@ -223,7 +219,7 @@ object MartStore {
       : Seq[(Long, org.apache.hadoop.fs.Path,
              (Long, Option[String], Map[String, String]))] = {
     val dir = new org.apache.hadoop.fs.Path(s"$storeDir/$CommitsDir")
-    val fs = fsFor(spark, storeDir)
+    val fs = Fs.get(spark, storeDir)
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith(CPrefix))
@@ -352,7 +348,7 @@ object MartStore {
                  lease: PublishLease = PublishLease.Unfenced): Snapshot = {
     if (batchId.exists(appliedBatchIds(spark, storeDir)))
       return snapshot(spark, storeDir).get
-    val fs = fsFor(spark, storeDir)
+    val fs = Fs.get(spark, storeDir)
     val cs = commits(spark, storeDir)
     val cur: Map[String, String] = cs.lastOption.map(_._3._3)
       .getOrElse(Map.empty)
@@ -374,7 +370,7 @@ object MartStore {
           val v =
             versionDirs(fs, troot).map(_._1).maxOption.getOrElse(0L) + 1
           val dirName = vname(v, nonce8)
-          df.write.mode(SaveMode.Overwrite)
+          Fs.write(df).mode(SaveMode.Overwrite)
             .parquet(s"$storeDir/$name/$dirName/data")
           dirName
         }

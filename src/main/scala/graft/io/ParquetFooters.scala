@@ -78,7 +78,7 @@ object ParquetFooters {
     val conf = spark.sessionState.newHadoopConf()
     val files: Array[FileStatus] = dirs.iterator.flatMap { d =>
       val p = new Path(d)
-      dataFiles(p.getFileSystem(conf), p)
+      dataFiles(Fs.get(p, conf), p)
     }.toArray
     def countOf(st: FileStatus): Long = {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -97,9 +97,9 @@ object ParquetFooters {
     * the row-metadata key (header). Starts no Spark job. */
   def writeEmpty(spark: SparkSession, dir: String,
                  schema: StructType): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = Fs.localWrites(spark.sessionState.newHadoopConf())
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
+    val fs = Fs.get(root, conf)
     val name = s"part-00000-${java.util.UUID.randomUUID()}-c000.parquet"
     val hidden = new Path(root, s".$name")
     val w = new ParquetFileWriter(HadoopOutputFile.fromPath(hidden, conf),

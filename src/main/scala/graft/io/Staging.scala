@@ -11,24 +11,33 @@ import org.apache.spark.sql.types.StructType
   * -store prefix (`data/utils.py`), appends new rows into an
   * operational store (`transformation_db.py:116`), and truncate-loads
   * a derived mart (`transformation_dw.py:154-156` et al.). Here the
-  * staging layer is a CSV directory glob and the stores are parquet
-  * directories — same topology, engine-native formats. On a cluster
-  * the paths are object-store URIs; nothing else changes.
+  * staging layer is the `*.csv` entries of a directory and the stores
+  * are parquet directories — same topology, engine-native formats. On
+  * a cluster the paths are object-store URIs; nothing else changes.
+  *
+  * Every file-system call here resolves through [[Fs.get]] and every
+  * path write starts from [[Fs.write]], so a local store's
+  * directories and files get their mode bits without a forked
+  * `chmod` process (see [[Fs]]).
   */
 object Staging {
 
-  /** Scheme-agnostic probe: does `prefix` contain any `*.csv`?
+  /** Scheme-agnostic listing: the `*.csv` entries directly under
+    * `prefix` (files, or the directories a Spark CSV write leaves).
     * Resolved through Hadoop's [[org.apache.hadoop.fs.FileSystem]] so
     * the same code answers correctly for `file:`, `hdfs:`, `s3a:`,
     * `gs:` — the reference's staging layer IS an object store
     * (`data/utils.py:28-34` lists GCS blobs), and a `java.io.File`
     * probe there would silently report "no files" and turn the
-    * operational load into a no-op. */
-  private def hasCsvFiles(spark: SparkSession, prefix: String): Boolean = {
+    * operational load into a no-op. The readers scan exactly these
+    * paths: the one listing answers both "is there anything to load"
+    * and "what", and Spark is never handed the glob pattern as a
+    * path (its sink-metadata check would stat the pattern literally
+    * and log a `FileNotFoundException` per read). */
+  private def csvPaths(spark: SparkSession, prefix: String): Seq[String] = {
     val path = new org.apache.hadoop.fs.Path(s"$prefix/*.csv")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hits = fs.globStatus(path)
-    hits != null && hits.nonEmpty
+    Option(Fs.get(spark, path).globStatus(path)).toSeq.flatten
+      .map(_.getPath.toString)
   }
 
   /** F1 — multi-file CSV scan: read every `*.csv` under a prefix and
@@ -41,11 +50,11 @@ object Staging {
     * (`OperationalLoad`'s empty-batch skip) instead of a scan. */
   def readCsvPrefix(spark: SparkSession, prefix: String,
                     schema: StructType): DataFrame = {
-    if (!hasCsvFiles(spark, prefix))
+    val paths = csvPaths(spark, prefix)
+    if (paths.isEmpty)
       spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
         schema)
-    else spark.read.option("header", "true").schema(schema)
-      .csv(s"$prefix/*.csv")
+    else spark.read.option("header", "true").schema(schema).csv(paths: _*)
   }
 
   /** F1 with row-level error isolation: the reference catches
@@ -67,8 +76,9 @@ object Staging {
     val withCorrupt = StructType(schema.fields :+
       org.apache.spark.sql.types.StructField("_corrupt_record",
         org.apache.spark.sql.types.StringType))
-    def parse() =
-      if (!hasCsvFiles(spark, prefix)) spark.createDataFrame(
+    def parse() = {
+      val paths = csvPaths(spark, prefix)
+      if (paths.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withCorrupt)
       else {
         val df = spark.read
@@ -76,12 +86,13 @@ object Staging {
           .option("mode", "PERMISSIVE")
           .option("columnNameOfCorruptRecord", "_corrupt_record")
           .schema(withCorrupt)
-          .csv(s"$prefix/*.csv")
+          .csv(paths: _*)
         // corrupt-record access requires a materialization boundary
         // when the query touches ONLY the corrupt column (Spark
         // disallows that on the streaming parse path)
         if (cache) df.cache() else df
       }
+    }
     val raw = parse()
     val raw2 = if (cache) raw else parse()
     val clean = raw.filter(raw("_corrupt_record").isNull)
@@ -104,7 +115,7 @@ object Staging {
       .ofPattern("yyyyMMdd_HHmmss").withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now())
     val path = s"$prefix/${baseName}_$stamp.csv"
-    df.coalesce(1).write.option("header", "true")
+    Fs.write(df.coalesce(1)).option("header", "true")
       .mode(SaveMode.Overwrite).csv(path)
     path
   }
@@ -114,28 +125,28 @@ object Staging {
                 table: String): DataFrame =
     spark.read.parquet(s"$storeDir/$table")
 
-  /** Scheme-agnostic existence probe (see [[hasCsvFiles]]): a
+  /** Scheme-agnostic existence probe (see [[csvPaths]]): a
     * `java.io.File` check here would make [[ensureTable]] re-truncate
     * and `loadIfNew` skip its anti-join (double-append) the moment the
     * store lives on an object store. */
   def tableExists(spark: SparkSession, storeDir: String,
                   table: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(s"$storeDir/$table")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.get(spark, path)
     fs.exists(path)
   }
 
   /** F5 — append sink (reference `to_sql(if_exists='append')`,
     * transformation_db.py:116). */
   def appendParquet(df: DataFrame, storeDir: String, table: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(s"$storeDir/$table")
+    Fs.write(df).mode(SaveMode.Append).parquet(s"$storeDir/$table")
 
   /** Partitioned append: new files land inside the partition dirs,
     * existing files are never touched (the layout the incremental IVF
     * postings store uses so probes read only their partitions). */
   def appendPartitioned(df: DataFrame, storeDir: String, table: String,
                         partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Append)
+    Fs.write(df).mode(SaveMode.Append)
       .partitionBy(partitionCols: _*)
       .parquet(s"$storeDir/$table")
 
@@ -143,7 +154,7 @@ object Staging {
     * transformation_dw.py:154-156). */
   def overwriteParquet(df: DataFrame, storeDir: String,
                        table: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(s"$storeDir/$table")
+    Fs.write(df).mode(SaveMode.Overwrite).parquet(s"$storeDir/$table")
 
   /** Store-format marker: a tiny `_graft_<name>` file beside an
     * index/store's tables holding a format-version string. Readers
@@ -157,7 +168,7 @@ object Staging {
   def writeMarker(spark: SparkSession, storeDir: String, name: String,
                   value: String): Unit = {
     val path = new org.apache.hadoop.fs.Path(s"$storeDir/_graft_$name")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.get(spark, path)
     val out = fs.create(path, true)
     try out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -168,7 +179,7 @@ object Staging {
   def readMarker(spark: SparkSession, storeDir: String,
                  name: String): Option[String] = {
     val path = new org.apache.hadoop.fs.Path(s"$storeDir/_graft_$name")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.get(spark, path)
     if (!fs.exists(path)) None
     else {
       val in = fs.open(path)
@@ -193,7 +204,7 @@ object Staging {
   def overwritePartitionsDynamic(df: DataFrame, storeDir: String,
                                  table: String,
                                  partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    Fs.write(df).mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(s"$storeDir/$table")
@@ -229,10 +240,12 @@ object Staging {
     * price of clustering at write time, amortized over every
     * subsequent pruned read. */
   def writeClusteredBy(df: DataFrame, storeDir: String, table: String,
-                       clusterCols: Seq[String], files: Int): Unit =
-    df.repartitionByRange(files, clusterCols.map(col): _*)
+                       clusterCols: Seq[String], files: Int): Unit = {
+    val clustered = df.repartitionByRange(files, clusterCols.map(col): _*)
       .sortWithinPartitions(clusterCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(s"$storeDir/$table")
+    Fs.write(clustered).mode(SaveMode.Overwrite)
+      .parquet(s"$storeDir/$table")
+  }
 
   /** Z-order (Morton-curve) clustered write over TWO numeric
     * dimensions: each row's dimensions are bucketed to `2^bits` cells
@@ -270,7 +283,7 @@ object Staging {
           .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)),
             2 * i))
       }
-    df.crossJoin(broadcast(stats))
+    val zordered = df.crossJoin(broadcast(stats))
       .withColumn("__z", interleave(
         bucket(colA, col("__alo"), col("__ahi")),
         bucket(colB, col("__blo"), col("__bhi"))))
@@ -278,7 +291,7 @@ object Staging {
       .repartitionByRange(files, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(s"$storeDir/$table")
+    Fs.write(zordered).mode(SaveMode.Overwrite).parquet(s"$storeDir/$table")
   }
 
   /** Schema-evolving append: like [[appendParquet]], but a read
@@ -288,7 +301,7 @@ object Staging {
     * "ALTER TABLE ADD COLUMN" on a file store: zero data movement. */
   def appendParquetEvolving(df: DataFrame, storeDir: String,
                             table: String): Unit =
-    df.write.mode(SaveMode.Append)
+    Fs.write(df).mode(SaveMode.Append)
       .option("mergeSchema", "true")
       .parquet(s"$storeDir/$table")
 
@@ -326,7 +339,7 @@ object Staging {
     val path = s"$storeDir/$table"
     val tmp = new org.apache.hadoop.fs.Path(
       s"$storeDir/__${markerPrefix}_tmp_$table")
-    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.get(spark, tmp)
     if (fs.exists(tmp)) {
       val complete = fs.exists(
         new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
@@ -339,7 +352,7 @@ object Staging {
       // partial write from a crashed run; the store was never touched
       fs.delete(tmp, true)
     }
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    Fs.write(df).mode(SaveMode.Overwrite).parquet(tmp.toString)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(path)))
       throw new java.io.IOException(
@@ -357,7 +370,7 @@ object Staging {
   def compactTable(spark: SparkSession, storeDir: String, table: String,
                    targetFileMB: Int = 128): Long = {
     val hp = new org.apache.hadoop.fs.Path(s"$storeDir/$table")
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.get(spark, hp)
     val bytes = fs.getContentSummary(hp).getLength
     val nFiles = math.max(1L,
       bytes / (targetFileMB.toLong * 1024 * 1024)).toInt
@@ -376,7 +389,7 @@ object Staging {
                      partitionCol: String,
                      drop: String => Boolean): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(s"$storeDir/$table")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.get(spark, root)
     val prefix = s"$partitionCol="
     val dropped = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))

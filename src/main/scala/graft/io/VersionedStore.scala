@@ -88,10 +88,6 @@ object VersionedStore {
 
   private def vname(v: Long): String = f"$VerPrefix$v%07d"
 
-  private def fsFor(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The partition manifest of one version: header line
     * `#partcol=<name>\t<catalogType>`, then one `<ownerVersion>\t<dir>`
     * line per live partition (`dir` is the Spark-escaped partition
@@ -137,7 +133,7 @@ object VersionedStore {
     * inference could otherwise drift between owner groups). */
   private def readVersion(spark: SparkSession, root: String,
                           vdir: org.apache.hadoop.fs.Path): DataFrame = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.get(spark, root)
     readParts(fs, vdir) match {
       case None     => spark.read.parquet(s"$vdir/data")
       case Some(mf) => readEntries(spark, root, mf, mf.entries)
@@ -169,7 +165,7 @@ object VersionedStore {
     * same value by construction, metadata-only cost. */
   private def versionRowCount(spark: SparkSession, root: String,
                               vdir: org.apache.hadoop.fs.Path): Long = {
-    val fs = fsFor(spark, root)
+    val fs = Fs.get(spark, root)
     readParts(fs, vdir) match {
       case None => ParquetFooters.rowCount(spark, Seq(s"$vdir/data"))
       case Some(mf) => ParquetFooters.rowCount(spark,
@@ -233,7 +229,7 @@ object VersionedStore {
                        table: String)
       : Seq[(Long, org.apache.hadoop.fs.Path, Boolean)] = {
     val root = new org.apache.hadoop.fs.Path(s"$storeDir/$table")
-    val fs = fsFor(spark, root.toString)
+    val fs = Fs.get(spark, root)
     if (!fs.exists(root)) return Nil
     fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(VerPrefix))
@@ -270,7 +266,7 @@ object VersionedStore {
 
   private def markerBatchId(spark: SparkSession,
                             p: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = fsFor(spark, p.toString)
+    val fs = Fs.get(spark, p)
     val in = fs.open(new org.apache.hadoop.fs.Path(p, Marker))
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
               finally in.close()
@@ -310,7 +306,7 @@ object VersionedStore {
     if (batchId.exists(appliedBatchIds(spark, storeDir, table)))
       return currentRowCount(spark, storeDir, table)
     val root = s"$storeDir/$table"
-    val fs = fsFor(spark, root)
+    val fs = Fs.get(spark, root)
     val vs = versions(spark, storeDir, table)
     val next = vs.lastOption.map(_._1 + 1).getOrElse(1L)
     // clear dead uncommitted dirs (crashed writers — single-writer
@@ -354,7 +350,7 @@ object VersionedStore {
              keepVersions: Int = 2): Long =
     commitVersion(spark, storeDir, table, batchId, keepVersions) {
       (_, vdir, _) =>
-        df.write.mode(SaveMode.Overwrite).parquet(s"$vdir/data")
+        Fs.write(df).mode(SaveMode.Overwrite).parquet(s"$vdir/data")
     }
 
   /** Read-modify-write commit: `f(current)` becomes the next version.
@@ -409,7 +405,7 @@ object VersionedStore {
     val typ = df.schema(partCol).dataType.catalogString
     commitVersion(spark, storeDir, table, batchId, keepVersions) {
       (fs, vdir, next) =>
-        df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
+        Fs.write(df).mode(SaveMode.Overwrite).partitionBy(partCol)
           .parquet(s"$vdir/data")
         val emitted =
           listPartDirs(fs, new org.apache.hadoop.fs.Path(s"$vdir/data"))
@@ -439,7 +435,7 @@ object VersionedStore {
                                    keepVersions: Int): Long =
     commitVersion(spark, storeDir, table, batchId, keepVersions) {
       (fs, vdir, next) =>
-        merged.write.mode(SaveMode.Overwrite).partitionBy(mf.partCol)
+        Fs.write(merged).mode(SaveMode.Overwrite).partitionBy(mf.partCol)
           .parquet(s"$vdir/data")
         val emitted =
           listPartDirs(fs, new org.apache.hadoop.fs.Path(s"$vdir/data"))
@@ -485,7 +481,7 @@ object VersionedStore {
           batchId, keepVersions)
       case Some((_, vdir)) =>
         val root = s"$storeDir/$table"
-        readParts(fsFor(spark, root), vdir) match {
+        readParts(Fs.get(spark, root), vdir) match {
           case None =>
             // current version is plain (created by `commit`, or an
             // emptied placeholder): merge and re-snapshot partitioned
@@ -530,7 +526,7 @@ object VersionedStore {
       return currentRowCount(spark, storeDir, table)
     val (_, vdir) = currentVersion(spark, storeDir, table).get
     val root = s"$storeDir/$table"
-    readParts(fsFor(spark, root), vdir) match {
+    readParts(Fs.get(spark, root), vdir) match {
       case None =>
         deleteKeys(spark, keys, storeDir, table, key, batchId)
       case Some(mf) =>
@@ -561,7 +557,7 @@ object VersionedStore {
     currentVersion(spark, storeDir, table) match {
       case None => 0
       case Some((_, vdir)) =>
-        readParts(fsFor(spark, s"$storeDir/$table"), vdir) match {
+        readParts(Fs.get(spark, s"$storeDir/$table"), vdir) match {
           case Some(mf) => mf.entries.map(_._1).distinct.size
           case None     => 1
         }
@@ -579,7 +575,7 @@ object VersionedStore {
       throw new java.util.NoSuchElementException(
         s"no committed version of $storeDir/$table"))
     val root = s"$storeDir/$table"
-    val mf = readParts(fsFor(spark, root), vdir).getOrElse(
+    val mf = readParts(Fs.get(spark, root), vdir).getOrElse(
       throw new IllegalStateException(
         s"$table's current version is not partition-granular"))
     commitPartitioned(spark, readVersion(spark, root, vdir), storeDir,

@@ -39,14 +39,18 @@ object FixtureStore {
     }
   }
 
-  /** The deterministic per-(query, sf-dir) scratch path — exposed
-    * separately from [[clearedScratchDir]] because an oracle twin
-    * that reads a persisted fixture back (the `bpe_token_count_store`
-    * merge table) must compose the SAME path formula at SQL-generation
-    * time, and duplicating the formula is how the two sides drift. */
+  /** The per-(query, sf-dir, JVM) scratch path — exposed separately
+    * from [[clearedScratchDir]] because an oracle twin that reads a
+    * persisted fixture back (the `bpe_token_count_store` merge table)
+    * must compose the SAME path formula at SQL-generation time, and
+    * duplicating the formula is how the two sides drift. The JVM's
+    * process id is part of the name: two JVMs over the same data dir
+    * (a test suite and a `Verify` dump) would otherwise share, and
+    * clear, each other's stores mid-run. */
   def scratchDirFor(name: String, d: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_q_${name}_" +
-      java.lang.Integer.toHexString(d.hashCode)
+      s"${java.lang.Integer.toHexString(d.hashCode)}_" +
+      ProcessHandle.current().pid()
 
   /** Deterministic per-(query, sf-dir) scratch dir, cleared on call.
     * Queries that WRITE stores use this so repeated bench executions
@@ -56,7 +60,7 @@ object FixtureStore {
                         d: String): String = {
     val dir = scratchDirFor(name, d)
     val dp = new org.apache.hadoop.fs.Path(dir)
-    dp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dp, true)
+    graft.io.Fs.get(s, dp).delete(dp, true)
     dir
   }
 

@@ -883,9 +883,9 @@ object Text3Queries {
     // space-delimited symbols), so inference-at-depth and the
     // persistence round-trip are both certified without unrolling
     // training in SQL. The fixture path is the gate-SF scratch dir
-    // by construction (FixtureStore.scratchDirFor — oracle SQL is
-    // static, the gate runs at sf0.01 by the driver contract; any
-    // other SF fails the oracle loudly on a missing file, never
+    // by construction (FixtureStore.scratchDirFor, composed in the
+    // JVM that writes the fixture — the oracle gate runs at sf0.01;
+    // any other SF fails the oracle loudly on a missing file, never
     // silently).
     "bpe_token_count_store" -> QueryDef(
       (s, d) => {

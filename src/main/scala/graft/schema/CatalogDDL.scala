@@ -38,8 +38,7 @@ object CatalogDDL {
 
   private def qualify(spark: SparkSession, location: String): String = {
     val p = new org.apache.hadoop.fs.Path(location)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(p).toUri.toString
+    graft.io.Fs.get(spark, p).makeQualified(p).toUri.toString
   }
 
   /** True idempotence, not just `IF NOT EXISTS`: re-registering an

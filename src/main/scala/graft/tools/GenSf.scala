@@ -85,7 +85,7 @@ object GenSf {
 
     def ids(n: Long) = spark.range(0, n, 1, 32).toDF("id")
     def save(df: DataFrame, name: String): Unit = {
-      df.write.mode("overwrite").parquet(s"$out/$name.parquet")
+      graft.io.Fs.write(df).mode("overwrite").parquet(s"$out/$name.parquet")
       println(s"[gensf] wrote $name")
     }
 

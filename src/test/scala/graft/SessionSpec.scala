@@ -84,6 +84,21 @@ class SessionSpec extends SparkSpec {
     assert(builds.get == 4)
   }
 
+  test("a scratch dir's name carries its JVM's pid, and the " +
+    "bpe_token_count_store twin's SQL reads the dir that formula names") {
+    val pid = ProcessHandle.current().pid()
+    val tmp = System.getProperty("java.io.tmpdir")
+    assert(FixtureStore.scratchDirFor("sessionspec_a", "/data/x") ==
+      s"$tmp/graft_q_sessionspec_a_${Integer.toHexString(
+        "/data/x".hashCode)}_$pid")
+    val read = """read_parquet\('([^']*)/merges/\*\.parquet'\)""".r
+    val dirs = read.findAllMatchIn(
+      SparkEntry.oracleSql("bpe_token_count_store")).map(_.group(1)).toSeq
+    assert(dirs.size == 1 &&
+      dirs.head.startsWith(s"$tmp/graft_q_bpe_merges_") &&
+      dirs.head.endsWith(s"_$pid"), s"$dirs")
+  }
+
   test("artifact builds once per (session, name, dir), and its frame " +
     "survives clearRddCaches and still reads") {
     val builds = new AtomicInteger(0)

@@ -1,6 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import graft.io.{ParquetFooters, Staging}
@@ -23,6 +28,47 @@ class StagingSpec extends SparkSpec {
     val empty = Staging.readCsvPrefix(spark,
       Files.createTempDirectory("graft-empty").toString, schema)
     assert(empty.isEmpty && empty.schema == schema)
+  }
+
+  /** Messages logged while `body` ran. */
+  private def logged(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("staging-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getRootLogger
+    root.addAppender(app)
+    try body finally {
+      root.removeAppender(app)
+      app.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("readCsvPrefix scans the prefix's *.csv entries, never the glob " +
+    "pattern: exactly the CSV rows, the stamped-dir layout included") {
+    val dir = Files.createTempDirectory("graft-staging-paths")
+    Files.writeString(dir.resolve("a_1.csv"), "id,qty,name\n1,10,x\n")
+    Files.writeString(dir.resolve("notes.txt"), "id,qty,name\n9,90,n\n")
+    Staging.writeCsvStamped(Seq((2L, 20L, "y")).toDF("id", "qty", "name"),
+      dir.toString, "b")
+    val expected = Seq((1L, 10L, "x"), (2L, 20L, "y"))
+    // a pattern handed to Spark as a path makes its sink-metadata
+    // check stat it literally: a FileNotFoundException WARN per read
+    val messages = logged {
+      val df = Staging.readCsvPrefix(spark, dir.toString, schema)
+      assert(df.as[(Long, Long, String)].collect().sorted.toSeq == expected)
+      val (clean, _) = Staging.readCsvPrefixIsolated(spark, dir.toString,
+        schema, cache = false)
+      assert(clean.as[(Long, Long, String)].collect().sorted.toSeq ==
+        expected)
+    }
+    assert(!messages.exists(_.contains("metadata directory")),
+      messages.mkString("\n"))
   }
 
   test("readCsvPrefixIsolated skips malformed rows, keeps the rest " +
