@@ -164,40 +164,6 @@ object MartBuild {
       Seq("id_transaksi_income", "timestamp_datetime", "jenis_pemasukan",
         "id_penyumbang", "jumlah_pemasukan", "id_proyek"))
 
-  /** Partition-scoped fact rebuild — the 100 TB form of the
-    * truncate-load: each fact is date-partitioned on its event time
-    * and written with dynamic partition overwrite
-    * ([[Staging.overwritePartitionsDynamic]]), so the rebuild
-    * replaces ONLY the day-partitions the new build emits; untouched
-    * days' files are not rewritten. `dates` ("yyyy-MM-dd") narrows
-    * the rebuild further to specific days. The whole-table [[run]]
-    * keeps the reference's full WRITE_TRUNCATE semantics; this is the
-    * incremental form for stores where a full rewrite is a
-    * multi-hour job. */
-  def runFactsPartitioned(spark: SparkSession, storeDir: String,
-                          martDir: String,
-                          dates: Seq[String] = Nil): Map[String, Long] = {
-    def t(name: String) = storeTable(spark, storeDir, name)
-    val facts: Seq[(String, DataFrame, String)] = Seq(
-      ("fact_maps", factMaps(t("reviews")), "timestamp_datetime"),
-      ("fact_twitter", factTwitter(t("tweets"), t("places")),
-        "created_at_datetime"),
-      ("fact_pengeluaran", factPengeluaran(t("pengeluaran")),
-        "timestamp_datetime"),
-      ("fact_pemasukan", factPemasukan(t("pemasukan")),
-        "timestamp_datetime"))
-    facts.map { case (name, df0, tsCol) =>
-      var df = df0.withColumn("dt", to_date(col(tsCol)))
-      if (dates.nonEmpty)
-        df = df.filter(col("dt").isin(dates.map(java.sql.Date.valueOf): _*))
-      Staging.overwritePartitionsDynamic(df, martDir, name, Seq("dt"))
-      // footer-metadata count (an all-empty fact has no files → 0,
-      // same as the explicit-schema read this replaces)
-      name -> graft.io.ParquetFooters.rowCount(spark,
-        Seq(s"$martDir/$name"))
-    }.toMap
-  }
-
   /** Build all 11 mart tables from the operational store and
     * truncate-load each (reference WRITE_TRUNCATE), the 11 writes side
     * by side ([[graft.IndependentJobs]]): each reads only the store.

@@ -1,11 +1,12 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 import graft.IndependentJobs
-import graft.io.{JdbcStore, Staging}
+import graft.io.{Fs, JdbcStore, Staging}
 import graft.ops.Relational
 import graft.schema.Schemas
 
@@ -32,17 +33,30 @@ object OperationalLoad {
 
   /** Reference `load_data_if_new` (transformation_db.py:91-121):
     * dedupe by key → rename → project → anti-join existing → append.
-    * Returns the number of new rows loaded. */
+    * Returns the number of new rows loaded.
+    *
+    * A nothing-new append still writes one zero-row part file, so the
+    * table's files are listed before the append and, when it loaded 0
+    * rows, the files it added are deleted: the table is left exactly
+    * as it was. One writer per table is the load's contract, so the
+    * added files are this append's own. */
   def loadIfNew(spark: SparkSession, df: DataFrame, storeDir: String,
                 table: String, idColumn: String,
                 columnMapping: Map[String, String] = Map.empty,
-                selectColumns: Seq[String] = Nil): Long =
-    load(df, idColumn, columnMapping, selectColumns,
-      Option.when(Staging.tableExists(spark, storeDir, table))(
-        spark.read.schema(StructType(Seq(
-            df.schema(idColumn).copy(nullable = true))))
-          .parquet(s"$storeDir/$table")))(
+                selectColumns: Seq[String] = Nil): Long = {
+    val dir = new Path(s"$storeDir/$table")
+    val fs = Fs.get(spark, dir)
+    def files() = fs.listStatus(dir).map(_.getPath).toSet
+    val before = Option.when(fs.exists(dir))(files())
+    val n = load(df, idColumn, columnMapping, selectColumns,
+      before.map(_ => spark.read.schema(StructType(Seq(
+          df.schema(idColumn).copy(nullable = true))))
+        .parquet(dir.toString)))(
       Staging.appendParquet(_, storeDir, table))
+    if (n == 0L)
+      before.foreach(b => (files() -- b).foreach(fs.delete(_, false)))
+    n
+  }
 
   /** [[loadIfNew]] against a JDBC operational store — the fidelity
     * path: the reference's store is genuinely a SQL database
@@ -63,7 +77,7 @@ object OperationalLoad {
 
   /** The one load pipeline behind both sinks. `existing` (the store's
     * keys, None when the table is absent) is by-name so an empty batch
-    * never probes the store. */
+    * never reads the store. */
   private def load(df: DataFrame, idColumn: String,
                    columnMapping: Map[String, String],
                    selectColumns: Seq[String],
@@ -77,10 +91,7 @@ object OperationalLoad {
     // Load accounting (reference transformation_db.py:117) via the
     // Observation API: the row count is collected from the SAME job
     // that writes the append — one pass over the data instead of the
-    // cache + count + write double-execution this used to do. A
-    // nothing-new run appends an empty part file (vs the old skip) —
-    // accepted litter at daily cadence; [[Staging.compactTable]]
-    // reclaims it through the whole-table [[Staging.stageAndSwap]].
+    // cache + count + write double-execution this used to do.
     val obs = new org.apache.spark.sql.Observation()
     append(fresh.observe(obs, count(lit(1)).as("n")))
     obs.get("n").asInstanceOf[Long]

@@ -1,8 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.Staging
+import graft.io.VersionedStore
 
 /** Incrementally-maintained rollup: a persisted PARTIAL-aggregate
   * table (per group: count + per-measure sum, the classic mergeable
@@ -21,9 +21,15 @@ import graft.io.Staging
   * The partials table is group-cardinality-sized — typically orders
   * of magnitude smaller than the fact table — so the read-merge-write
   * of the update is a small-table operation even when the fact table
-  * is not; it stages through a temp directory before touching the
-  * store (its lineage reads the store): the whole-table
-  * [[graft.io.Staging.stageAndSwap]].
+  * is not. Every store here (partials, HLL and CMS sketches) is a
+  * [[graft.io.VersionedStore]] table: an update reads the committed
+  * version and commits the merge as the next one
+  * ([[VersionedStore.commitTransform]]), so an update that dies
+  * mid-write leaves an uncommitted version no reader sees and the
+  * next update sweeps — no leftover state ever makes an update
+  * refuse. A table written in the plain parquet layout (files directly
+  * under `<storeDir>/<table>`) is not read: it has no committed
+  * version.
   *
   * Invariant (RollupSpec): after any batch sequence, `readFinal` ==
   * the direct aggregate over the concatenation of all batches; the
@@ -47,16 +53,21 @@ object RollupMaintain {
     // NULL-keyed batch row would both pass through unmatched and the
     // null group would duplicate forever. The decimal re-cast keeps
     // the stored schema stable (sum widens decimal(25,6) to (35,6)).
-    val merged =
-      if (!Staging.tableExists(spark, storeDir, table)) bp
-      else Staging.readTable(spark, storeDir, table)
-        .unionByName(bp)
-        .groupBy(groupCols.map(col): _*)
+    fold(spark, storeDir, table, bp)(
+      _.groupBy(groupCols.map(col): _*)
         .agg(sum(col("psum")).cast("decimal(25,6)").as("psum"),
-          sum(col("pcnt")).as("pcnt"))
-    // merged reads the store it replaces → shared stage-and-swap
-    Staging.stageAndSwap(spark, merged, storeDir, table, "rollup")
+          sum(col("pcnt")).as("pcnt")))
   }
+
+  /** Commits the batch partials `bp` as the table's first version, or
+    * `remerge(store ∪ bp)` as its next one. Returns the committed row
+    * count. */
+  private def fold(spark: SparkSession, storeDir: String, table: String,
+                   bp: DataFrame)(remerge: DataFrame => DataFrame): Long =
+    if (!VersionedStore.tableExists(spark, storeDir, table))
+      VersionedStore.commit(spark, bp, storeDir, table)
+    else VersionedStore.commitTransform(spark, storeDir, table)(
+      store => remerge(store.unionByName(bp)))
 
   /** COUNT-DISTINCT maintained incrementally via mergeable HLL
     * sketches (Apache DataSketches through Spark's `hll_sketch_agg` /
@@ -76,19 +87,15 @@ object RollupMaintain {
                            keyCol: String): Long = {
     val bp = batch.groupBy(groupCols.map(col): _*)
       .agg(hll_sketch_agg(col(keyCol)).as("sketch"))
-    val merged =
-      if (!Staging.tableExists(spark, storeDir, table)) bp
-      else Staging.readTable(spark, storeDir, table)
-        .unionByName(bp)
-        .groupBy(groupCols.map(col): _*)
-        .agg(hll_union_agg(col("sketch")).as("sketch"))
-    Staging.stageAndSwap(spark, merged, storeDir, table, "hll")
+    fold(spark, storeDir, table, bp)(
+      _.groupBy(groupCols.map(col): _*)
+        .agg(hll_union_agg(col("sketch")).as("sketch")))
   }
 
   /** Estimated distinct count per group from the persisted sketches. */
   def readDistinct(spark: SparkSession, storeDir: String,
                    table: String): DataFrame =
-    Staging.readTable(spark, storeDir, table)
+    VersionedStore.readTable(spark, storeDir, table)
       .withColumn("approx_distinct",
         hll_sketch_estimate(col("sketch")))
       .drop("sketch")
@@ -98,7 +105,7 @@ object RollupMaintain {
     * bit-determinism discipline), row count, and mean. */
   def readFinal(spark: SparkSession, storeDir: String,
                 table: String): DataFrame =
-    Staging.readTable(spark, storeDir, table)
+    VersionedStore.readTable(spark, storeDir, table)
       .select(col("*"),
         col("psum").cast("double").as("total"),
         // divide as double: decimal division would round the mean to
@@ -114,7 +121,7 @@ object RollupMaintain {
     * estimates are bit-identical to a one-shot sketch over all data
     * (asserted in RollupSpec) — so per-key frequency questions over
     * an unbounded key space cost KBs of state at any cardinality.
-    * Same stage-and-swap discipline as the other stores. The sketch
+    * Same versioned commit as the other stores. The sketch
     * shape is fixed (eps = 0.001, confidence = 0.99, seed = 42): a
     * union adds counters only between sketches of one shape, so every
     * batch folded into a store must use the same three values. */
@@ -124,17 +131,13 @@ object RollupMaintain {
       count_min_sketch(col(keyCol), lit(0.001), lit(0.99),
         lit(42)).as("sketch"),
       count(lit(1)).as("n_total"))
-    val merged =
-      if (!Staging.tableExists(spark, storeDir, table)) bp
-      else Staging.readTable(spark, storeDir, table)
-        .unionByName(bp)
-        .agg(graft.functions.CmsUnion.column(col("sketch")).as("sketch"),
-          sum(col("n_total")).as("n_total"))
-    Staging.stageAndSwap(spark, merged, storeDir, table, "cms")
+    fold(spark, storeDir, table, bp)(
+      _.agg(graft.functions.CmsUnion.column(col("sketch")).as("sketch"),
+        sum(col("n_total")).as("n_total")))
   }
 
   /** The persisted sketch row (sketch binary + total count). */
   def readCms(spark: SparkSession, storeDir: String,
               table: String): DataFrame =
-    Staging.readTable(spark, storeDir, table)
+    VersionedStore.readTable(spark, storeDir, table)
 }

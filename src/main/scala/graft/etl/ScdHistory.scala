@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Staging
+import graft.io.VersionedStore
 
 /** Slowly-changing-dimension (type 2) history: versioned dimension
   * rows with `valid_from` / `valid_to` / `is_current`, the standard
@@ -21,6 +21,14 @@ import graft.io.Staging
   *   - [[applyBatch]] touches only keys present in the batch: the
   *     anti-join + union shape of `loadIfNew`, so a daily batch
   *     costs O(batch + matched keys), never a dimension rescan.
+  *
+  * The history store is a [[graft.io.VersionedStore]] table: each
+  * batch commits the folded history as the next immutable version,
+  * so a batch that dies mid-write leaves nothing a reader sees and
+  * nothing that makes the next batch refuse. Read it with
+  * [[VersionedStore.readTable]]; a history written in the plain
+  * parquet layout (files directly under `<storeDir>/<table>`) has no
+  * committed version and is not read.
   */
 object ScdHistory {
 
@@ -55,49 +63,46 @@ object ScdHistory {
     * closed (`valid_to` = batch ts) and a new open version appended;
     * unchanged keys and untouched keys are not rewritten logically
     * (the store is small — dimension-sized — so the physical rewrite
-    * is whole-table through a temp dir, same staging discipline as
-    * [[RollupMaintain]]). Returns version-row count. */
+    * is a whole new version, the same commit as [[RollupMaintain]]'s
+    * stores). A rejected batch commits nothing. Returns version-row
+    * count. */
   def applyBatch(spark: SparkSession, storeDir: String, table: String,
                  batch: DataFrame, keyCol: String,
-                 attrCols: Seq[String], tsCol: String): Long = {
-    val newHist =
-      if (!Staging.tableExists(spark, storeDir, table))
-        buildHistory(batch, keyCol, attrCols, tsCol)
-      else {
-        val store = Staging.readTable(spark, storeDir, table)
-        val current = store.filter(col("is_current"))
-        val history = store.filter(!col("is_current"))
-        // LATE-EVENT GUARD: a batch event at or before its key's
-        // current valid_from would be replayed BEFORE the seed row,
-        // emitting a version that overlaps the already-closed history
-        // (an asOf fact in the overlap would then match two versions
-        // and silently duplicate). SCD2 maintenance is forward-only;
-        // late data must be quarantined or the history rebuilt from
-        // the full event log — so reject loudly, never corrupt.
-        val late = batch.join(current.select(col(keyCol),
-            col("valid_from").as("__cur_from")), Seq(keyCol))
-          .filter(col(tsCol) <= col("__cur_from")).count()
-        require(late == 0L,
-          s"$late batch event(s) at or before their key's current " +
-            s"valid_from — out-of-order SCD input would overlap closed " +
-            "history; quarantine the late events or rebuild from the " +
-            "full log")
-        // one version event per (key, ts) from the batch, replayed
-        // over the key's current attributes via buildHistory: the
-        // current open row becomes the seed event so unchanged
-        // attributes extend it and changed ones close it
-        val seed = current.select((col(keyCol) +:
-          attrCols.map(col) :+ col("valid_from").as(tsCol)): _*)
-        val replay = buildHistory(
-          seed.unionByName(
-            batch.select((col(keyCol) +: attrCols.map(col) :+
-              col(tsCol)): _*)),
-          keyCol, attrCols, tsCol)
-        history.unionByName(replay)
-      }
-    // newHist reads the store it replaces → shared stage-and-swap
-    Staging.stageAndSwap(spark, newHist, storeDir, table, "scd")
-  }
+                 attrCols: Seq[String], tsCol: String): Long =
+    if (!VersionedStore.tableExists(spark, storeDir, table))
+      VersionedStore.commit(spark,
+        buildHistory(batch, keyCol, attrCols, tsCol), storeDir, table)
+    else VersionedStore.commitTransform(spark, storeDir, table) { store =>
+      val current = store.filter(col("is_current"))
+      val history = store.filter(!col("is_current"))
+      // LATE-EVENT GUARD: a batch event at or before its key's
+      // current valid_from would be replayed BEFORE the seed row,
+      // emitting a version that overlaps the already-closed history
+      // (an asOf fact in the overlap would then match two versions
+      // and silently duplicate). SCD2 maintenance is forward-only;
+      // late data must be quarantined or the history rebuilt from
+      // the full event log — so reject loudly, never corrupt.
+      val late = batch.join(current.select(col(keyCol),
+          col("valid_from").as("__cur_from")), Seq(keyCol))
+        .filter(col(tsCol) <= col("__cur_from")).count()
+      require(late == 0L,
+        s"$late batch event(s) at or before their key's current " +
+          s"valid_from — out-of-order SCD input would overlap closed " +
+          "history; quarantine the late events or rebuild from the " +
+          "full log")
+      // one version event per (key, ts) from the batch, replayed
+      // over the key's current attributes via buildHistory: the
+      // current open row becomes the seed event so unchanged
+      // attributes extend it and changed ones close it
+      val seed = current.select((col(keyCol) +:
+        attrCols.map(col) :+ col("valid_from").as(tsCol)): _*)
+      val replay = buildHistory(
+        seed.unionByName(
+          batch.select((col(keyCol) +: attrCols.map(col) :+
+            col(tsCol)): _*)),
+        keyCol, attrCols, tsCol)
+      history.unionByName(replay)
+    }
 
   /** Point-in-time join: enrich facts with the dimension version that
     * was valid AT the fact's timestamp — the query SCD2 exists for.

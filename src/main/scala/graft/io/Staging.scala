@@ -314,71 +314,6 @@ object Staging {
     spark.read.option("mergeSchema", "true")
       .parquet(s"$storeDir/$table")
 
-  /** Whole-table stage-and-swap for operators whose OUTPUT LINEAGE
-    * READS THE STORE THEY REPLACE (rollup maintenance, SCD history,
-    * compaction — state tables rewritten whole): materialize `df`
-    * fully to a temp directory, then delete-and-rename into place with
-    * the rename result CHECKED. One shared implementation of the
-    * swap-safety discipline (SCALING.md) so the crash-window handling
-    * cannot drift between operators. Keyed upsert and delete are not
-    * swaps: they commit through [[VersionedStore]].
-    *
-    * Leftover temp handling distinguishes the two crash windows by
-    * the parquet `_SUCCESS` marker:
-    *   - no `_SUCCESS`: the previous run died DURING its temp write
-    *     (by far the widest window) — the temp is partial garbage and
-    *     the store is intact; it is deleted and this run proceeds;
-    *   - `_SUCCESS` present: the previous run died in the
-    *     milliseconds between its store delete and rename — the temp
-    *     is the COMPLETE post-update state (the store may or may not
-    *     still exist); this run REFUSES so the operator can rename it
-    *     into place, because proceeding would re-fold a batch this
-    *     run cannot identify. */
-  def stageAndSwap(spark: SparkSession, df: DataFrame, storeDir: String,
-                   table: String, markerPrefix: String): Long = {
-    val path = s"$storeDir/$table"
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$storeDir/__${markerPrefix}_tmp_$table")
-    val fs = Fs.get(spark, tmp)
-    if (fs.exists(tmp)) {
-      val complete = fs.exists(
-        new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
-      if (complete)
-        throw new IllegalStateException(
-          s"$tmp exists with _SUCCESS — a previous $markerPrefix update " +
-            s"crashed between its store delete and rename. It holds the " +
-            s"COMPLETE post-update state: rename it to $path to finish " +
-            "that update, and do NOT re-apply that run's batch")
-      // partial write from a crashed run; the store was never touched
-      fs.delete(tmp, true)
-    }
-    Fs.write(df).mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(path)))
-      throw new java.io.IOException(
-        s"rename $tmp -> $path failed; new state intact in $tmp")
-    ParquetFooters.rowCount(spark, Seq(path))
-  }
-
-  /** Small-file compaction: rewrite a table directory into
-    * ~`targetFileMB`-sized files. Streaming appends and incremental
-    * loads accrete small files; at scale the file count (driver
-    * listing, task scheduling, parquet footer reads) becomes the
-    * bottleneck before data size does. Reads its own input → committed
-    * through [[stageAndSwap]] (temp `__compact_tmp_<table>`). Returns
-    * the file count written. */
-  def compactTable(spark: SparkSession, storeDir: String, table: String,
-                   targetFileMB: Int = 128): Long = {
-    val hp = new org.apache.hadoop.fs.Path(s"$storeDir/$table")
-    val fs = Fs.get(spark, hp)
-    val bytes = fs.getContentSummary(hp).getLength
-    val nFiles = math.max(1L,
-      bytes / (targetFileMB.toLong * 1024 * 1024)).toInt
-    stageAndSwap(spark, readTable(spark, storeDir, table).repartition(nFiles),
-      storeDir, table, "compact")
-    nFiles.toLong
-  }
-
   /** Retention / TTL: drop whole partitions of a partitioned table by
     * predicate on the partition VALUE (e.g. `_ < "2024-01-01"` on a
     * date partition). Deleting a partition is a metadata-speed

@@ -2,15 +2,17 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Keyed store mutations: the one path for upsert and delete by key
-  * on a parquet table, whole-table ([[mergeUpsert]], [[deleteKeys]])
-  * or partition-granular on one partition column
-  * ([[mergeUpsertPartitioned]], [[deleteKeysPartitioned]]). Every
-  * mutation commits a new immutable version; nothing a reader can see
-  * is ever renamed, so the commit is atomic on HDFS/POSIX and on
-  * S3-style object stores alike (where a rename is a non-atomic
-  * copy+delete). Whole-table rewrites of state tables (rollups, SCD
-  * history, compaction) use [[Staging.stageAndSwap]] instead.
+/** Store mutations: the one path for upsert and delete by key on a
+  * parquet table, whole-table ([[mergeUpsert]], [[deleteKeys]]) or
+  * partition-granular on one partition column
+  * ([[mergeUpsertPartitioned]], [[deleteKeysPartitioned]]), and for
+  * the whole-table rewrite of a state table whose next state reads
+  * its current one ([[commitTransform]]: the rollup and sketch stores
+  * of [[graft.etl.RollupMaintain]], the SCD2 history of
+  * [[graft.etl.ScdHistory]]). Every mutation commits a new immutable
+  * version; nothing a reader can see is ever renamed, so the commit
+  * is atomic on HDFS/POSIX and on S3-style object stores alike (where
+  * a rename is a non-atomic copy+delete).
   *
   * Layout: `<storeDir>/<table>/_v_<000000N>/data/part-*.parquet`
   * (immutable once committed) + `_v_<N>/_COMMIT` (a one-line JSON
@@ -41,8 +43,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     dedup: a commit whose batchId matches ANY retained version's
   *     is acknowledged as already applied, no new version (detection
   *     window = `keepVersions`, see [[appliedBatchIds]]) — exactly-once
-  *     semantics the operator never has to hand-repair, where
-  *     stageAndSwap can only refuse and ask.
+  *     semantics the operator never has to hand-repair.
   *
   * Old versions are kept `keepVersions` deep (cheap time-travel /
   * debugging, bounded storage); pruning happens strictly AFTER the
@@ -354,10 +355,9 @@ object VersionedStore {
     }
 
   /** Read-modify-write commit: `f(current)` becomes the next version.
-    * The old version dir is immutable while the new one writes, so —
-    * unlike [[Staging.stageAndSwap]] — a lineage that reads the store
-    * needs no checkpoint staging and there is no delete-before-rename
-    * window at all. */
+    * The old version dir is immutable while the new one writes, so a
+    * lineage that reads the store needs no staging copy and there is
+    * no delete-before-rename window at all. */
   def commitTransform(spark: SparkSession, storeDir: String,
                       table: String, batchId: Option[String] = None,
                       keepVersions: Int = 2)

@@ -851,27 +851,16 @@ object SurfaceQueries {
         val events = Tables.events(s, d)
         (0 until 3).foreach { i =>
           val b = events.filter(pmod(col("event_id"), lit(3)) === i)
-          // the two stores are independent — fold them CONCURRENTLY
-          // (two Spark jobs on the shared scheduler), exactly as a
-          // production maintenance pass runs independent stores; each
-          // store's own read-fold-swap stays strictly sequential.
-          // JOIN BOTH futures even when one fails (Try per future,
-          // not a fail-fast sequence): an unjoined sibling would keep
-          // writing after this query returns — racing the next run's
-          // scratch-dir clear and leaking jobs into later bench
-          // passes. (Under Bench's warmup cancellation, cancelAllJobs
-          // fails the in-flight action and the join completes fast.)
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration._
-          val folds = Seq(
-            Future(graft.etl.RollupMaintain.updateCms(s, dir,
-              "user_cms", b, "user_id")),
-            Future(graft.etl.RollupMaintain.updateRollup(s, dir,
-              "user_counts", b, Seq("user_id"), "value")))
-          val joined = folds.map(f =>
-            scala.util.Try(Await.result(f, 10.minutes)))
-          joined.collectFirst { case scala.util.Failure(e) => throw e }
+          // the two stores are independent — fold them side by side
+          // (graft.IndependentJobs: jobs keep this thread's local
+          // properties, and both folds are joined before a failure is
+          // rethrown, so none still writes once the query returns);
+          // each store's own read-fold-commit stays sequential.
+          graft.IndependentJobs.run(Seq(
+            "user_cms" -> (() => graft.etl.RollupMaintain.updateCms(s,
+              dir, "user_cms", b, "user_id")),
+            "user_counts" -> (() => graft.etl.RollupMaintain.updateRollup(
+              s, dir, "user_counts", b, Seq("user_id"), "value"))))
         }
         val top = graft.etl.RollupMaintain.readFinal(s, dir,
             "user_counts")
@@ -945,8 +934,8 @@ object SurfaceQueries {
 
     // Dynamic partition pruning over a date-partitioned fact — THE
     // plan shape a 100 TB star schema lives or dies by: lineitem is
-    // written partitioned by ship month (the runFactsPartitioned
-    // layout), the month dimension is derived from orders and
+    // written partitioned by ship month (dppStore's dynamic partition
+    // overwrite), the month dimension is derived from orders and
     // filtered to one year, and the join on the partition column must
     // prune the fact scan to the dim's months at RUNTIME (a
     // `dynamicpruning` subquery in the scan's PartitionFilters —

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.etl.Pipeline
@@ -90,11 +92,21 @@ class EtlPipelineSpec extends SparkSpec {
     assert(w.getAs[String]("bulan") == "2024-03")
     assert(w.getAs[Long]("tahun") == 2024L)
 
-    // second run: nothing new → 0 loads, mart identical
+    // second run: nothing new → 0 loads, mart identical, and the
+    // store's files are exactly the ones the first run left (a
+    // zero-row append leaves no empty part file behind)
+    def storeFiles(): Set[String] = {
+      val walk = Files.walk(store)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(store.relativize(_).toString).toSet
+      finally walk.close()
+    }
+    val filesBefore = storeFiles()
     val r2 = Pipeline.run(spark, staging.toString, store.toString,
       mart.toString)
     assert(r2.loaded.values.forall(_ == 0L))
     assert(r2.mart == r1.mart)
+    assert(storeFiles() == filesBefore)
 
     // incremental: add one new review file, only the new key loads
     write(staging.resolve("reviews"), "reviews_2.csv",

@@ -35,6 +35,11 @@ class OracleSpec extends SparkSpec {
       "mart_publish_atomic"))
   }
 
+  test("HLL rollup store matches the DuckDB oracle: " +
+    "incremental_distinct_hll") {
+    assertOracle(Seq("incremental_distinct_hll"))
+  }
+
   test("exact set-pair and span family matches the DuckDB oracle: " +
     "both measures on the dense and prefix cores, the blocked tiers, " +
     "the span ops") {

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.etl.RollupMaintain
-import graft.io.Staging
 
 class RollupSpec extends SparkSpec {
   import spark.implicits._
@@ -82,30 +81,71 @@ class RollupSpec extends SparkSpec {
       s"est=$est exact=$exact")
   }
 
-  test("crash windows: partial temp self-heals, complete temp refuses") {
+  test("crash window: an uncommitted version is invisible and swept") {
     val store = Files.createTempDirectory("graft-rollup-crash").toString
     RollupMaintain.updateRollup(spark, store, "t",
       batch(("a", 1.0)), Seq("grp"), "amount")
-    // crash DURING the temp write: no _SUCCESS → partial garbage; the
-    // next run clears it and proceeds
-    new java.io.File(s"$store/__rollup_tmp_t").mkdirs()
+    // an update that died during its write: a version dir holding
+    // data but no _COMMIT marker
+    val dead = new java.io.File(s"$store/t/_v_0000002")
+    Seq(("a", BigDecimal(100), 1L)).toDF("grp", "psum", "pcnt")
+      .write.parquet(s"$dead/data")
+    assert(!new java.io.File(dead, "_COMMIT").exists())
+    // readers see the last committed version only
+    assert(RollupMaintain.readFinal(spark, store, "t")
+      .head().getAs[Double]("total") == 1.0)
+    // the next update neither refuses nor folds the dead data: it
+    // commits above the dead dir and sweeps it
     RollupMaintain.updateRollup(spark, store, "t",
       batch(("a", 2.0)), Seq("grp"), "amount")
+    assert(!dead.exists())
+    assert(new java.io.File(s"$store/t/_v_0000003/_COMMIT").exists())
     assert(RollupMaintain.readFinal(spark, store, "t")
       .head().getAs[Double]("total") == 3.0)
-    // crash BETWEEN store delete and rename: _SUCCESS present → the
-    // temp is the complete post-update state; the next run refuses
-    val tmp = new java.io.File(s"$store/__rollup_tmp_t")
-    tmp.mkdirs()
-    java.nio.file.Files.createFile(tmp.toPath.resolve("_SUCCESS"))
-    val e = intercept[IllegalStateException] {
-      RollupMaintain.updateRollup(spark, store, "t",
-        batch(("a", 4.0)), Seq("grp"), "amount")
+  }
+
+  test("jobs per updateRollup: 2 for a new table, 4 for an existing one") {
+    val store = Files.createTempDirectory("graft-rollup-jobs").toString
+    def update(b: org.apache.spark.sql.DataFrame) =
+      jobsDuring(RollupMaintain.updateRollup(spark, store, "t", b,
+        Seq("grp"), "amount"))
+    val (n1, first) = update(batch(("a", 1.0), ("b", 2.0)))
+    val (n2, later) = update(batch(("b", 3.0), ("c", 4.0)))
+    assert((n1, n2) == (2L, 3L))
+    assert((first, later) == ((2, 4)))
+  }
+
+  test("incremental_topk_cms: every job of a run carries that run's " +
+    "local properties") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // the query's input: an events table of 300 rows over 23 users
+    val sf = Files.createTempDirectory("graft-cms-events").toString
+    (0L until 300L).map(i => (i, i % 23, i.toDouble))
+      .toDF("event_id", "user_id", "value")
+      .write.parquet(s"$sf/events.parquet")
+    val sc = spark.sparkContext
+    val all = new AtomicInteger(0)
+    val plain = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        all.incrementAndGet()
     }
-    assert(e.getMessage.contains("COMPLETE post-update state"))
-    // store untouched by the refused run
-    assert(RollupMaintain.readFinal(spark, store, "t")
-      .head().getAs[Double]("total") == 3.0)
+    // two runs, each under its own tag (jobsDuring makes a fresh one
+    // per call): a task pool kept across runs would start the second
+    // run's folds under the first run's properties
+    for (run <- 1 to 2) {
+      jobsDuring(()) // drains earlier events off the listener bus
+      all.set(0)
+      sc.addSparkListener(plain)
+      val (rows, tagged) =
+        try jobsDuring(
+          SparkEntry.queries("incremental_topk_cms")(spark, sf).collect())
+        finally sc.removeSparkListener(plain)
+      assert(rows.length == 10)
+      // the plain listener also saw jobsDuring's own untagged sentinel
+      assert(tagged > 0 && all.get == tagged + 1,
+        s"run $run: ${all.get - 1} jobs, $tagged with the run's tag")
+    }
   }
 
   test("maintained CMS sketch is bit-identical to a one-shot sketch " +

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.etl.ScdHistory
+import graft.io.VersionedStore
 
 class ScdSpec extends SparkSpec {
   import spark.implicits._
@@ -46,7 +47,7 @@ class ScdSpec extends SparkSpec {
       "user_id", Seq("tier"), "ts")
     ScdHistory.applyBatch(spark, store, "tiers", later,
       "user_id", Seq("tier"), "ts")
-    val got = graft.io.Staging.readTable(spark, store, "tiers")
+    val got = VersionedStore.readTable(spark, store, "tiers")
       .select("user_id", "tier", "valid_from", "valid_to", "is_current")
       .as[(Long, String, Timestamp, Option[Timestamp], Boolean)]
       .collect().toSet
@@ -81,7 +82,7 @@ class ScdSpec extends SparkSpec {
         "user_id", Seq("tier"), "ts")
     }
     // store untouched by the refused batches
-    assert(graft.io.Staging.readTable(spark, store, "tiers").count() == 3)
+    assert(VersionedStore.readTable(spark, store, "tiers").count() == 3)
   }
 
   test("asOf joins facts to the version valid at the fact timestamp") {

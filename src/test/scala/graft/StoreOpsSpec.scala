@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.io.Staging
 
 /** Store maintenance operations: schema-evolving append, retention,
-  * small-file compaction, and keyed upsert/delete through
+  * dynamic partition overwrite, and keyed upsert/delete through
   * [[graft.io.VersionedStore]] (whole-table and partition-scoped). */
 class StoreOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -37,34 +37,29 @@ class StoreOpsSpec extends SparkSpec {
     assert(rest == Seq(3L))
   }
 
-  test("compactTable collapses many small files into few, same rows") {
-    val store = Files.createTempDirectory("graft-compact").toString
-    // 40 appends of 10 rows → ≥40 files
-    (1 to 40).foreach { i =>
-      Staging.appendParquet(
-        (1 to 10).map(j => (i * 100L + j, s"v$i-$j")).toDF("id", "v"),
-        store, "t")
-    }
-    def files() = new java.io.File(s"$store/t").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files() >= 40)
-    val before = Staging.readTable(spark, store, "t")
-      .as[(Long, String)].collect().toSet
-    Staging.compactTable(spark, store, "t", targetFileMB = 128)
-    assert(files() <= 4, s"still ${files()} files")
-    val after = Staging.readTable(spark, store, "t")
-      .as[(Long, String)].collect().toSet
-    assert(after == before)
-    // a complete temp left by a compaction that died between its store
-    // delete and rename: refuse, and leave the table as it is
-    val tmp = new java.io.File(s"$store/__compact_tmp_t")
-    tmp.mkdirs()
-    assert(new java.io.File(tmp, "_SUCCESS").createNewFile())
-    intercept[IllegalStateException] {
-      Staging.compactTable(spark, store, "t", targetFileMB = 128)
-    }
+  test("a dynamic overwrite replaces only the partitions it emits; " +
+    "other partitions' files are untouched") {
+    val store = Files.createTempDirectory("graft-dynamic").toString
+    Staging.overwritePartitionsDynamic(
+      Seq((1L, "v1", "d1"), (2L, "v1", "d2")).toDF("id", "v", "dt"),
+      store, "t", Seq("dt"))
+    // file name → bytes of one partition's parquet files
+    def files(part: String): Map[String, Seq[Byte]] =
+      new java.io.File(s"$store/t/$part").listFiles().toSeq
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    val d1Before = files("dt=d1")
+    val d2Before = files("dt=d2")
+    assert(d1Before.nonEmpty && d2Before.nonEmpty)
+    Staging.overwritePartitionsDynamic(
+      Seq((2L, "v2", "d2"), (3L, "v2", "d2")).toDF("id", "v", "dt"),
+      store, "t", Seq("dt"))
+    assert(files("dt=d1") == d1Before, "partition d1 was rewritten")
+    assert(files("dt=d2").keySet.intersect(d2Before.keySet).isEmpty,
+      "partition d2 kept a file of the first write")
     assert(Staging.readTable(spark, store, "t")
-      .as[(Long, String)].collect().toSet == before)
+      .select("id", "v", "dt").as[(Long, String, String)].collect().toSet ==
+      Set((1L, "v1", "d1"), (2L, "v2", "d2"), (3L, "v2", "d2")))
   }
 
   // ---------------------------------------------------------------
