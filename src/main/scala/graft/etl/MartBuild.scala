@@ -177,18 +177,6 @@ object MartBuild {
       }
     })
 
-  /** Atomic form of [[run]]: build all 11 tables, publish them as ONE
-    * mart commit ([[graft.io.MartStore.publishAll]]) — a reader
-    * resolving a snapshot never observes a mix of pre- and
-    * post-rebuild tables, the property the reference's 11 sequential
-    * WRITE_TRUNCATEs (`transformation_dw.py:122-334`) cannot give.
-    * Replay-idempotent on `batchId`. */
-  def runVersioned(spark: SparkSession, storeDir: String,
-                   martDir: String, batchId: Option[String] = None)
-      : graft.io.MartStore.Snapshot =
-    graft.io.MartStore.publishAll(spark, builds(spark, storeDir),
-      martDir, batchId)
-
   /** An operational store table, read with its declared schema. */
   private def storeTable(spark: SparkSession, storeDir: String,
                          name: String): DataFrame =

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Tokenizer-honest token accounting (VERDICT r14 missing #3): a
   * bounded-merge distributed BPE trainer and a frozen-merge-list
   * token counter, so packing, mixtures, and manifests can price
-  * "tokens" under an actual subword tokenizer instead of the
-  * [[TextOps.subwordCount]] word-piece regex heuristic.
+  * "tokens" under an actual subword tokenizer instead of a
+  * word-piece regex heuristic.
   *
   * The algorithm is Sennrich et al. 2016 byte-pair encoding at word
   * grain: start from character symbols, repeatedly merge the

@@ -261,46 +261,6 @@ object DecontamOps {
     * index path. */
   val maxSemanticEvalVectors: Int = 65536
 
-  /** Distinct corpus ids the semantic screen flags at `tau` — the
-    * droppable-id form of [[semanticContaminationReport]]. */
-  def semanticContaminatedIds(corpus: DataFrame, evalSet: DataFrame,
-                              idCol: String, vecCol: String,
-                              tau: Double): DataFrame =
-    semanticContaminationReport(corpus, evalSet, idCol, vecCol, tau)
-      .select(col("corpus_id").as(idCol)).distinct()
-
-  /** `corpus` with semantically contaminated documents removed. */
-  def semanticDecontaminate(corpus: DataFrame, evalSet: DataFrame,
-                            idCol: String, vecCol: String,
-                            tau: Double): DataFrame =
-    corpus.join(
-      semanticContaminatedIds(corpus, evalSet, idCol, vecCol, tau),
-      Seq(idCol), "left_anti")
-
-  /** The FULL two-layer decontamination pass the production write-ups
-    * actually run: drop a corpus document if it trips EITHER the exact
-    * word-n-gram gate (any shared `n`-gram with any eval item —
-    * [[contaminatedIds]]) OR the embedding screen (cosine ≥ `tau`
-    * against any eval item — [[semanticContaminatedIds]]). The two
-    * layers are complementary by construction: the n-gram gate catches
-    * verbatim and near-verbatim inclusion regardless of embedding
-    * quality; the semantic screen catches paraphrases sharing no
-    * n-gram, which are invisible to the gate (DecontamSpec constructs
-    * exactly that pair). Both layers broadcast the eval side; the
-    * corpus is scanned twice (once per layer — the layers need
-    * different columns) and shuffled never; the union of flagged ids
-    * is leak-minority-sized. */
-  def decontaminateFull(corpus: DataFrame, evalSet: DataFrame,
-                        idCol: String, textCol: String, vecCol: String,
-                        n: Int, tau: Double,
-                        hashed: Boolean = false): DataFrame = {
-    val bad = contaminatedIds(corpus, evalSet, idCol, textCol, n, hashed)
-      .unionByName(
-        semanticContaminatedIds(corpus, evalSet, idCol, vecCol, tau))
-      .distinct()
-    corpus.join(bad, Seq(idCol), "left_anti")
-  }
-
   /** Fold a frame of leak hit rows (shape of [[leakHits]], possibly
     * with duplicates from at-least-once appends) into the per-eval
     * report [[leakReport]] emits. With hits accumulated over corpus

@@ -1647,7 +1647,8 @@ object DedupOps {
     * dedup: a high share means the doc is largely assembled from text
     * that exists elsewhere in the corpus, even when no single whole-doc
     * near-dup pair exists). Complements the per-doc repetition metrics
-    * ([[TextOps.dupNgramFrac]] is WITHIN-doc; this is ACROSS-doc).
+    * ([[TextOps.repetitionFracs]]' `dup_ngram_frac` is WITHIN-doc;
+    * this is ACROSS-doc).
     *
     * Scale design: the n-gram universe is shuffled as 256-bit digests,
     * never as text (the exact-dedup digest-shuffle discipline applied

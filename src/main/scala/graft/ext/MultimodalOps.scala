@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 /** Multimodal columns for training-data pipelines: media as opaque
   * `BinaryType` payloads with a typed metadata struct, plus the
-  * decode / feature-extract / resize / frame-sample plumbing.
+  * decode / feature-extract / frame-sample plumbing.
   *
   * The decode path is REAL for BMP, WAV, PNG, and JPEG
   * ([[MediaCodecs]]: hand-rolled parsers + the JDK's `javax.imageio`
@@ -194,21 +194,6 @@ object MultimodalOps {
         col("decoded.n_bytes").as("n_bytes"),
         col("decoded.content_digest").as("content_digest"),
         col("decoded.features").as("features"))
-
-  /** Resize stub: recomputes metadata the way a resampling kernel
-    * would, payload untouched (a real kernel maps payload too). */
-  def resize(assets: DataFrame, maxWidth: Int, maxHeight: Int): DataFrame = {
-    val w = col("meta.width")
-    val h = col("meta.height")
-    val scale = least(lit(maxWidth) / w.cast("double"),
-      lit(maxHeight) / h.cast("double"), lit(1.0))
-    assets.withColumn("meta", struct(
-      col("meta.media_type").as("media_type"),
-      floor(w * scale).cast("int").as("width"),
-      floor(h * scale).cast("int").as("height"),
-      col("meta.duration_ms").as("duration_ms"),
-      col("meta.sample_rate").as("sample_rate")))
-  }
 
   /** Frame sampling for video/audio assets: emits one row per sampled
     * frame timestamp at `fps` — pure plan-side row generation

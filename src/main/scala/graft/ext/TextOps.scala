@@ -121,14 +121,6 @@ object TextOps {
     regexp_like(text,
       lit("[\\u00C3\\u00C2]([^\\p{L}]|$)|\\uFFFD"))
 
-  /** BPE-ish subword count: word-piece regex splits on whitespace AND
-    * punctuation boundaries, counting punctuation runs as tokens —
-    * a cheap stand-in for a real tokenizer's token count. */
-  def subwordCount(text: Column): Column =
-    size(filter(
-      split(lower(trim(text)), "(?<=[^\\p{L}\\p{N}])|(?=[^\\p{L}\\p{N}])"),
-      t => length(trim(t)) > 0))
-
   /** Mean token length (double; exact int/int division). */
   def avgTokenLength(text: Column): Column = {
     val t = tokens(text)
@@ -215,7 +207,7 @@ object TextOps {
     * expression at every use site, and when one of those sites is
     * inside another HOF's lambda, the text is re-lowered/re-split
     * PER ELEMENT — higher-order functions are interpreted (no
-    * codegen, no subexpression elimination), so `topNgramFrac` was
+    * codegen, no subexpression elimination), so the top-n-gram fraction was
     * O(grams × distinct × split) per row: invisible on the 28-token
     * gate corpus, a 40-minute stall on 400-token zipf docs. The
     * count()-based bench never caught it because a terminal
@@ -375,14 +367,11 @@ object TextOps {
     regexp_count(text, lit(re))
   }
 
+  /** Fraction of tokens that are repeats (1 - distinct/total) —
+    * 0 for all-unique or empty text. */
   private def dupTokenFracOf(t: Column): Column =
     when(size(t) === 0, lit(0.0)).otherwise(
       lit(1.0) - size(array_distinct(t)).cast("double") / size(t))
-
-  /** Fraction of tokens that are repeats (1 - distinct/total) —
-    * 0 for all-unique or empty text. Split bound once ([[bind1]]). */
-  def dupTokenFrac(text: Column): Column =
-    bind1(tokens(text))(dupTokenFracOf)
 
   /** Share of the single most frequent word n-gram among all n-grams
     * (the Gopher-style "top n-gram fraction" repetition signal).
@@ -394,9 +383,6 @@ object TextOps {
     * O(len³)-ish per row, the r14 zipfml stall. Same value by
     * construction (max run of equal values in sorted order = max
     * multiplicity). */
-  def topNgramFrac(text: Column, n: Int): Column =
-    bind1(tokens(text))(t => topNgramFracOf(t, n))
-
   private def topNgramFracOf(t: Column, n: Int): Column =
     bind1(gramsOf(t, n)) { g =>
       when(size(g) === 0, lit(0.0)).otherwise(
@@ -417,11 +403,7 @@ object TextOps {
     }
 
   /** Fraction of word n-grams that are duplicates (1 - distinct/total)
-    * — the "duplicated n-gram" repetition signal. Split and gram
-    * array bound once ([[bind1]]). */
-  def dupNgramFrac(text: Column, n: Int): Column =
-    bind1(tokens(text))(t => dupNgramFracOf(t, n))
-
+    * — the "duplicated n-gram" repetition signal. */
   private def dupNgramFracOf(t: Column, n: Int): Column =
     bind1(gramsOf(t, n)) { g =>
       when(size(g) === 0, lit(0.0)).otherwise(
@@ -431,12 +413,10 @@ object TextOps {
   /** All three Gopher repetition fractions from ONE token split:
     * `struct(dup_token_frac, top_ngram_frac, dup_ngram_frac)` —
     * the composite form the repetition_metrics battery consumes.
-    * Calling the three single-fraction functions side by side costs
-    * three splits per row (each binds its own); a consumer that
-    * needs several signals should take this struct and reference
-    * its FIELDS (keep the struct in its own projection — Spark does
-    * not duplicate non-cheap multi-referenced aliases across
-    * projects, so the battery is computed once per row). */
+    * A consumer references the struct's FIELDS (keep the struct in
+    * its own projection — Spark does not duplicate non-cheap
+    * multi-referenced aliases across projects, so the battery is
+    * computed once per row). */
   def repetitionFracs(text: Column, topN: Int = 2,
                       dupN: Int = 3): Column =
     bind1(tokens(text)) { t =>
@@ -450,16 +430,6 @@ object TextOps {
     * lowercased text — identical in any engine with md5. */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
-
-  /** Rolling polynomial hash over tokens (base-31 Horner over
-    * xxhash64 token hashes, mod 1e9+7 so ANSI arithmetic never
-    * overflows) — an order-sensitive fingerprint, cheap to maintain
-    * incrementally at ingest. */
-  def rollingHash(text: Column): Column = {
-    val m = lit(1000000007L)
-    aggregate(tokens(text), lit(0L),
-      (acc, x) => pmod(acc * lit(31L) + pmod(xxhash64(x), m), m))
-  }
 
   /** Per-document mean bigram log-probability under a bigram language
     * model trained on the corpus ITSELF (the self-supervised fluency /
@@ -816,13 +786,16 @@ object TextOps {
       dsirModelFromStore(df.sparkSession, storeDir))
 
   /** CCNet-style per-language fluency buckets: rank each language's
-    * documents by their self-trained bigram-LM score
-    * ([[bigramLmScores]] — higher = more fluent under the corpus's
-    * own model) and cut into `nBuckets` equal-frequency buckets
-    * (bucket 1 = head/most fluent … n = tail), the stratification
-    * CCNet uses to keep perplexity-balanced corpus slices. Returns
-    * the per-(lang, bucket) accounting frame: document count and
-    * mean LM log-prob.
+    * documents by their self-trained bigram-LM score (`lmScores`,
+    * columns `idCol` and `lm_logprob`, as [[bigramLmScores]] builds
+    * it — higher = more fluent under the corpus's own model) and cut
+    * into `nBuckets` equal-frequency buckets (bucket 1 = head/most
+    * fluent … n = tail), the stratification CCNet uses to keep
+    * perplexity-balanced corpus slices. Returns the per-(lang,
+    * bucket) accounting frame: document count and mean LM log-prob.
+    * The score frame is taken pre-built — the build/serve split: the
+    * bigram-LM model scan is a snapshot artifact consumers share (the
+    * signature-store pattern), and bucketing is a cheap read over it.
     *
     * The bucket is the explicit rank formula
     * `ceil(nBuckets · rank / count)` over (rounded score desc,
@@ -838,16 +811,6 @@ object TextOps {
     * rank (hence the output) is EXACT and identical to the
     * single-window form; QueryPlanSpec asserts no single-key rank
     * window survives in the plan. */
-  def ccnetBuckets(df: org.apache.spark.sql.DataFrame, idCol: String,
-                   textCol: String, langCol: String,
-                   nBuckets: Int): org.apache.spark.sql.DataFrame =
-    ccnetBucketsFromScores(bigramLmScores(df, idCol, textCol), df,
-      idCol, langCol, nBuckets)
-
-  /** [[ccnetBuckets]] over a PRE-BUILT score frame (columns `idCol`,
-    * `lm_logprob`) — the build/serve split: the bigram-LM model scan
-    * is a snapshot artifact consumers share (the signature-store
-    * pattern), and bucketing is a cheap read over it. */
   def ccnetBucketsFromScores(lmScores: org.apache.spark.sql.DataFrame,
                              df: org.apache.spark.sql.DataFrame,
                              idCol: String, langCol: String,

@@ -233,7 +233,7 @@ object VectorIndexOps {
     * scaling). The index stores no raw vectors, so there is no exact
     * re-rank leg — callers wanting one keep a refine store of
     * originals and re-rank the shortlist (the faiss refine layer;
-    * [[VectorOps.sq8TopK]] shows that composition). With
+    * [[VectorOps.sq8TopKWithRanges]] shows that composition). With
     * `nProbe == nCentroids` the probe is exhaustive and the ranking
     * is a pure function of (codes, ranges) — fully re-derivable by
     * the DuckDB oracle (`ann_index_sq8`). */

@@ -65,22 +65,6 @@ object VectorOps {
     (xxhash64(lit("graft-lsh"), i, j).cast("double") /
       lit(Long.MaxValue.toDouble))
 
-  /** Sign-random-projection signature: `bits` hyperplane signs packed
-    * into a long (statically unrolled — shift amounts are literals).
-    * Vectors close in cosine agree on most bits. */
-  def srpSignature(vec: Column, bits: Int): Column = {
-    require(bits <= 63, "signature packs into a long")
-    val dims = size(vec)
-    val terms = (0 until bits).map { i =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), dims - 1),
-          (x, j) => x.cast("double") * planeComponent(lit(i), j)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    terms.reduce(_ + _)
-  }
-
   /** Per-table SRP bucket keys: `tables` independent signatures of
     * `bits` hyperplanes each (table t uses plane indices
     * t·bits..t·bits+bits-1), emitted as (table, bucket) structs.
@@ -334,9 +318,8 @@ object VectorOps {
     * blocks are small. Same cap policy as
     * [[graft.ext.DedupOps.ngramJaccardPairs]]: blocks larger than
     * `maxBlockSize` are dropped (B²/2 pairs within a block — an
-    * uncapped hot block is a cartesian bomb); oversized blocks belong
-    * to the SRP-pruned [[cosineNearDupPairs]] path. Fully
-    * deterministic, so oracle-checkable against an exact SQL twin. */
+    * uncapped hot block is a cartesian bomb). Fully deterministic,
+    * so oracle-checkable against an exact SQL twin. */
   def cosineNearDupPairsBlocked(corpus: DataFrame, idCol: String,
                                 vecCol: String, blockCols: Seq[String],
                                 threshold: Double,
@@ -364,35 +347,6 @@ object VectorOps {
       .filter(col("cosine_sim") >= threshold)
       .select((blockCols.map(col) ++
         Seq(col("id_a"), col("id_b"), col("cosine_sim"))): _*)
-  }
-
-  /** Embedding-cosine near-duplicate pairs: all (a < b) pairs whose
-    * cosine ≥ threshold, candidate-pruned by multi-table SRP bucket
-    * equality. */
-  def cosineNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
-                         threshold: Double, bits: Int = 12,
-                         tables: Int = 4): DataFrame = {
-    val sig = corpus.select(col(idCol), col(vecCol),
-      explode(srpBuckets(col(vecCol), bits, tables)).as("__bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = sig.select(col(idCol).as("id_a"), col(vecCol).as("__va"),
-      col("__bucket"))
-    val b = sig.select(col(idCol).as("id_b"), col(vecCol).as("__vb"),
-      col("__bucket"))
-    // rescore-then-dedup: the cosine is a narrow map and a pure
-    // function of the pair, so filtering before dropDuplicates means
-    // the dedup shuffle carries only surviving near-dup pairs, not
-    // every bucket-mate candidate
-    val out = a.join(b, Seq("__bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine_sim", cosine(col("__va"), col("__vb")))
-      .filter(col("cosine_sim") >= threshold)
-      .dropDuplicates("id_a", "id_b")
-      .select("id_a", "id_b", "cosine_sim")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize, then release the corpus-scale sig cache
-    sig.unpersist()
-    out
   }
 
   // ------------------------------------------------------------------
@@ -593,30 +547,25 @@ object VectorOps {
     * sq8_sim, cosine_sim) — the approximate score is kept so recall
     * diagnostics are free.
     *
+    * The codebook `ranges` is PRE-BUILT ([[sq8Ranges]], one
+    * map-combinable fold to a 2·d-double broadcast): in production it
+    * persists next to the dataset snapshot and every consumer reads
+    * the same one (quantization geometry must not drift between the
+    * index build and the queries; the [[graft.ext.VectorIndexOps]]
+    * frozen-ranges contract).
+    *
     * Scale design: the quantized corpus is 4× smaller than float32
     * (8× vs double) — at 100 TB of embeddings the code table is what
     * fits the scan budget; the exact re-rank touches only
     * `shortlist` rows per query. Here the approx leg scores
-    * reconstructed doubles so the DuckDB oracle can mirror the exact
+    * reconstructed doubles so the DuckDB oracle can mirror the
     * arithmetic; a production kernel dots the int8 codes directly
-    * (same ranking, integer SIMD). Ranges come from one
-    * map-combinable fold ([[sq8Ranges]], a 2·d-double broadcast);
-    * both legs are deterministic — ranks tie-break on neighbor id
-    * and every emitted similarity is rounded to 6 decimals.
-    * Quantization is exact cross-engine: ranges are float-exact
-    * doubles and `round` at non-negative arguments is half-up in
-    * both engines. */
-  def sq8TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, shortlist: Int): DataFrame =
-    sq8TopKWithRanges(corpus, queries, idCol, vecCol, k, shortlist,
-      sq8Ranges(corpus, vecCol))
-
-  /** [[sq8TopK]] against a PRE-BUILT codebook (`ranges` as produced
-    * by [[sq8Ranges]]) — in production the 2·d-double codebook
-    * persists next to the dataset snapshot and every consumer reads
-    * the same one (quantization geometry must not drift between the
-    * index build and the queries; the [[graft.ext.VectorIndexOps]]
-    * frozen-ranges contract). */
+    * (same ranking, integer SIMD). Both legs are deterministic —
+    * ranks tie-break on neighbor id and every emitted similarity is
+    * rounded to 6 decimals. Whether the quantized score is
+    * bit-identical across engines is unconfirmed: at sf0.001 one
+    * `ann_sq8_topk` `sq8_sim` reads 0.300746 in Spark and 0.300745 in
+    * DuckDB (ROADMAP item 8). */
   def sq8TopKWithRanges(corpus: DataFrame, queries: DataFrame,
                         idCol: String, vecCol: String, k: Int,
                         shortlist: Int, ranges: DataFrame): DataFrame = {

@@ -154,8 +154,7 @@ object MartStore {
   private def vname(v: Long, nonce: String): String =
     f"$VerPrefix$v%07d_$nonce"
 
-  /** Numeric version of a version-dir name; accepts both the nonced
-    * form and the legacy bare `_v_<N>` form. */
+  /** Numeric version of a `_v_<N>_<nonce>` version-dir name. */
   private def vnum(dirName: String): Option[Long] = dirName match {
     case VerName(d) => d.toLongOption
     case _          => None
@@ -201,14 +200,9 @@ object MartStore {
     } yield {
       val batch = """"batch_id":"([^"]*)"""".r.findFirstMatchIn(txt)
         .map(_.group(1)).filter(_.nonEmpty)
-      // current format: "table":"<dir-name>"; legacy (pre-nonce)
-      // markers carried bare numeric versions — map them to their
-      // legacy dir names so an existing store reads in place
+      // one "table":"<dir-name>" entry per table
       val tables = """"([^"]+)":"([^"]+)"""".r.findAllMatchIn(body)
-        .map(g => g.group(1) -> g.group(2)).toMap ++
-        """"([^"]+)":(\d+)""".r.findAllMatchIn(body)
-          .map(g => g.group(1) -> f"$VerPrefix${g.group(2).toLong}%07d")
-          .toMap
+        .map(g => g.group(1) -> g.group(2)).toMap
       (m.group(1).toLong, batch, tables)
     }
 

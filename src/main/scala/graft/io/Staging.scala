@@ -209,21 +209,6 @@ object Staging {
       .partitionBy(partitionCols: _*)
       .parquet(s"$storeDir/$table")
 
-  /** Bucketed store write: co-locates future joins/aggregations on
-    * `bucketCols` — a table bucketed and sorted on its join key joins
-    * another table with the same bucketing WITHOUT a shuffle on
-    * either side (asserted in BucketingSpec). At 100 TB this is the
-    * difference between re-shuffling every fact join and reading
-    * pre-shuffled data (SCALING.md, joins). Requires a catalog table
-    * (bucket metadata lives in the catalog, not the files). */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-                    bucketCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
   /** Clustered (sorted) write: range-partition the frame on
     * `clusterCols` and sort within each partition before writing, so
     * every output file covers a NARROW, near-disjoint key range. The
@@ -292,46 +277,6 @@ object Staging {
       .sortWithinPartitions(col("__z"))
       .drop("__z")
     Fs.write(zordered).mode(SaveMode.Overwrite).parquet(s"$storeDir/$table")
-  }
-
-  /** Schema-evolving append: like [[appendParquet]], but a read
-    * through [[readTableEvolved]] merges the schemas of every file,
-    * so a batch that ADDS columns doesn't require rewriting history —
-    * old rows surface the new columns as NULL. The scale form of
-    * "ALTER TABLE ADD COLUMN" on a file store: zero data movement. */
-  def appendParquetEvolving(df: DataFrame, storeDir: String,
-                            table: String): Unit =
-    Fs.write(df).mode(SaveMode.Append)
-      .option("mergeSchema", "true")
-      .parquet(s"$storeDir/$table")
-
-  /** Read with per-file schema merging (pairs with
-    * [[appendParquetEvolving]]). Schema merge reads footers only, not
-    * data; reserve it for evolving tables — fixed-schema reads keep
-    * the cheaper [[readTable]]. */
-  def readTableEvolved(spark: SparkSession, storeDir: String,
-                       table: String): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(s"$storeDir/$table")
-
-  /** Retention / TTL: drop whole partitions of a partitioned table by
-    * predicate on the partition VALUE (e.g. `_ < "2024-01-01"` on a
-    * date partition). Deleting a partition is a metadata-speed
-    * directory removal — no scan, no rewrite — which is why retention
-    * policy belongs in the partition scheme: row-level deletes at
-    * 100 TB are rewrites. Returns the dropped partition values. */
-  def dropPartitions(spark: SparkSession, storeDir: String, table: String,
-                     partitionCol: String,
-                     drop: String => Boolean): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/$table")
-    val fs = Fs.get(spark, root)
-    val prefix = s"$partitionCol="
-    val dropped = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .map(s => s.getPath)
-      .filter(p => drop(p.getName.stripPrefix(prefix)))
-    dropped.foreach(p => fs.delete(p, true))
-    dropped.map(_.getName.stripPrefix(prefix))
   }
 
   /** D1/D2 — ensure a store table exists with its declared schema

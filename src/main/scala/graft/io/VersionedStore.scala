@@ -16,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Layout: `<storeDir>/<table>/_v_<000000N>/data/part-*.parquet`
   * (immutable once committed) + `_v_<N>/_COMMIT` (a one-line JSON
-  * marker) + an advisory `<table>/_MANIFEST` pointer.
+  * marker).
   *
   * THE COMMIT POINT is the completed write of `_COMMIT` — a single
   * small object. On S3 that write is one atomic PUT; on HDFS/POSIX
@@ -36,9 +36,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Crash windows (single writer per table):
   *   - dies during the data write → no `_COMMIT`, readers unaffected;
   *     the dead dir is cleared by the next commit;
-  *   - dies after `_COMMIT`, before manifest/prune → the commit IS
-  *     durable (readers list), the manifest is advisory and refreshed
-  *     by the next commit, stale versions prune then too;
+  *   - dies after `_COMMIT`, before prune → the commit IS durable
+  *     (readers list), stale versions prune at the next commit;
   *   - the batch is REPLAYED after any of the above → `batchId`
   *     dedup: a commit whose batchId matches ANY retained version's
   *     is acknowledged as already applied, no new version (detection
@@ -294,8 +293,8 @@ object VersionedStore {
 
   /** The shared commit machinery: replay-dedup, corpse sweep, `write`
     * into the fresh uncommitted version dir, the single-PUT `_COMMIT`
-    * commit point, then crash-safe housekeeping (advisory pointer +
-    * owner-aware prune). `write(fs, vdir, next)` must leave the
+    * commit point, then crash-safe housekeeping (owner-aware
+    * prune). `write(fs, vdir, next)` must leave the
     * version dir fully populated — data AND, for partition-granular
     * versions, its `_PARTS` manifest — before it returns. */
   private def commitVersion(spark: SparkSession, storeDir: String,
@@ -322,13 +321,10 @@ object VersionedStore {
     val out = fs.create(new org.apache.hadoop.fs.Path(vdir, Marker), false)
     try out.write((marker + "\n").getBytes("UTF-8")) finally out.close()
     // post-commit housekeeping — crash-safe to skip or die inside:
-    // advisory manifest pointer, then prune beyond the keep window.
-    // OWNER-AWARE: a version dir referenced as a partition owner by
-    // ANY retained version's manifest must survive, or pruning would
-    // tear live partitions out of a readable table.
-    val mTmp = new org.apache.hadoop.fs.Path(root, "_MANIFEST")
-    val mo = fs.create(mTmp, true)
-    try mo.write((marker + "\n").getBytes("UTF-8")) finally mo.close()
+    // prune beyond the keep window. OWNER-AWARE: a version dir
+    // referenced as a partition owner by ANY retained version's
+    // manifest must survive, or pruning would tear live partitions
+    // out of a readable table.
     val committed = versions(spark, storeDir, table).filter(_._3)
     val owners: Set[Long] = committed
       .filter { case (v, _, _) => v > next - keepVersions }

@@ -325,10 +325,7 @@ object VectorQueries {
     // Embedding-cosine near-duplicate pairs, blocked-exact form:
     // all pairs within a label block (block-size capped), exact
     // cosine, fully oracle-checked against DuckDB's
-    // list_cosine_similarity. The SRP-pruned scale path
-    // (cosineNearDupPairs) computes the same pairs via bucket
-    // candidates and is recall-asserted against this exact form in
-    // VectorSpec.
+    // list_cosine_similarity.
     "dedup_embedding" -> QueryDef(
       (s, d) => VectorOps.cosineNearDupPairsBlocked(
           Tables.embeddings(s, d), "vec_id", "embedding",

@@ -256,7 +256,7 @@ class CorpusSignalsSpec extends SparkSpec {
       (5L, 0L, 0L, "")))
   }
 
-  // ---------------- ccnetBuckets ----------------
+  // ---------------- ccnetBucketsFromScores ----------------
 
   test("ccnetBuckets: ceil-formula bucket sizes, every doc bucketed " +
     "once, head bucket at least as fluent as the tail") {
@@ -267,7 +267,9 @@ class CorpusSignalsSpec extends SparkSpec {
         (i, s"tok$i tok${i % 3} tok$i tok${(i * 7) % 5}", "A"))
       ++ Seq((8L, "u v u v", "B"), (9L, "w w w", "B"))).toSeq
       .toDF("doc_id", "text", "lang")
-    val out = TextOps.ccnetBuckets(docs, "doc_id", "text", "lang", 3)
+    val out = TextOps.ccnetBucketsFromScores(
+        TextOps.bigramLmScores(docs, "doc_id", "text"), docs, "doc_id",
+        "lang", 3)
       .orderBy("lang", "bucket")
       .select("lang", "bucket", "n_docs", "avg_logprob")
       .as[(String, Int, Long, Double)].collect().toSeq

@@ -166,10 +166,13 @@ class DecontamSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSeq
     assert(sem.map(_._1) == Seq(10L), sem)
     assert(sem.head._3 > 0.99, sem)
-    // ids/removal forms agree; null-embedding doc is not flagged
-    val kept = DecontamOps.semanticDecontaminate(corpusVec, evalVec,
-      "doc_id", "vec", tau = 0.9).select("doc_id")
-      .as[Long].collect().sorted.toSeq
+    // removing the reported ids keeps the rest; the null-embedding
+    // doc is not flagged
+    val kept = corpusVec.join(DecontamOps.semanticContaminationReport(
+        corpusVec, evalVec, "doc_id", "vec", tau = 0.9)
+        .select(col("corpus_id").as("doc_id")), Seq("doc_id"),
+        "left_anti")
+      .select("doc_id").as[Long].collect().sorted.toSeq
     assert(kept == Seq(11L, 12L))
   }
 
@@ -177,10 +180,16 @@ class DecontamSpec extends SparkSpec {
     "the embedding screen") {
     // doc 12 trips the n-gram gate (verbatim 4-grams, null vector);
     // doc 10 trips only the semantic screen; doc 11 survives both
-    val kept = DecontamOps.decontaminateFull(corpusVec, evalVec,
-      "doc_id", "text", "vec", n = 4, tau = 0.9)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept == Seq(11L))
+    val gate = DecontamOps.contaminatedIds(corpusVec, evalVec,
+        "doc_id", "text", n = 4)
+      .as[Long].collect().toSet
+    val screen = DecontamOps.semanticContaminationReport(corpusVec,
+        evalVec, "doc_id", "vec", tau = 0.9)
+      .select("corpus_id").as[Long].collect().toSet
+    assert(gate == Set(12L) && screen == Set(10L))
+    val kept = corpusVec.select("doc_id").as[Long].collect().toSet --
+      (gate ++ screen)
+    assert(kept == Set(11L))
   }
 
   test("semantic screen is one corpus scan — no join operator, no " +

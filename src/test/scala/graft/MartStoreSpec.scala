@@ -2,8 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.io.{MartStore, Staging}
-import graft.schema.Schemas
+import graft.io.MartStore
 
 /** Cross-table atomic publish: a reader must never observe a mix of
   * pre- and post-rebuild tables, whatever point the publisher crashed
@@ -273,32 +272,5 @@ class MartStoreSpec extends SparkSpec {
     assert(names == Seq("_c_0000001", "_c_0000002", "_c_0000003"), names)
     assert(MartStore.snapshot(spark, store).get.version == 3L)
     assert(MartStore.appliedBatchIds(spark, store).contains("p2"))
-  }
-
-  test("MartBuild.runVersioned publishes all 11 mart tables as one " +
-    "commit") {
-    val root = Files.createTempDirectory("graft-mart-run")
-    val store = root.resolve("store").toString
-    Schemas.operational.foreach { case (t, s) =>
-      Staging.ensureTable(spark, store, t, s)
-    }
-    val reviews = Seq(
-      ("r1", "2024-03-01 10:00:00", "p1", "http://a", "good", 5.0))
-      .toDF("id_review", "ts", "place_id", "author_url", "review_text",
-        "rating")
-      .withColumn("timestamp_review", org.apache.spark.sql.functions
-        .to_timestamp($"ts", "yyyy-MM-dd HH:mm:ss"))
-      .drop("ts")
-    Staging.overwriteParquet(reviews, store, "reviews")
-    val mart = root.resolve("mart").toString
-    val snap = graft.etl.MartBuild.runVersioned(spark, store, mart,
-      Some("rebuild-1"))
-    assert(snap.tables.keySet.size == 11)
-    assert(snap.readTable(spark, "fact_maps").count() == 1)
-    assert(snap.readTable(spark, "dim_user").count() == 0)
-    // replayed rebuild: acknowledged, same commit
-    val again = graft.etl.MartBuild.runVersioned(spark, store, mart,
-      Some("rebuild-1"))
-    assert(again.version == snap.version)
   }
 }

@@ -38,20 +38,6 @@ class MultimodalSpec extends SparkSpec {
     assert(fs.size == 8 && fs.forall(f => f >= 0.0 && f < 1.0))
   }
 
-  test("resize caps dimensions preserving aspect ratio") {
-    val assets = MultimodalOps.assetsFromText(docs, "doc_id", "text")
-    val resized = MultimodalOps.resize(assets, 100, 100)
-    resized.select($"meta.width", $"meta.height").as[(Int, Int)]
-      .collect().foreach { case (w, h) =>
-        assert(w <= 100 && h <= 100 && w >= 0 && h >= 0)
-      }
-    // never upscales
-    val orig = assets.select($"asset_id", $"meta.width").as[(Long, Int)]
-      .collect().toMap
-    resized.select($"asset_id", $"meta.width").as[(Long, Int)]
-      .collect().foreach { case (id, w) => assert(w <= orig(id)) }
-  }
-
   test("BMP encode→decode round-trips dimensions and exact pixel means") {
     import graft.ext.MediaCodecs
     val d = MediaCodecs.decodeBmp(MediaCodecs.encodeBmp24(5, 3, 10, 20, 30))

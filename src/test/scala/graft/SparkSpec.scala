@@ -56,6 +56,11 @@ object SparkSpec {
     // explicitly via withStateStoreProvider
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       graft.streaming.StreamingOps.RocksDBStateStoreProvider)
+    // streaming checkpoint and state files go through FileContext;
+    // the session's Hadoop conf resolves its `file:` scheme to the
+    // fork-free InProcessLocalFs
+    s.conf.set("fs.AbstractFileSystem.file.impl",
+      classOf[InProcessLocalFs].getName)
     s
   }
 }

@@ -165,7 +165,8 @@ class StagingSpec extends SparkSpec {
       val dir = s"$store/$t"
       val reads = Seq("inference" -> Staging.readTable(spark, store, t),
         "requested" -> spark.read.schema(s).parquet(dir),
-        "mergeSchema" -> Staging.readTableEvolved(spark, store, t))
+        "mergeSchema" -> spark.read.option("mergeSchema", "true")
+          .parquet(dir))
       reads.foreach { case (how, df) =>
         assert(df.schema == s, s"$t by $how: ${df.schema.treeString}")
       }

@@ -5,37 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.io.Staging
 
-/** Store maintenance operations: schema-evolving append, retention,
-  * dynamic partition overwrite, and keyed upsert/delete through
+/** Store maintenance operations: dynamic partition overwrite, and
+  * keyed upsert/delete through
   * [[graft.io.VersionedStore]] (whole-table and partition-scoped). */
 class StoreOpsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("schema-evolving append surfaces new columns as NULL on old rows") {
-    val store = Files.createTempDirectory("graft-evolve").toString
-    Staging.appendParquetEvolving(
-      Seq((1L, "a")).toDF("id", "v"), store, "t")
-    Staging.appendParquetEvolving(
-      Seq((2L, "b", 0.5)).toDF("id", "v", "score"), store, "t")
-    val out = Staging.readTableEvolved(spark, store, "t")
-    assert(out.columns.toSet == Set("id", "v", "score"))
-    val byId = out.collect().map(r => r.getAs[Long]("id") -> r).toMap
-    assert(byId(1L).isNullAt(byId(1L).fieldIndex("score")))
-    assert(byId(2L).getAs[Double]("score") == 0.5)
-  }
-
-  test("dropPartitions removes matching partitions without a scan") {
-    val store = Files.createTempDirectory("graft-retention").toString
-    val df = Seq((1L, "2024-01-01"), (2L, "2024-02-01"), (3L, "2024-03-01"))
-      .toDF("id", "dt")
-    Staging.overwritePartitionsDynamic(df, store, "t", Seq("dt"))
-    val dropped = Staging.dropPartitions(spark, store, "t", "dt",
-      _ < "2024-02-15")
-    assert(dropped.sorted == Seq("2024-01-01", "2024-02-01"))
-    val rest = Staging.readTable(spark, store, "t")
-      .select("id").as[Long].collect().toSeq
-    assert(rest == Seq(3L))
-  }
 
   test("a dynamic overwrite replaces only the partitions it emits; " +
     "other partitions' files are untouched") {
@@ -137,23 +111,30 @@ class StoreOpsSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq == Seq(2L -> "b"))
   }
 
-  test("versioned store: death after the marker, before manifest/prune, " +
-    "is a durable commit") {
+  test("versioned store: death after the marker, before prune, is a " +
+    "durable commit") {
     val store = Files.createTempDirectory("graft-vs-marker").toString
+    def vdir(v: Int) = new java.io.File(f"$store/t/_v_$v%07d")
     VersionedStore.commit(spark, Seq((1L, "a")).toDF("id", "v"),
       store, "t", Some("b1"))
     VersionedStore.commit(spark, Seq((2L, "b")).toDF("id", "v"),
       store, "t", Some("b2"))
-    // simulate the post-marker crash: advisory manifest is gone
-    assert(new java.io.File(s"$store/t/_MANIFEST").delete())
+    // simulate the post-marker crash: v3's marker lands but its prune
+    // never runs (a keep window wide enough to prune nothing), so v1
+    // outlives the default keep window
+    VersionedStore.commit(spark, Seq((3L, "c")).toDF("id", "v"),
+      store, "t", Some("b3"), keepVersions = 10)
+    assert(vdir(1).exists())
     // resolution lists markers, so the commit is still visible
     assert(VersionedStore.readTable(spark, store, "t")
-      .as[(Long, String)].collect().toSeq == Seq(2L -> "b"))
-    assert(VersionedStore.lastBatchId(spark, store, "t") == Some("b2"))
-    // the next commit restores the advisory pointer
-    VersionedStore.commit(spark, Seq((3L, "c")).toDF("id", "v"),
-      store, "t", Some("b3"))
-    assert(new java.io.File(s"$store/t/_MANIFEST").exists())
+      .as[(Long, String)].collect().toSeq == Seq(3L -> "c"))
+    assert(VersionedStore.lastBatchId(spark, store, "t") == Some("b3"))
+    // the next commit prunes what the dead one left behind
+    VersionedStore.commit(spark, Seq((4L, "d")).toDF("id", "v"),
+      store, "t", Some("b4"))
+    assert(!vdir(1).exists() && !vdir(2).exists() && vdir(3).exists())
+    assert(VersionedStore.readTable(spark, store, "t")
+      .as[(Long, String)].collect().toSeq == Seq(4L -> "d"))
   }
 
   test("mergeUpsert replaces same-key rows and appends new keys") {

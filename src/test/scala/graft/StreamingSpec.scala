@@ -18,21 +18,6 @@ class StreamingSpec extends SparkSpec {
   private def t(m: Int): Timestamp =
     Timestamp.valueOf(f"2024-03-01 10:$m%02d:00")
 
-  test("dedupStream keeps first occurrence per key within watermark") {
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    ms.addData(
-      Ev(t(0), 1, "click", 1.0), Ev(t(0), 1, "click", 1.0),
-      Ev(t(1), 2, "view", 2.0))
-    val q = StreamingOps.dedupStream(ms.toDF(), "ts", "10 minutes",
-        Seq("user_id", "event_type"))
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.table("dedup_out").count() == 2)
-  }
-
   test("stagingCsvStream reads newly landed CSVs exactly once through " +
     "the incremental load") {
     val root = Files.createTempDirectory("graft-stream-staging")
@@ -212,45 +197,6 @@ class StreamingSpec extends SparkSpec {
       Seq(1L, 3L, 4L))
   }
 
-  test("decontaminateStream on a file source drops exactly what the " +
-    "batch operator drops") {
-    val root = Files.createTempDirectory("graft-decontam-files")
-    val landing = root.resolve("landing")
-    Files.createDirectories(landing)
-    val out = root.resolve("out").toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val evalSet = Seq((100L, "alpha beta gamma delta epsilon zeta " +
-      "eta theta iota kappa lambda mu nu xi")).toDF("doc_id", "text")
-    val clean = "totally original prose with no benchmark overlap " +
-      "whatsoever in any of its many tokens at all"
-    val contaminated = "prefix words then alpha beta gamma delta " +
-      "epsilon zeta eta theta iota kappa lambda mu nu xi and suffix"
-    def land(name: String, rows: Seq[(Long, String)]): Unit =
-      Files.writeString(landing.resolve(name), rows.map { case (id, t) =>
-        s"""{"doc_id":$id,"text":"$t"}""" }.mkString("", "\n", "\n"))
-    land("f1.json", Seq((1L, clean), (2L, contaminated)))
-    land("f2.json", Seq((3L, contaminated), (4L, clean)))
-    val q = StreamingOps.decontaminateStream(
-        spark.readStream.schema(schema).json(s"$landing/*.json"),
-        evalSet, "doc_id", "text", n = 8, out)
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .start()
-    q.awaitTermination()
-    val streamed = graft.io.Staging.readTable(spark, out, "clean")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    val batch = graft.ext.DecontamOps.decontaminate(
-        Seq((1L, clean), (2L, contaminated), (3L, contaminated),
-          (4L, clean)).toDF("doc_id", "text"),
-        evalSet, "doc_id", "text", 8, hashed = true)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(streamed == batch)
-    assert(streamed == Seq(1L, 4L))
-  }
-
   test("funnelStream on a file source equals batch funnelStages with " +
     "an on-disk checkpoint across progressive file lands") {
     import graft.streaming.UserEvent
@@ -356,39 +302,6 @@ class StreamingSpec extends SparkSpec {
     rows.addData((4L, "c"))
     drain()
     assert(graft.io.MartStore.snapshot(spark, store).get.version == 3L)
-  }
-
-  test("decontaminateStream drops the same docs the batch operator " +
-    "drops, across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-decontam-stream")
-    val evalSet = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog"),
-      (101L, "to be or not to be that is the question"))
-      .toDF("doc_id", "text")
-    val rows = Seq(
-      (1L, "a very quick brown fox jumps high today"),       // 4-gram hit
-      (2L, "the dog jumps over a brown log quietly"),        // clean
-      (3L, "prefix to be or not to be that is the question suffix"),
-      (4L, "completely unrelated words about spark engines"),
-      (5L, "quick brown fox"))                               // too short
-    val docs = MemoryStream[(Long, String)]
-    def drain(): Unit = {
-      val q = StreamingOps.decontaminateStream(
-        docs.toDF().toDF("doc_id", "text"), evalSet,
-        "doc_id", "text", 4, root.toString)
-        .option("checkpointLocation",
-          root.resolve("ckpt").toString).start()
-      q.awaitTermination()
-    }
-    docs.addData(rows.take(2): _*); drain()
-    docs.addData(rows.drop(2): _*); drain()
-    val kept = graft.io.Staging.readTable(spark, root.toString, "clean")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    val batchKept = graft.ext.DecontamOps.decontaminate(
-        rows.toDF("doc_id", "text"), evalSet, "doc_id", "text", 4)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept == batchKept && kept == Seq(2L, 4L, 5L))
   }
 
   test("leakReportStream's folded hits equal the one-shot leak " +
@@ -673,74 +586,6 @@ class StreamingSpec extends SparkSpec {
     assert(served === oneShot)
   }
 
-  test("semanticDecontaminateStream drops the same docs the batch " +
-    "screen drops, across micro-batches; decontaminateFullStream " +
-    "composes both layers per micro-batch") {
-    implicit val ctx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-semdecontam-stream")
-    // eval item 100: the n-gram target; 101: the paraphrase target
-    // reachable only through the embedding screen
-    val evalText = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog",
-        Array(1.0f, 0.0f, 0.0f)),
-      (101L, "to be or not to be that is the question",
-        Array(0.0f, 1.0f, 0.0f)))
-      .toDF("doc_id", "text", "embedding")
-    val rows = Seq(
-      // verbatim n-gram hit, far embedding
-      (1L, "a very quick brown fox jumps over the lazy dog today",
-        Array(0.0f, 0.0f, 1.0f)),
-      // paraphrase: NO shared 4-gram, near embedding of 101
-      (2L, "existence or its absence puzzles the prince",
-        Array(0.0f, 0.99f, 0.14f)),
-      // clean both ways
-      (3L, "completely unrelated words about spark engines",
-        Array(0.6f, 0.0f, 0.8f)),
-      (4L, "another harmless document entirely",
-        Array(0.7f, 0.1f, 0.7f)))
-    val docs = MemoryStream[(Long, String, Array[Float])]
-    def df = docs.toDF().toDF("doc_id", "text", "embedding")
-    val semDir = root.resolve("sem").toString
-    def drainSem(): Unit = {
-      val q = StreamingOps.semanticDecontaminateStream(
-        df, evalText, "doc_id", "embedding", 0.9, semDir)
-        .option("checkpointLocation",
-          root.resolve("ckpt-sem").toString).start()
-      q.awaitTermination()
-    }
-    docs.addData(rows.take(2): _*); drainSem()
-    docs.addData(rows.drop(2): _*); drainSem()
-    val semKept = graft.io.Staging.readTable(spark, semDir, "clean")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    val semBatch = graft.ext.DecontamOps.semanticDecontaminate(
-        rows.toDF("doc_id", "text", "embedding"), evalText,
-        "doc_id", "embedding", 0.9)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    // only the paraphrase (2) is semantically near; 1 passes the
-    // screen (its leak is lexical, not semantic)
-    assert(semKept == semBatch && semKept == Seq(1L, 3L, 4L))
-    // the composed stream drops BOTH leak kinds in one pass
-    val docs2 = MemoryStream[(Long, String, Array[Float])]
-    val fullDir = root.resolve("full").toString
-    def drainFull(): Unit = {
-      val q = StreamingOps.decontaminateFullStream(
-        docs2.toDF().toDF("doc_id", "text", "embedding"), evalText,
-        "doc_id", "text", "embedding", 4, 0.9, fullDir)
-        .option("checkpointLocation",
-          root.resolve("ckpt-full").toString).start()
-      q.awaitTermination()
-    }
-    docs2.addData(rows.take(2): _*); drainFull()
-    docs2.addData(rows.drop(2): _*); drainFull()
-    val fullKept = graft.io.Staging.readTable(spark, fullDir, "clean")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    val fullBatch = graft.ext.DecontamOps.decontaminateFull(
-        rows.toDF("doc_id", "text", "embedding"), evalText,
-        "doc_id", "text", "embedding", 4, 0.9)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(fullKept == fullBatch && fullKept == Seq(3L, 4L))
-  }
-
   test("valueHistogramStream maintains the drift histogram " +
     "epoch-keyed: the store-served PSI equals the inline report, " +
     "replayed epoch changes nothing") {
@@ -811,67 +656,6 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     assert(got == batchGot)
     assert(got.values.toSet == Set("train", "test"))
-  }
-
-  test("intervalJoinStream joins two streams within the time bound only") {
-    implicit val ctx = spark.sqlContext
-    val clicks = MemoryStream[Ev]
-    val purchases = MemoryStream[Ev]
-    clicks.addData(
-      Ev(t(1), 1, "click", 0.0),   // 1 min after purchase → joins
-      Ev(t(20), 1, "click", 0.0),  // 20 min after → outside interval
-      Ev(t(2), 2, "click", 0.0))   // no purchase for user 2
-    purchases.addData(Ev(t(0), 1, "purchase", 9.99))
-    val joined = StreamingOps.intervalJoinStream(
-      clicks.toDF(), purchases.toDF().select($"ts", $"user_id", $"value"),
-      "user_id", "ts", watermark = "30 minutes", interval = "10 minutes")
-    val q = joined.select($"user_id", $"ts", $"r_value")
-      .writeStream.format("memory").queryName("ivj_out")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ivj_out")
-      .as[(Long, Timestamp, Double)].collect().toSet
-    // only the click 1 minute after user 1's purchase joins
-    assert(rows == Set((1L, t(1), 9.99)))
-  }
-
-  test("tumblingAggStream aggregates 5-minute windows") {
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    ms.addData(
-      Ev(t(0), 1, "click", 1.0), Ev(t(2), 2, "click", 3.0),
-      Ev(t(7), 1, "click", 5.0))
-    val q = StreamingOps.tumblingAggStream(ms.toDF(), "ts", "10 minutes",
-        "5 minutes", Seq("event_type"))
-      .writeStream.format("memory").queryName("tumble_out")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("tumble_out")
-      .select("n", "total_value").as[(Long, Double)].collect().toSet
-    assert(rows == Set((2L, 4.0), (1L, 5.0)))
-  }
-
-  test("sessionizeStream merges events within the gap") {
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    // user 1: events at :00 and :05 (one session with 10m gap),
-    // then :20 (new session); user 2: one event
-    ms.addData(
-      Ev(t(0), 1, "click", 1.0), Ev(t(5), 1, "click", 1.0),
-      Ev(t(20), 1, "click", 1.0), Ev(t(3), 2, "view", 1.0))
-    val q = StreamingOps.sessionizeStream(ms.toDF(), "ts", "30 minutes",
-        "10 minutes", Seq("user_id"))
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("sess_out")
-      .select("user_id", "n_events").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-    assert(rows(1L) == Seq(1L, 2L)) // two sessions: 2 events + 1 event
-    assert(rows(2L) == Seq(1L))
   }
 
   test("runningUserProfile maintains custom keyed state across batches") {

@@ -121,17 +121,6 @@ class TextSpec extends SparkSpec {
     assert(a != c)
   }
 
-  test("rollingHash is order-sensitive where set-jaccard is blind") {
-    val ab = one[Long](TextOps.rollingHash(lit("alpha beta")))
-    val ba = one[Long](TextOps.rollingHash(lit("beta alpha")))
-    assert(ab != ba)
-  }
-
-  test("subwordCount counts punctuation-split pieces") {
-    assert(one[Int](TextOps.subwordCount(lit("don't stop, now"))) == 6)
-    // don + ' + t + stop + , + now
-  }
-
   test("chunkDocs: sizes, overlap, and empty-doc row") {
     val docs = Seq(
       (1L, (1 to 50).map(i => s"t$i").mkString(" ")), // 50 tokens
@@ -182,17 +171,20 @@ class TextSpec extends SparkSpec {
   }
 
   test("repetition metrics: unique text scores 0, loops score high") {
+    // the three fields of repetitionFracs at its (topN 2, dupN 3) default
+    def frac(text: String, field: String): Double =
+      one[Double](TextOps.repetitionFracs(lit(text)).getField(field))
     val unique = "alpha beta gamma delta epsilon zeta"
-    assert(one[Double](TextOps.dupTokenFrac(lit(unique))) == 0.0)
-    assert(one[Double](TextOps.dupNgramFrac(lit(unique), 3)) == 0.0)
+    assert(frac(unique, "dup_token_frac") == 0.0)
+    assert(frac(unique, "dup_ngram_frac") == 0.0)
     // "spam ham " * n: every bigram is one of two values
     val loop = Seq.fill(10)("spam ham").mkString(" ")
-    assert(one[Double](TextOps.dupTokenFrac(lit(loop))) == 0.9)
-    assert(one[Double](TextOps.topNgramFrac(lit(loop), 2)) > 0.5)
-    assert(one[Double](TextOps.dupNgramFrac(lit(loop), 3)) > 0.8)
+    assert(frac(loop, "dup_token_frac") == 0.9)
+    assert(frac(loop, "top_ngram_frac") > 0.5)
+    assert(frac(loop, "dup_ngram_frac") > 0.8)
     // empty text: all zero, no division error
-    assert(one[Double](TextOps.dupTokenFrac(lit(""))) == 0.0)
-    assert(one[Double](TextOps.topNgramFrac(lit(""), 2)) == 0.0)
+    assert(frac("", "dup_token_frac") == 0.0)
+    assert(frac("", "top_ngram_frac") == 0.0)
   }
 
   test("repetitionSignals: hand-computed line and char-mass gram " +

@@ -76,24 +76,6 @@ class VectorSpec extends SparkSpec {
       "embedding", Seq("label"), 0.0, maxBlockSize = 1).count() == 0)
   }
 
-  test("SRP-pruned near-dup pairs are a subset of blocked-exact with " +
-    "sane recall on same-label corpus") {
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val exact = VectorOps.cosineNearDupPairsBlocked(emb, "vec_id",
-        "embedding", Seq("label"), threshold = 0.35)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val srp = VectorOps.cosineNearDupPairs(emb, "vec_id", "embedding",
-        threshold = 0.35, bits = 4, tables = 8)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    // SRP finds cross-label pairs too, so compare on the exact set's
-    // domain: every SRP pair above threshold is genuinely above it
-    // (rescored exact), and recall on the blocked set has a floor
-    if (exact.nonEmpty) {
-      val recall = (exact & srp).size.toDouble / exact.size
-      assert(recall > 0.3, s"SRP recall $recall vs blocked exact")
-    }
-  }
-
   test("IVF exhaustive (nProbe = nCentroids) equals brute force exactly") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = emb.filter($"vec_id" < 5)
@@ -187,20 +169,6 @@ class VectorSpec extends SparkSpec {
     }
   }
 
-  test("srpSignature is deterministic and discriminates opposites") {
-    val df = Seq(
-      (0L, Seq(1f, 2f, 3f, 4f)),
-      (1L, Seq(1f, 2f, 3f, 4f)),
-      (2L, Seq(-1f, -2f, -3f, -4f))
-    ).toDF("vec_id", "embedding")
-    val sigs = df.select($"vec_id",
-        VectorOps.srpSignature($"embedding", 16).as("sig"))
-      .as[(Long, Long)].collect().toMap
-    assert(sigs(0L) == sigs(1L))
-    // opposite vector flips every decided bit
-    assert(sigs(0L) != sigs(2L))
-  }
-
   test("sq8TopK with an exhaustive shortlist equals brute force " +
     "exactly (re-rank leg is exact cosine)") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -212,8 +180,9 @@ class VectorSpec extends SparkSpec {
         round($"cosine_sim", 6).as("cs"))
       .as[(Long, Long, Double)].collect().toSet
     // shortlist = whole corpus → quantization cannot prune anything
-    val sq8 = VectorOps.sq8TopK(emb, queries, "vec_id", "embedding",
-        k = 10, shortlist = n)
+    val sq8 = VectorOps.sq8TopKWithRanges(emb, queries, "vec_id",
+        "embedding", k = 10, shortlist = n,
+        VectorOps.sq8Ranges(emb, "embedding"))
       .select($"query_id", $"neighbor_id", $"cosine_sim")
       .as[(Long, Long, Double)].collect().toSet
     assert(sq8 === exact)
@@ -226,8 +195,9 @@ class VectorSpec extends SparkSpec {
     val exact = VectorOps.bruteForceTopK(emb, queries, "vec_id",
         "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val rows = VectorOps.sq8TopK(emb, queries, "vec_id", "embedding",
-        k = 10, shortlist = 15)
+    val rows = VectorOps.sq8TopKWithRanges(emb, queries, "vec_id",
+        "embedding", k = 10, shortlist = 15,
+        VectorOps.sq8Ranges(emb, "embedding"))
       .select($"query_id", $"neighbor_id", $"sq8_sim", $"cosine_sim")
       .as[(Long, Long, Double, Double)].collect()
     val approx = rows.map(r => (r._1, r._2)).toSet
